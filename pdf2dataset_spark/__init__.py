@@ -19,8 +19,8 @@ Design rules (SURVEY.md §4, BASELINE.json north-star):
 - DataFrame/SQL only; Catalyst must see every operator.
 - No driver-side collects in operator paths (only explicit
   ``small=True`` / ``toPandas`` terminal actions).
-- Python crossings minimized: Arrow-batched pandas UDFs, fused into
-  a single ``mapInPandas`` pass for multi-feature extraction.
+- Python crossings minimized: Arrow-batched UDFs, fused into a
+  single ``mapInArrow`` pass for multi-feature extraction.
 
 Reference provenance: /root/reference was EMPTY at build time
 (SURVEY.md §0); behavior derives from public knowledge of the

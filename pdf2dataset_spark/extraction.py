@@ -10,7 +10,7 @@ Upstream surface (public behavior; /root/reference empty, SURVEY §0):
 
 Engine lifecycle (SURVEY §3.2): manifest (binaryFile scan or
 createDataFrame) → resume anti-join vs sink → fused fan-out +
-features + error capture (ONE mapInPandas pass) → sink (append
+features + error capture (ONE mapInArrow pass) → sink (append
 parquet / toPandas). The only driver-side materialization in the
 engine is the explicit ``small=True`` path, mirroring upstream.
 """
@@ -80,11 +80,13 @@ class ExtractionPipeline:
         """
         mf = self.manifest(input_data)
         if resume_from is not None:
-            done = load_done(self.spark, resume_from, keys=["path"])
+            # the manifest's own session: a directory manifest lives on
+            # a child session, and the anti-join keeps to one session
+            done = load_done(mf.sparkSession, resume_from, keys=["path"])
             if done is not None:
                 # Document-grain resume: a doc is redone only if any
                 # of it is missing; page-grain dedup happens on write.
-                mf = resume_filter(mf, done.withColumnRenamed("path", "path"), ["path"])
+                mf = resume_filter(mf, done, ["path"])
         out = extract_features(
             mf,
             self.features,

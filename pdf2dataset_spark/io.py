@@ -158,38 +158,55 @@ def metadata_stats_scan(spark: SparkSession, path: str) -> DataFrame:
     ``spark.sql.parquet.aggregatePushdown`` (whose value is read when
     the CONSUMING aggregate plans, which may be long after this call
     returns — so a set-then-restore window cannot scope it). Both
-    confs therefore live on a dedicated ``spark.newSession()`` — same
-    SparkContext, own SQLConf — that this helper creates once per
-    parent session: the caller's session confs are never touched (no
-    restore window, nothing for a concurrent planner thread to
-    observe), and the returned DataFrame carries the stats session so
-    pushdown holds whenever the caller's aggregate finally plans.
-    Aggregate pushdown silently degrades to a normal scan when the
-    query shape doesn't qualify (data filters, non-min/max/count
-    aggregates, group-by on non-partition columns) — results stay
-    correct either way.
+    confs therefore live on a :func:`child_session`: the caller's
+    session confs are never touched, and the returned DataFrame
+    carries the child so pushdown holds whenever the caller's
+    aggregate finally plans. Aggregate pushdown silently degrades to
+    a normal scan when the query shape doesn't qualify (data filters,
+    non-min/max/count aggregates, group-by on non-partition columns)
+    — results stay correct either way.
     """
-    return _stats_session(spark).read.parquet(path)
+    return child_session(spark, _STATS_CONF).read.parquet(path)
 
 
-#: Parent session -> its dedicated v2/aggregate-pushdown session.
-_STATS_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
+_STATS_CONF = {
+    "spark.sql.parquet.aggregatePushdown": "true",
+    "spark.sql.sources.useV1SourceList": "",
+}
+
+#: Parent session -> {frozen conf items -> its child session}.
+_CHILD_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
 
 
-def _stats_session(spark: SparkSession) -> SparkSession:
-    s = _STATS_SESSIONS.get(spark)
+def child_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A ``spark.newSession()`` (same SparkContext, own SQLConf) that
+    carries ``confs`` on top of the engine's runtime confs, made once
+    per parent session and conf set.
+
+    For confs Spark reads when a plan executes rather than when it is
+    built: a relation or DataFrame made through the child keeps the
+    child's values for as long as it lives, and the parent's confs
+    are never set, so there is no restore window for a concurrent
+    query on the parent to observe. Queries built on such a DataFrame
+    run under the child's conf, which starts from the context's confs
+    plus :data:`pdf2dataset_spark.session.RUNTIME_CONF`, not from
+    confs set later on the parent.
+    """
+    by_conf = _CHILD_SESSIONS.setdefault(spark, {})
+    key = frozenset(confs.items())
+    s = by_conf.get(key)
     if s is None:
         from pdf2dataset_spark.session import apply_runtime_conf
 
         s = spark.newSession()
         # correctness-relevant runtime confs (UTC, Arrow) must match
-        # the parent or footer min/max timestamps would shift
+        # the parent or e.g. footer min/max timestamps would shift
         apply_runtime_conf(s)
-        s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-        s.conf.set("spark.sql.sources.useV1SourceList", "")
-        _STATS_SESSIONS[spark] = s
+        for k, v in confs.items():
+            s.conf.set(k, v)
+        by_conf[key] = s
     return s
 
 

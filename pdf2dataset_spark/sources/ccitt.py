@@ -283,11 +283,12 @@ def _read_run(bits: _Bits, table: dict, color_name: str) -> int:
     read) would cross the stream end."""
     if table is _WHITE_DEC:
         lut = _WHITE_LUT
-    else:
-        # fail loudly if a future caller passes some third table —
-        # decoding it with the black LUT would produce silent garbage
-        assert table is _BLACK_DEC, "unknown CCITT run table"
+    elif table is _BLACK_DEC:
         lut = _BLACK_LUT
+    else:
+        # some third table would decode as silent garbage with the
+        # black LUT; an explicit raise also survives ``python -O``
+        raise ValueError("unknown CCITT run table")
     nbits = bits.nbits
     total = 0
     while True:

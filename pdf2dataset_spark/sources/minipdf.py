@@ -2877,7 +2877,11 @@ def _iter_content_ops(content: bytes, wanted: frozenset | None = None):
     :func:`content_text_layout` (reading order). Clean streams take
     :func:`_lex_content_fast`; anything unusual delegates to the
     exact match-loop lexer below, whose behavior (down to its
-    exceptions on malformed input) is the contract."""
+    exceptions on malformed input) is the contract.
+
+    A yielded operand list is only valid until the next iteration:
+    the match loop reuses one list and clears it after each yield.
+    Copy it (``list(operands)``) to keep it."""
     # tiny streams (a heading page, a stamp) lex cheaper through the
     # match loop: the findall pass has per-call fixed cost (token
     # tuple list, container bookkeeping) that only pays off once a

@@ -15,6 +15,8 @@ import random
 import struct
 import time
 
+import pytest
+
 from pdf2dataset_spark.sources import ccitt, jbig2, jpeg, jpx
 
 _BUDGET_S = 20.0  # generous: slow machines, dense mutated bitmaps
@@ -165,6 +167,11 @@ class TestCcittFuzz:
             ccitt.decode_ccitt_gray(data, k=0, columns=48, rows=20)
 
         _contract(decode, payloads, rng, 40)
+
+    def test_unknown_run_table_raises(self):
+        # an explicit raise, not an assert: the check holds under -O
+        with pytest.raises(ValueError, match="unknown CCITT run table"):
+            ccitt._read_run(ccitt._Bits(b"\x00\x00"), {}, "grey")
 
 
 class TestJpegFuzz:

@@ -206,3 +206,89 @@ def test_observed_metrics_ride_along_with_one_action(spark, tmp_path):
     got = obs.get
     assert got["n_rows"] == 1000
     assert got["n_errors"] == 100
+
+
+def test_directory_resume_adds_no_rows(spark, tmp_path):
+    from pdf2dataset_spark.extraction import ExtractionPipeline
+
+    src = tmp_path / "in"
+    (src / "sub").mkdir(parents=True)
+    (src / "a.pdf").write_bytes(b"pg1\fpg2")
+    (src / "sub" / "b.pdf").write_bytes(b"deep")
+    (src / "bad.pdf").write_bytes(b"\xff\xfe")
+    out = str(tmp_path / "out.parquet")
+    pipe = ExtractionPipeline(spark=spark, features=["text"])
+    pipe.run(str(src), out_path=out)
+    first = spark.read.parquet(out).count()
+    assert first == 4  # 3 pages + 1 error row
+    pipe.run(str(src), out_path=out)
+    assert spark.read.parquet(out).count() == first
+
+
+def test_directory_scan_balances_partitions_by_bytes(spark, tmp_path):
+    """A few large documents among many small ones: each scan task
+    gets about an equal share of the bytes, instead of the first task
+    getting every large file (Spark's 4 MB default open cost packs by
+    file count), and the caller's session keeps its own open cost."""
+    from pyspark.sql import functions as F
+
+    from pdf2dataset_spark.sources import scan_documents
+
+    par = spark.sparkContext.defaultParallelism
+    src = tmp_path / "skewed"
+    src.mkdir()
+    sizes = [96 << 10] * 3 + [16 << 10] * (8 * par)
+    for i, n in enumerate(sizes):
+        (src / f"d{i:03d}.pdf").write_bytes(b"x" * n)
+    key = "spark.sql.files.openCostInBytes"
+    before = spark.conf.get(key)
+    mf = scan_documents(spark, str(src))
+    per_part = (
+        mf.select(F.spark_partition_id().alias("p"), F.length("content").alias("n"))
+        .groupBy("p")
+        .agg(F.sum("n").alias("n"))
+        .collect()
+    )
+    assert sum(r.n for r in per_part) == sum(sizes)
+    assert max(r.n for r in per_part) <= 1.3 * sum(sizes) / par
+    assert spark.conf.get(key) == before
+
+
+def test_zip_rereads_skip_unchanged_archives(tmp_path):
+    import importlib
+    import os
+    import sys
+    import zipfile
+
+    from pdf2dataset_spark.operators.features import skip_unchanged_zip_rereads
+
+    archive = str(tmp_path / "guarded.zip")
+
+    def write(**modules):
+        with zipfile.ZipFile(archive, "w") as zf:
+            for name, src in modules.items():
+                zf.writestr(f"{name}.py", src)
+
+    write(zg_one="X = 1\n")
+    sys.path.insert(0, archive)
+    try:
+        importlib.import_module("zg_one")
+        skip_unchanged_zip_rereads()
+        zi = sys.path_importer_cache[archive]
+        files = zi._files
+        importlib.invalidate_caches()
+        assert zi._files is files  # unchanged archive: no re-read
+        write(zg_one="X = 1\n", zg_two="Y = 2\n")  # new size
+        importlib.invalidate_caches()
+        assert zi._files is not files
+        assert importlib.import_module("zg_two").Y == 2
+        files = zi._files
+        st = os.stat(archive)
+        os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))  # new mtime
+        importlib.invalidate_caches()
+        assert zi._files is not files
+    finally:
+        sys.path.remove(archive)
+        sys.path_importer_cache.pop(archive, None)
+        sys.modules.pop("zg_one", None)
+        sys.modules.pop("zg_two", None)
