@@ -27,6 +27,16 @@ Reference provenance: /root/reference was EMPTY at build time
 upstream package and the driver's verified contract.
 """
 
+import sys
+
+if sys.version_info < (3, 11):
+    # minipdf's lexer uses possessive quantifiers / atomic groups,
+    # which `re` only compiles from 3.11 on
+    raise ImportError(
+        "pdf2dataset_spark requires Python 3.11 or newer "
+        f"(running {sys.version.split()[0]})"
+    )
+
 from pdf2dataset_spark.session import get_spark
 from pdf2dataset_spark.io import load_table, load_tables, TABLES
 from pdf2dataset_spark.extraction import extract, extract_text, ExtractionPipeline

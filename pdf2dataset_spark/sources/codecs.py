@@ -121,19 +121,26 @@ class TextBytesCodec(DocumentCodec):
 class _PdfHandle:
     """Open-document handle for :class:`PdfCodec`: raw bytes (for the
     raster paths), eagerly parsed page texts, and the parsed document
-    (parse ONCE per doc; metadata reads reuse it). ``scan_cache``
-    memoizes the decoded scanned-page pixels per page number so the
-    image and ocr features share ONE decode (a multi-megapixel G4/JPEG
-    page would otherwise decode 2-4x per row)."""
+    (parse ONCE per doc; metadata reads reuse it).
+
+    ``image_slot`` holds ONE page's decoded embedded images as
+    ``(page, entries, scan)``: the ``page_images(decode_pixels=True)``
+    entries, plus the :meth:`PdfCodec._scan_pixels` result once
+    computed (``_UNSET`` before). Every image consumer of a page —
+    ``n_images``, ``embedded_image(_meta)``, ``image``, ``ocr``, the
+    composite render — reads it, so a page's payload decodes once.
+    Reading another page replaces it: a handle never holds more than
+    one page's pixels. The fused pass visits pages in order; an
+    out-of-order caller just decodes again."""
 
     content: bytes
     pages: list[str]
     doc: Any = None
-    scan_cache: dict = None  # page -> (w, h, gray) | None
+    image_slot: tuple | None = None
 
-    def __post_init__(self):
-        if self.scan_cache is None:
-            self.scan_cache = {}
+
+#: ``image_slot`` scan marker: the scan route has not run for the page
+_UNSET = object()
 
 
 class PdfCodec(DocumentCodec):
@@ -1954,8 +1961,7 @@ class PdfCodec(DocumentCodec):
             # /Form XObject invocations (logos/letterheads on ordinary
             # text pages) must NOT flip the page off the grid raster
             entries = {
-                e.get("name"): e
-                for e in doc.page_images(pg, decode_pixels=True)
+                e.get("name"): e for e in self._page_images(handle, page)
             }
             for i, (name, ctm) in enumerate(draw["images"]):
                 e = entries.get(name)
@@ -2511,10 +2517,30 @@ class PdfCodec(DocumentCodec):
     def page_embedded_images(self, handle: "_PdfHandle", page: int) -> list[dict]:
         """Embedded image XObjects of one page (pdfimages-shaped; see
         minipdf.PdfDocument.page_images). /DCTDecode payloads come out
-        as complete JFIF files with zero native deps."""
+        as complete JFIF files with zero native deps. The entries are
+        copies of the page's memoized decode (:meth:`_page_images`)
+        without the ``pixels`` key."""
         if handle.doc is None:
             return []
-        return handle.doc.page_images(handle.doc.pages()[page - 1])
+        return [
+            {k: v for k, v in e.items() if k != "pixels"}
+            for e in self._page_images(handle, page)
+        ]
+
+    @staticmethod
+    def _page_images(handle: "_PdfHandle", page: int) -> list[dict]:
+        """``page_images(decode_pixels=True)`` of ``page`` through the
+        handle's one-page ``image_slot``: the decoders run once per
+        page however many image features read it (``page_images``
+        runs them for ``decodable`` anyway, so keeping the pixels
+        costs no extra decode). Callers must not mutate the entries."""
+        slot = handle.image_slot
+        if slot is None or slot[0] != page:
+            doc = handle.doc
+            handle.image_slot = None  # free the old page before decoding
+            entries = doc.page_images(doc.pages()[page - 1], decode_pixels=True)
+            slot = handle.image_slot = (page, entries, _UNSET)
+        return slot[1]
 
     def _scan_pixels(
         self, handle: "_PdfHandle", page: int
@@ -2526,19 +2552,14 @@ class PdfCodec(DocumentCodec):
         8-bit grayscale ``(w, h, pixels)``; else None. JPEG payloads
         go through the engine decoder (baseline or progressive);
         raw-sample payloads are used directly (RGB reduced to BT.601
-        luma)."""
+        luma). The result rides the handle's ``image_slot``, so the
+        image and ocr features share it."""
         if handle.doc is None or handle.pages[page - 1].strip():
             return None
-        if page in handle.scan_cache:
-            return handle.scan_cache[page]
+        entries = self._page_images(handle, page)
+        if handle.image_slot[2] is not _UNSET:
+            return handle.image_slot[2]
         best: tuple[int, int, bytes] | None = None
-        # decode_pixels=True: every decodable entry carries its pixels
-        # already (gray, or RGB interleaved) — JBIG2/JPX bit-plane
-        # decodes are the dominant per-page cost, so decode ONCE here
-        # instead of once for `decodable` and again for the scan route
-        entries = handle.doc.page_images(
-            handle.doc.pages()[page - 1], decode_pixels=True
-        )
         for e in entries:
             gray = self._entry_gray(e, handle.doc)
             if gray is None:
@@ -2546,7 +2567,7 @@ class PdfCodec(DocumentCodec):
             w, h, px = gray
             if best is None or w * h > best[0] * best[1]:
                 best = (w, h, px)
-        handle.scan_cache[page] = best
+        handle.image_slot = (page, entries, best)
         return best
 
     def page_ocr(self, handle: "_PdfHandle", page: int) -> str:

@@ -1955,11 +1955,16 @@ class PdfDocument:
           :func:`sources.jpeg.decode_jpeg` accepts it (baseline /
           extended sequential AND progressive, gray or YCbCr up to
           2x2 sampling with restart intervals — virtually every
-          embedded photo).
-        - ``pixels``: with ``decode_pixels=True`` and decodable JPEG,
-          the decoded samples (gray8, or interleaved RGB for color;
-          kept off by default — a page of photos would multiply the
-          row's Arrow footprint).
+          embedded photo); CCITT, JBIG2 and JPX when their decoders
+          accept the payload. ``decodable`` is found by decoding, so
+          the JPEG / CCITT / JBIG2 / JPX decoders run for every entry
+          whether or not ``decode_pixels`` is set.
+        - ``pixels``: with ``decode_pixels=True`` and any decodable
+          entry, the decoded samples (gray8, or interleaved
+          components for color; a raw entry's are its ``data``). Kept
+          off by default — a page of photos would multiply the row's
+          Arrow footprint; ``codecs.PdfCodec`` keeps them for one
+          page at a time so its image features share one decode.
         """
         res = self.resolve(page.get("/Resources"))
         xobjs = (

@@ -292,3 +292,25 @@ def test_zip_rereads_skip_unchanged_archives(tmp_path):
         sys.path_importer_cache.pop(archive, None)
         sys.modules.pop("zg_one", None)
         sys.modules.pop("zg_two", None)
+
+
+def test_import_names_the_python_floor():
+    """On a Python older than 3.11 the package import fails with an
+    ImportError naming 3.11, not with minipdf's regex compile error."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys; sys.version_info = (3, 10, 12, 'final', 0)\n"
+        "try:\n"
+        "    import pdf2dataset_spark\n"
+        "except ImportError as e:\n"
+        "    print(e)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True,
+        text=True, check=True,
+    ).stdout
+    assert "requires Python 3.11 or newer" in out

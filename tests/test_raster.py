@@ -638,8 +638,8 @@ def test_headerless_and_truncated_jpegs_raise_valueerror():
 
 def test_scanned_page_decode_is_memoized_per_handle():
     """image + ocr features over a scanned page must share ONE decode
-    (scan_cache), not re-decode the multi-megapixel payload per
-    feature."""
+    (the handle's image_slot), not re-decode the multi-megapixel
+    payload per feature."""
     from unittest import mock
 
     from pdf2dataset_spark.sources import ccitt
@@ -661,10 +661,173 @@ def test_scanned_page_decode_is_memoized_per_handle():
         codec.page_image(hd, 1)
         codec.page_ocr(hd, 1)
         codec.page_image(hd, 1)
-        # one decode inside _scan_pixels (page_images' decodable probe
-        # is a separate, also-once cost); repeats hit scan_cache
-        assert spy.call_count <= 2, spy.call_count
+        assert spy.call_count == 1, spy.call_count
     assert codec.page_ocr(hd, 1) == text
+
+
+def _one_image_pdfs() -> dict[str, bytes]:
+    """One-page image-only PDFs, one per decoder, each payload made by
+    the decoder module's own encoder."""
+    from pdf2dataset_spark.sources import ccitt, jbig2, jpeg, jpx
+
+    w, h, px = raster._rasterize("MEMO 1")
+    px = bytes(px)
+    rows = [
+        bytearray(1 if px[y * w + x] < 128 else 0 for x in range(w))
+        for y in range(h)
+    ]
+    xobjs = {
+        "jpeg": {"filter": "/DCTDecode",
+                 "data": jpeg.encode_jpeg(w, h, px, quality=90)},
+        "ccitt": {"filter": "/CCITTFaxDecode",
+                  "data": ccitt.encode_g4(px, w, h), "bits": 1,
+                  "decode_parms": {"/K": -1, "/Columns": w, "/Rows": h}},
+        "jbig2": {"filter": "/JBIG2Decode",
+                  "data": jbig2.encode_generic_page(rows), "bits": 1},
+        "jpx": {"filter": "/JPXDecode",
+                "data": jpx.encode_jpx(w, h, px, 1, levels=2)},
+    }
+    return {
+        kind: minipdf.build_pdf(
+            [""], images=[dict(x, width=w, height=h)],
+            extra_content=b"q %d 0 0 %d 0 0 cm /Im0 Do Q" % (w, h),
+        )
+        for kind, x in xobjs.items()
+    }
+
+
+def _multi_page_scan() -> tuple[bytes, list[tuple[int, int]]]:
+    """A three-page scanned document: page n holds one raw-sample gray
+    image whose size differs per page, so a page's entries and
+    pixels are told apart by their dimensions."""
+    from pdf2dataset_spark.queries.tier_a import _raw_pdf
+
+    dims, imgs = [], []
+    for n in range(1, 4):
+        w, h, px = raster._rasterize(f"PAGE {n}" + "!" * n)
+        dims.append((w, h))
+        imgs.append((w, h, bytes(px)))
+    objs = [b"<< /Type /Catalog /Pages 2 0 R >>", b""]
+    kids = []
+    for w, h, px in imgs:
+        page, content, image = len(objs) + 1, len(objs) + 2, len(objs) + 3
+        kids.append(b"%d 0 R" % page)
+        body = b"q %d 0 0 %d 0 0 cm /Im0 Do Q" % (w, h)
+        objs += [
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 %d %d] "
+            b"/Resources << /XObject << /Im0 %d 0 R >> >> "
+            b"/Contents %d 0 R >>" % (w, h, image, content),
+            b"<< /Length %d >>\nstream\n%s\nendstream" % (len(body), body),
+            b"<< /Type /XObject /Subtype /Image /Width %d /Height %d "
+            b"/ColorSpace /DeviceGray /BitsPerComponent 8 /Length %d >>"
+            b"\nstream\n%s\nendstream" % (w, h, len(px), px),
+        ]
+    objs[1] = b"<< /Type /Pages /Kids [%s] /Count %d >>" % (
+        b" ".join(kids), len(kids))
+    return _raw_pdf(objs), dims
+
+
+class TestOneDecodePerPage:
+    """Every image feature of a page reads the handle's one-page
+    decode memo: the fused pass decodes each page's payload once, the
+    handle never keeps an earlier page's pixels, and the public
+    ``page_embedded_images`` output is unchanged."""
+
+    FEATURES = ["n_images", "embedded_image", "embedded_image_meta",
+                "image", "ocr"]
+
+    @staticmethod
+    def _fused_rows(docs: dict[str, bytes], features) -> list[dict]:
+        """Run the fused pass's own batch function in this process (a
+        spy cannot see into Spark's Python workers)."""
+        import pyarrow as pa
+
+        from pdf2dataset_spark.operators.features import extract_features
+
+        class _Manifest:
+            def mapInArrow(self, fn, schema):
+                self.run = fn
+                return self
+
+        m = extract_features(_Manifest(), features, codec=PdfCodec())
+        batch = pa.RecordBatch.from_pydict(
+            {"path": list(docs), "content": list(docs.values())},
+            schema=pa.schema([("path", pa.string()),
+                              ("content", pa.binary())]),
+        )
+        return [r for out in m.run(iter([batch])) for r in out.to_pylist()]
+
+    def test_fused_pass_decodes_each_page_once(self):
+        from unittest import mock
+
+        from pdf2dataset_spark.sources import ccitt, jbig2, jpeg, jpx
+
+        spies = {
+            "jpeg": (jpeg, "decode_jpeg"),
+            "ccitt": (ccitt, "decode_ccitt_gray"),
+            "jbig2": (jbig2, "decode_jbig2_gray"),
+            "jpx": (jpx, "decode_jpx"),
+        }
+        for kind, pdf in _one_image_pdfs().items():
+            mod, name = spies[kind]
+            with mock.patch.object(
+                mod, name, wraps=getattr(mod, name)
+            ) as spy:
+                (row,) = self._fused_rows({kind: pdf}, self.FEATURES)
+            assert row["error"] is None, row["error"]
+            assert row["n_images"] == 1 and row["ocr"] == "MEMO 1", kind
+            assert spy.call_count == 1, (kind, spy.call_count)
+
+    def test_handle_keeps_only_the_current_page(self):
+        pdf, dims = _multi_page_scan()
+        codec = PdfCodec()
+        hd = codec.open(pdf)
+        codec.page_image(hd, 1)
+        codec.page_ocr(hd, 2)
+        page, entries, scan = hd.image_slot
+        assert page == 2
+        assert [(e["width"], e["height"]) for e in entries] == [dims[1]]
+        assert len(entries[0]["pixels"]) == dims[1][0] * dims[1][1]
+        assert scan[:2] == dims[1]
+
+    def test_rows_match_a_fresh_handle_per_page(self):
+        from pdf2dataset_spark.operators.features import (
+            PageContext, resolve_features,
+        )
+
+        pdf, dims = _multi_page_scan()
+        rows = self._fused_rows({"scan.pdf": pdf}, self.FEATURES)
+        assert [r["page"] for r in rows] == [1, 2, 3]
+        codec = PdfCodec()
+        for r in rows:
+            ctx = PageContext(path="scan.pdf", page=r["page"],
+                              codec=codec, handle=codec.open(pdf))
+            want = {f.name: f.fn(ctx)
+                    for f in resolve_features(self.FEATURES)}
+            assert r["error"] is None
+            assert {k: r[k] for k in want} == want
+        assert [r["ocr"] for r in rows] == ["PAGE 1!", "PAGE 2!!",
+                                            "PAGE 3!!!"]
+
+    def test_embedded_images_equal_uncached_page_images(self):
+        """Differential: the memoized entries minus ``pixels`` equal a
+        plain ``page_images`` call, key sets included — also when the
+        image features warmed the memo first."""
+        pdfs = list(_one_image_pdfs().values()) + [_multi_page_scan()[0]]
+        codec = PdfCodec()
+        for pdf in pdfs:
+            hd = codec.open(pdf)
+            doc = minipdf.PdfDocument(pdf)
+            for n, pg in enumerate(doc.pages(), start=1):
+                want = doc.page_images(pg)
+                assert all("pixels" not in e for e in want)
+                cold = codec.page_embedded_images(codec.open(pdf), n)
+                codec.page_image(hd, n)
+                warm = codec.page_embedded_images(hd, n)
+                for got in (cold, warm):
+                    assert [sorted(e) for e in got] == \
+                        [sorted(e) for e in want]
+                    assert got == want
 
 
 class TestTwelveBitJpeg:
