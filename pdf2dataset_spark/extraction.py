@@ -35,6 +35,7 @@ from pdf2dataset_spark.operators.features import (
     resolve_features,
 )
 from pdf2dataset_spark.operators.resume import load_done, resume_filter
+from pdf2dataset_spark.plans.progress import observed
 from pdf2dataset_spark.sources import from_dict, scan_documents
 from pdf2dataset_spark.sources.codecs import (
     DocumentCodec,
@@ -94,15 +95,7 @@ class ExtractionPipeline:
             page_range=page_range,
         )
         if observe:
-            from pyspark.sql import Observation
-            from pyspark.sql import functions as F
-
-            self.last_observation = Observation("extract_metrics")
-            out = out.observe(
-                self.last_observation,
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count("error").alias("n_errors"),
-            )
+            out, self.last_observation = observed(out, "extract_metrics")
         return out
 
     def run(

@@ -156,12 +156,9 @@ def _word_boxes(ctx: PageContext) -> str | None:
     array of {word, x0, y0, x1, y1} — JSON keeps the page-row schema
     flat; consumers explode it JVM-side with from_json. None for
     codecs without positional text."""
-    fn = getattr(ctx.codec, "page_word_boxes", None)
-    if fn is None:
-        return None
     import json
 
-    boxes = fn(ctx.handle, ctx.page)
+    boxes = ctx.codec.page_word_boxes(ctx.handle, ctx.page)
     return json.dumps(boxes, sort_keys=True) if boxes else None
 
 
@@ -172,12 +169,9 @@ def _paragraphs(ctx: PageContext) -> str | None:
     """Layout-aware paragraphs as a JSON array of reflowed strings —
     the chunking unit training pipelines consume. None for codecs
     without positional text."""
-    fn = getattr(ctx.codec, "page_paragraphs", None)
-    if fn is None:
-        return None
     import json
 
-    paras = fn(ctx.handle, ctx.page)
+    paras = ctx.codec.page_paragraphs(ctx.handle, ctx.page)
     return json.dumps(paras) if paras else None
 
 
@@ -222,9 +216,7 @@ attachment_feature = Feature("attachment", "binary", _first_attachment)
 
 def _profile_field(key: str, default=None):
     def get(ctx: PageContext):
-        fn = getattr(ctx.codec, "doc_profile", None)
-        return fn(ctx.handle).get(key, default) if fn is not None \
-            else default
+        return ctx.codec.doc_profile(ctx.handle).get(key, default)
     return get
 
 
@@ -245,13 +237,11 @@ has_xmp_feature = Feature(
 
 
 def _creation_date(ctx: PageContext) -> str | None:
-    fn = getattr(ctx.codec, "doc_dates", None)
-    return fn(ctx.handle)[0] if fn is not None else None
+    return ctx.codec.doc_dates(ctx.handle)[0]
 
 
 def _mod_date(ctx: PageContext) -> str | None:
-    fn = getattr(ctx.codec, "doc_dates", None)
-    return fn(ctx.handle)[1] if fn is not None else None
+    return ctx.codec.doc_dates(ctx.handle)[1]
 
 
 # document timestamps as sortable ISO-8601 strings (/Info D:-dates
@@ -264,15 +254,11 @@ def _body_paragraphs(ctx: PageContext) -> str | None:
     """Like ``paragraphs`` but with /Artifact pagination furniture
     (running headers/footers/page numbers in tagged PDFs) dropped
     before segmentation — the curation-grade body text."""
-    fn = getattr(ctx.codec, "page_paragraphs", None)
-    if fn is None:
-        return None
     import json
 
-    try:
-        paras = fn(ctx.handle, ctx.page, drop_artifacts=True)
-    except TypeError:  # codec without the artifact knob
-        paras = fn(ctx.handle, ctx.page)
+    paras = ctx.codec.page_paragraphs(
+        ctx.handle, ctx.page, drop_artifacts=True
+    )
     return json.dumps(paras) if paras else None
 
 
@@ -282,8 +268,7 @@ body_paragraphs_feature = Feature(
 
 
 def _artifact_text_rate(ctx: PageContext) -> float | None:
-    fn = getattr(ctx.codec, "page_artifact_char_fraction", None)
-    return fn(ctx.handle, ctx.page) if fn is not None else None
+    return ctx.codec.page_artifact_char_fraction(ctx.handle, ctx.page)
 
 
 # fraction of the page's characters inside /Artifact marked content
@@ -295,8 +280,7 @@ artifact_text_rate_feature = Feature(
 
 
 def _hidden_text_rate(ctx: PageContext) -> float | None:
-    fn = getattr(ctx.codec, "page_hidden_char_fraction", None)
-    return fn(ctx.handle, ctx.page) if fn is not None else None
+    return ctx.codec.page_hidden_char_fraction(ctx.handle, ctx.page)
 
 
 # fraction of the page's characters in invisible rendering mode

@@ -58,9 +58,6 @@ def observed(df, name: str = "audit"):
     obs = Observation(name)
     cols = [F.count(F.lit(1)).alias("n_rows")]
     if "error" in df.columns:
-        cols.append(
-            F.sum(
-                F.when(F.col("error").isNotNull(), 1).otherwise(0)
-            ).alias("n_errors")
-        )
+        # count() is 0 on an empty input where sum() would be null
+        cols.append(F.count("error").alias("n_errors"))
     return df.observe(obs, *cols), obs

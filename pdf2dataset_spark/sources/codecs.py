@@ -74,6 +74,36 @@ class DocumentCodec:
         the format has no such concept."""
         return []
 
+    def doc_profile(self, handle: Any) -> dict:
+        """Structural facts (version, linearized, tagged, encrypted,
+        has_xmp); {} if none."""
+        return {}
+
+    def doc_dates(self, handle: Any) -> tuple[str | None, str | None]:
+        """(creation, modification) ISO-8601 dates; None if unknown."""
+        return (None, None)
+
+    def page_word_boxes(self, handle: Any, page: int) -> list[dict]:
+        """Reading-order word boxes; [] without positional text."""
+        return []
+
+    def page_paragraphs(
+        self, handle: Any, page: int, drop_artifacts: bool = False
+    ) -> list[str]:
+        """Layout-aware paragraphs, pagination furniture removed if
+        ``drop_artifacts``; [] without positional text."""
+        return []
+
+    def page_artifact_char_fraction(self, handle: Any, page: int) -> float | None:
+        """Share of the page's characters that are pagination
+        furniture; None if the format cannot tell."""
+        return None
+
+    def page_hidden_char_fraction(self, handle: Any, page: int) -> float | None:
+        """Share of the page's characters drawn invisibly; None if
+        the format cannot tell."""
+        return None
+
 
 def parse_image_size(image_size: str | None) -> tuple[int, int] | None:
     """Upstream-style 'WxH' image size spec → (w, h)."""

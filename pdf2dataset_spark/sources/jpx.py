@@ -1029,10 +1029,11 @@ def decode_codeblock(
     This is the production (per-corpus-page) path, so it is written
     for speed: the MQ decoder is inlined, neighbor significance is
     tracked incrementally (updated on the rare became-significant
-    events instead of re-scanned per decision), and the pass walkers
-    are flat loops. The encoder keeps the readable shared walkers —
-    the round-trip property tests pin the two implementations to the
-    same coding decisions."""
+    events instead of re-scanned per decision), and every block, of
+    any size, runs the same numpy snapshot walkers, which visit only
+    the pixels a pass can decode. The encoder keeps the readable
+    shared walkers — the round-trip property tests pin the two
+    implementations to the same coding decisions."""
     size = w * h
     sig = bytearray(size)
     visited = bytearray(size)
@@ -1170,267 +1171,76 @@ def decode_codeblock(
                 cidx[i + w + 1] += 1
 
     zeros = bytes(size)
-    # numpy snapshot walkers (exact; see each pass) only pay off when
-    # the per-pixel Python scan they replace is long enough
-    if size >= 1024:
-        import numpy as np
+    # numpy snapshot walkers: each pass takes its candidate set from
+    # a strip snapshot and falls back to live per-pixel checks only
+    # where an event can change it (exact; see each pass)
+    import numpy as np
 
-        sig_np = np.frombuffer(sig, dtype=np.uint8)
-        vis_np = np.frombuffer(visited, dtype=np.uint8)
-        ref_np = np.frombuffer(refined, dtype=np.uint8)
-        cidx_np = np.frombuffer(cidx, dtype=np.uint8)
-        order = _strip_order(w, h)
-    else:
-        np = None
+    sig_np = np.frombuffer(sig, dtype=np.uint8)
+    vis_np = np.frombuffer(visited, dtype=np.uint8)
+    ref_np = np.frombuffer(refined, dtype=np.uint8)
+    cidx_np = np.frombuffer(cidx, dtype=np.uint8)
+    order = _strip_order(w, h)
     plane = nplanes - 1
     p = 0
     while p < npasses and plane >= 0:
         plane_bit = 1 << plane
         if p > 0:
             # ---- significance propagation pass ----
-            if np is not None:
-                # per-strip snapshot: eligibility (not sig, has sig
-                # neighbors) can only be GAINED during the pass, and
-                # only by neighbors of a became-significant event —
-                # so the snapshot is exact up to the first event that
-                # decodes 1, after which the remainder of the strip
-                # runs the per-pixel live loop. Strips snapshot
-                # lazily (after all earlier strips), so cross-strip
-                # effects are always visible. The MQ decode is
-                # inlined on pass-local registers; the closure cells
-                # sync around each decode_sign_and_set (whose sign
-                # decision still goes through mq()).
-                l_a, l_c, l_ct, l_bp = a_reg, c_reg, ct, bp
-                l_data, l_nd = data, ndata
-                l_qq, l_q16 = qe_q, qe_q16
-                l_nm, l_nl, l_sw = qe_nmps, qe_nlps, qe_sw
-                for ys in range(0, h, 4):
-                    ye = ys + 4 if ys + 4 <= h else h
-                    seg_el = (
-                        (sig_np[ys * w:ye * w] == 0)
-                        & (cidx_np[ys * w:ye * w] != 0)
-                    )
-                    if not seg_el.any():
-                        continue
-                    xs_i, rys_i = np.nonzero(
-                        seg_el.reshape(ye - ys, w).T
-                    )
-                    ev_x = ev_y = -1
-                    for x, ry in zip(xs_i.tolist(), rys_i.tolist()):
-                        y = ys + ry
-                        i = y * w + x
-                        visited[i] = 1
-                        # -- inlined MQ DECODE --
-                        state = cx[sig_lut[cidx[i]]]
-                        i_st = state[0]
-                        qe = l_qq[i_st]
-                        qe16 = l_q16[i_st]
-                        l_a -= qe
-                        if l_c < qe16:
-                            if l_a < qe:
-                                bit = state[1]
-                                state[0] = l_nm[i_st]
-                            else:
-                                bit = 1 - state[1]
-                                if l_sw[i_st]:
-                                    state[1] = bit
-                                state[0] = l_nl[i_st]
-                            l_a = qe
-                            renorm = True
-                        else:
-                            l_c -= qe16
-                            if l_a & 0x8000:
-                                bit = state[1]
-                                renorm = False
-                            else:
-                                if l_a < qe:
-                                    bit = 1 - state[1]
-                                    if l_sw[i_st]:
-                                        state[1] = bit
-                                    state[0] = l_nl[i_st]
-                                else:
-                                    bit = state[1]
-                                    state[0] = l_nm[i_st]
-                                renorm = True
-                        if renorm:
-                            while True:
-                                if l_ct == 0:
-                                    bb = l_data[l_bp] if l_bp < l_nd else 0xFF
-                                    bb1 = (l_data[l_bp + 1]
-                                           if l_bp + 1 < l_nd else 0xFF)
-                                    if bb == 0xFF:
-                                        if bb1 > 0x8F:
-                                            l_c += 0xFF00
-                                            l_ct = 8
-                                        else:
-                                            l_bp += 1
-                                            l_c += bb1 << 9
-                                            l_ct = 7
-                                    else:
-                                        l_bp += 1
-                                        l_c += bb1 << 8
-                                        l_ct = 8
-                                l_a = (l_a << 1) & 0xFFFF
-                                l_c = (l_c << 1) & 0xFFFFFFFF
-                                l_ct -= 1
-                                if l_a & 0x8000:
-                                    break
-                        if bit:
-                            a_reg, c_reg, ct, bp = l_a, l_c, l_ct, l_bp
-                            decode_sign_and_set(i, x, y, plane_bit)
-                            l_a, l_c, l_ct, l_bp = a_reg, c_reg, ct, bp
-                            ev_x, ev_y = x, y
-                            break
-                    if ev_x < 0:
-                        continue
-                    # exact live remainder: rest of the event column,
-                    # then the remaining columns of the strip
-                    x = ev_x
-                    y = ev_y + 1
+            # per-strip snapshot: eligibility (not sig, has sig
+            # neighbors) can only be GAINED during the pass, and
+            # only by neighbors of a became-significant event —
+            # so the snapshot is exact up to the first event that
+            # decodes 1, after which the remainder of the strip
+            # runs the per-pixel live loop. Strips snapshot
+            # lazily (after all earlier strips), so cross-strip
+            # effects are always visible. The MQ decode is
+            # inlined on pass-local registers; the closure cells
+            # sync around each decode_sign_and_set (whose sign
+            # decision still goes through mq()).
+            l_a, l_c, l_ct, l_bp = a_reg, c_reg, ct, bp
+            l_data, l_nd = data, ndata
+            l_qq, l_q16 = qe_q, qe_q16
+            l_nm, l_nl, l_sw = qe_nmps, qe_nlps, qe_sw
+            for ys in range(0, h, 4):
+                ye = ys + 4 if ys + 4 <= h else h
+                seg_el = (
+                    (sig_np[ys * w:ye * w] == 0)
+                    & (cidx_np[ys * w:ye * w] != 0)
+                )
+                if not seg_el.any():
+                    continue
+                xs_i, rys_i = np.nonzero(
+                    seg_el.reshape(ye - ys, w).T
+                )
+                ev_x = ev_y = -1
+                for x, ry in zip(xs_i.tolist(), rys_i.tolist()):
+                    y = ys + ry
                     i = y * w + x
-                    while True:
-                        while y < ye:
-                            if not sig[i] and cidx[i]:
-                                visited[i] = 1
-                                # -- inlined MQ DECODE --
-                                state = cx[sig_lut[cidx[i]]]
-                                i_st = state[0]
-                                qe = l_qq[i_st]
-                                qe16 = l_q16[i_st]
-                                l_a -= qe
-                                if l_c < qe16:
-                                    if l_a < qe:
-                                        bit = state[1]
-                                        state[0] = l_nm[i_st]
-                                    else:
-                                        bit = 1 - state[1]
-                                        if l_sw[i_st]:
-                                            state[1] = bit
-                                        state[0] = l_nl[i_st]
-                                    l_a = qe
-                                    renorm = True
-                                else:
-                                    l_c -= qe16
-                                    if l_a & 0x8000:
-                                        bit = state[1]
-                                        renorm = False
-                                    else:
-                                        if l_a < qe:
-                                            bit = 1 - state[1]
-                                            if l_sw[i_st]:
-                                                state[1] = bit
-                                            state[0] = l_nl[i_st]
-                                        else:
-                                            bit = state[1]
-                                            state[0] = l_nm[i_st]
-                                        renorm = True
-                                if renorm:
-                                    while True:
-                                        if l_ct == 0:
-                                            bb = l_data[l_bp] if l_bp < l_nd else 0xFF
-                                            bb1 = (l_data[l_bp + 1]
-                                                   if l_bp + 1 < l_nd else 0xFF)
-                                            if bb == 0xFF:
-                                                if bb1 > 0x8F:
-                                                    l_c += 0xFF00
-                                                    l_ct = 8
-                                                else:
-                                                    l_bp += 1
-                                                    l_c += bb1 << 9
-                                                    l_ct = 7
-                                            else:
-                                                l_bp += 1
-                                                l_c += bb1 << 8
-                                                l_ct = 8
-                                        l_a = (l_a << 1) & 0xFFFF
-                                        l_c = (l_c << 1) & 0xFFFFFFFF
-                                        l_ct -= 1
-                                        if l_a & 0x8000:
-                                            break
-                                if bit:
-                                    a_reg, c_reg, ct, bp = \
-                                        l_a, l_c, l_ct, l_bp
-                                    decode_sign_and_set(
-                                        i, x, y, plane_bit)
-                                    l_a, l_c, l_ct, l_bp = \
-                                        a_reg, c_reg, ct, bp
-                            y += 1
-                            i += w
-                        x += 1
-                        if x >= w:
-                            break
-                        y = ys
-                        i = ys * w + x
-                a_reg, c_reg, ct, bp = l_a, l_c, l_ct, l_bp
-            else:
-                for ys in range(0, h, 4):
-                    ye = ys + 4 if ys + 4 <= h else h
-                    base = ys * w
-                    for x in range(w):
-                        i = base + x
-                        for y in range(ys, ye):
-                            if sig[i] or not cidx[i]:
-                                i += w
-                                continue
-                            visited[i] = 1
-                            if mq(cx[sig_lut[cidx[i]]]):
-                                decode_sign_and_set(i, x, y, plane_bit)
-                            i += w
-            p += 1
-            if p >= npasses:
-                break
-            # ---- magnitude refinement pass (hottest: one decision
-            # per already-significant coefficient per plane — MQ
-            # decode inlined to drop the call overhead) ----
-            ctx14 = cx[_CTX_MR_FIRST]
-            ctx15 = cx[_CTX_MR_FIRST_NBR]
-            ctx16 = cx[_CTX_MR_LATER]
-            if np is not None:
-                # the refinement pass decodes exactly the significant,
-                # not-yet-visited coefficients and NOTHING becomes
-                # significant during it — candidate set and context
-                # classes are frozen for the whole pass, so one numpy
-                # snapshot in strip order replaces the per-pixel scan
-                mr_mask = (sig_np != 0) & (vis_np == 0)
-                if mr_mask.any():
-                    cand = order[mr_mask[order]]
-                    cls = np.where(
-                        ref_np[cand] != 0, 2,
-                        (cidx_np[cand] != 0).astype(np.int8),
-                    )
-                    ctx_by = (ctx14, ctx15, ctx16)
-                    # every name this loop touches is hoisted out of
-                    # its closure cell into a plain local (mq() and
-                    # decode_sign_and_set are never called here, so
-                    # the registers are exclusively ours), written
-                    # back once at the end of the pass
-                    l_a, l_c, l_ct, l_bp = a_reg, c_reg, ct, bp
-                    l_data, l_nd, l_mag = data, ndata, mag
-                    l_qq, l_q16 = qe_q, qe_q16
-                    l_nm, l_nl, l_sw = qe_nmps, qe_nlps, qe_sw
-                    for i, k in zip(cand.tolist(), cls.tolist()):
-                        state = ctx_by[k]
-                        # -- inlined MQ DECODE (same as below) --
-                        i_st = state[0]
-                        qe = l_qq[i_st]
-                        qe16 = l_q16[i_st]
-                        l_a -= qe
-                        if l_c < qe16:  # == Chigh < Qe
-                            if l_a < qe:
-                                bit = state[1]
-                                state[0] = l_nm[i_st]
-                            else:
-                                bit = 1 - state[1]
-                                if l_sw[i_st]:
-                                    state[1] = bit
-                                state[0] = l_nl[i_st]
-                            l_a = qe
+                    visited[i] = 1
+                    # -- inlined MQ DECODE --
+                    state = cx[sig_lut[cidx[i]]]
+                    i_st = state[0]
+                    qe = l_qq[i_st]
+                    qe16 = l_q16[i_st]
+                    l_a -= qe
+                    if l_c < qe16:
+                        if l_a < qe:
+                            bit = state[1]
+                            state[0] = l_nm[i_st]
                         else:
-                            l_c -= qe16  # c >= qe16 here
-                            if l_a & 0x8000:
-                                if bit := state[1]:
-                                    l_mag[i] |= plane_bit
-                                continue
+                            bit = 1 - state[1]
+                            if l_sw[i_st]:
+                                state[1] = bit
+                            state[0] = l_nl[i_st]
+                        l_a = qe
+                        renorm = True
+                    else:
+                        l_c -= qe16
+                        if l_a & 0x8000:
+                            bit = state[1]
+                            renorm = False
+                        else:
                             if l_a < qe:
                                 bit = 1 - state[1]
                                 if l_sw[i_st]:
@@ -1439,10 +1249,11 @@ def decode_codeblock(
                             else:
                                 bit = state[1]
                                 state[0] = l_nm[i_st]
+                            renorm = True
+                    if renorm:
                         while True:
                             if l_ct == 0:
-                                bb = (l_data[l_bp]
-                                      if l_bp < l_nd else 0xFF)
+                                bb = l_data[l_bp] if l_bp < l_nd else 0xFF
                                 bb1 = (l_data[l_bp + 1]
                                        if l_bp + 1 < l_nd else 0xFF)
                                 if bb == 0xFF:
@@ -1462,86 +1273,184 @@ def decode_codeblock(
                             l_ct -= 1
                             if l_a & 0x8000:
                                 break
-                        # -----------------------
-                        if bit:
-                            l_mag[i] |= plane_bit
-                    a_reg, c_reg, ct, bp = l_a, l_c, l_ct, l_bp
-                    ref_np[cand] = 1
-                    vis_np[cand] = 1
-            else:
-                for ys in range(0, h, 4):
-                    ye = ys + 4 if ys + 4 <= h else h
-                    base = ys * w
-                    for x in range(w):
-                        i = base + x
-                        for y in range(ys, ye):
-                            if not sig[i] or visited[i]:
-                                i += w
-                                continue
-                            if refined[i]:
-                                state = ctx16
-                            else:
-                                state = ctx15 if cidx[i] else ctx14
+                    if bit:
+                        a_reg, c_reg, ct, bp = l_a, l_c, l_ct, l_bp
+                        decode_sign_and_set(i, x, y, plane_bit)
+                        l_a, l_c, l_ct, l_bp = a_reg, c_reg, ct, bp
+                        ev_x, ev_y = x, y
+                        break
+                if ev_x < 0:
+                    continue
+                # exact live remainder: rest of the event column,
+                # then the remaining columns of the strip
+                x = ev_x
+                y = ev_y + 1
+                i = y * w + x
+                while True:
+                    while y < ye:
+                        if not sig[i] and cidx[i]:
+                            visited[i] = 1
                             # -- inlined MQ DECODE --
+                            state = cx[sig_lut[cidx[i]]]
                             i_st = state[0]
-                            qe = qe_q[i_st]
-                            qe16 = qe_q16[i_st]
-                            a_reg -= qe
-                            if c_reg < qe16:  # == Chigh < Qe
-                                if a_reg < qe:
+                            qe = l_qq[i_st]
+                            qe16 = l_q16[i_st]
+                            l_a -= qe
+                            if l_c < qe16:
+                                if l_a < qe:
                                     bit = state[1]
-                                    state[0] = qe_nmps[i_st]
+                                    state[0] = l_nm[i_st]
                                 else:
                                     bit = 1 - state[1]
-                                    if qe_sw[i_st]:
+                                    if l_sw[i_st]:
                                         state[1] = bit
-                                    state[0] = qe_nlps[i_st]
-                                a_reg = qe
+                                    state[0] = l_nl[i_st]
+                                l_a = qe
                                 renorm = True
                             else:
-                                c_reg -= qe16  # c >= qe16 here
-                                if a_reg & 0x8000:
+                                l_c -= qe16
+                                if l_a & 0x8000:
                                     bit = state[1]
                                     renorm = False
                                 else:
-                                    if a_reg < qe:
+                                    if l_a < qe:
                                         bit = 1 - state[1]
-                                        if qe_sw[i_st]:
+                                        if l_sw[i_st]:
                                             state[1] = bit
-                                        state[0] = qe_nlps[i_st]
+                                        state[0] = l_nl[i_st]
                                     else:
                                         bit = state[1]
-                                        state[0] = qe_nmps[i_st]
+                                        state[0] = l_nm[i_st]
                                     renorm = True
                             if renorm:
                                 while True:
-                                    if ct == 0:
-                                        bb = data[bp] if bp < ndata else 0xFF
-                                        bb1 = (data[bp + 1]
-                                               if bp + 1 < ndata else 0xFF)
+                                    if l_ct == 0:
+                                        bb = l_data[l_bp] if l_bp < l_nd else 0xFF
+                                        bb1 = (l_data[l_bp + 1]
+                                               if l_bp + 1 < l_nd else 0xFF)
                                         if bb == 0xFF:
                                             if bb1 > 0x8F:
-                                                c_reg += 0xFF00
-                                                ct = 8
+                                                l_c += 0xFF00
+                                                l_ct = 8
                                             else:
-                                                bp += 1
-                                                c_reg += bb1 << 9
-                                                ct = 7
+                                                l_bp += 1
+                                                l_c += bb1 << 9
+                                                l_ct = 7
                                         else:
-                                            bp += 1
-                                            c_reg += bb1 << 8
-                                            ct = 8
-                                    a_reg = (a_reg << 1) & 0xFFFF
-                                    c_reg = (c_reg << 1) & 0xFFFFFFFF
-                                    ct -= 1
-                                    if a_reg & 0x8000:
+                                            l_bp += 1
+                                            l_c += bb1 << 8
+                                            l_ct = 8
+                                    l_a = (l_a << 1) & 0xFFFF
+                                    l_c = (l_c << 1) & 0xFFFFFFFF
+                                    l_ct -= 1
+                                    if l_a & 0x8000:
                                         break
-                            # -----------------------
                             if bit:
-                                mag[i] |= plane_bit
-                            refined[i] = 1
-                            visited[i] = 1
-                            i += w
+                                a_reg, c_reg, ct, bp = \
+                                    l_a, l_c, l_ct, l_bp
+                                decode_sign_and_set(
+                                    i, x, y, plane_bit)
+                                l_a, l_c, l_ct, l_bp = \
+                                    a_reg, c_reg, ct, bp
+                        y += 1
+                        i += w
+                    x += 1
+                    if x >= w:
+                        break
+                    y = ys
+                    i = ys * w + x
+            a_reg, c_reg, ct, bp = l_a, l_c, l_ct, l_bp
+            p += 1
+            if p >= npasses:
+                break
+            # ---- magnitude refinement pass (hottest: one decision
+            # per already-significant coefficient per plane — MQ
+            # decode inlined to drop the call overhead) ----
+            ctx14 = cx[_CTX_MR_FIRST]
+            ctx15 = cx[_CTX_MR_FIRST_NBR]
+            ctx16 = cx[_CTX_MR_LATER]
+            # the refinement pass decodes exactly the significant,
+            # not-yet-visited coefficients and NOTHING becomes
+            # significant during it — candidate set and context
+            # classes are frozen for the whole pass, so one numpy
+            # snapshot in strip order replaces the per-pixel scan
+            mr_mask = (sig_np != 0) & (vis_np == 0)
+            if mr_mask.any():
+                cand = order[mr_mask[order]]
+                cls = np.where(
+                    ref_np[cand] != 0, 2,
+                    (cidx_np[cand] != 0).astype(np.int8),
+                )
+                ctx_by = (ctx14, ctx15, ctx16)
+                # every name this loop touches is hoisted out of
+                # its closure cell into a plain local (mq() and
+                # decode_sign_and_set are never called here, so
+                # the registers are exclusively ours), written
+                # back once at the end of the pass
+                l_a, l_c, l_ct, l_bp = a_reg, c_reg, ct, bp
+                l_data, l_nd, l_mag = data, ndata, mag
+                l_qq, l_q16 = qe_q, qe_q16
+                l_nm, l_nl, l_sw = qe_nmps, qe_nlps, qe_sw
+                for i, k in zip(cand.tolist(), cls.tolist()):
+                    state = ctx_by[k]
+                    # -- inlined MQ DECODE (same as mq()) --
+                    i_st = state[0]
+                    qe = l_qq[i_st]
+                    qe16 = l_q16[i_st]
+                    l_a -= qe
+                    if l_c < qe16:  # == Chigh < Qe
+                        if l_a < qe:
+                            bit = state[1]
+                            state[0] = l_nm[i_st]
+                        else:
+                            bit = 1 - state[1]
+                            if l_sw[i_st]:
+                                state[1] = bit
+                            state[0] = l_nl[i_st]
+                        l_a = qe
+                    else:
+                        l_c -= qe16  # c >= qe16 here
+                        if l_a & 0x8000:
+                            if bit := state[1]:
+                                l_mag[i] |= plane_bit
+                            continue
+                        if l_a < qe:
+                            bit = 1 - state[1]
+                            if l_sw[i_st]:
+                                state[1] = bit
+                            state[0] = l_nl[i_st]
+                        else:
+                            bit = state[1]
+                            state[0] = l_nm[i_st]
+                    while True:
+                        if l_ct == 0:
+                            bb = (l_data[l_bp]
+                                  if l_bp < l_nd else 0xFF)
+                            bb1 = (l_data[l_bp + 1]
+                                   if l_bp + 1 < l_nd else 0xFF)
+                            if bb == 0xFF:
+                                if bb1 > 0x8F:
+                                    l_c += 0xFF00
+                                    l_ct = 8
+                                else:
+                                    l_bp += 1
+                                    l_c += bb1 << 9
+                                    l_ct = 7
+                            else:
+                                l_bp += 1
+                                l_c += bb1 << 8
+                                l_ct = 8
+                        l_a = (l_a << 1) & 0xFFFF
+                        l_c = (l_c << 1) & 0xFFFFFFFF
+                        l_ct -= 1
+                        if l_a & 0x8000:
+                            break
+                    # -----------------------
+                    if bit:
+                        l_mag[i] |= plane_bit
+                a_reg, c_reg, ct, bp = l_a, l_c, l_ct, l_bp
+                ref_np[cand] = 1
+                vis_np[cand] = 1
             p += 1
             if p >= npasses:
                 break
@@ -1558,8 +1467,7 @@ def decode_codeblock(
             full = ys + 4 <= h
             ye = ys + 4 if full else h
             event = False
-            skip_l = quiet_l = None
-            if np is not None and full:
+            if full:
                 # strip snapshot: a column whose four pixels are all
                 # visited|significant consumes NO decisions — that
                 # only grows during the pass, so skip flags stay
@@ -1580,23 +1488,10 @@ def decode_codeblock(
             for x in range(w):
                 y = ys
                 if full:
-                    i0 = ys * w + x
-                    if skip_l is not None:
-                        if skip_l[x]:
-                            continue
-                        if event:
-                            qcol = not (
-                                visited[i0] or sig[i0] or cidx[i0]
-                                or visited[i0 + w] or sig[i0 + w]
-                                or cidx[i0 + w]
-                                or visited[i0 + 2 * w]
-                                or sig[i0 + 2 * w] or cidx[i0 + 2 * w]
-                                or visited[i0 + 3 * w]
-                                or sig[i0 + 3 * w] or cidx[i0 + 3 * w]
-                            )
-                        else:
-                            qcol = quiet_l[x]
-                    else:
+                    if skip_l[x]:
+                        continue
+                    if event:
+                        i0 = ys * w + x
                         qcol = not (
                             visited[i0] or sig[i0] or cidx[i0]
                             or visited[i0 + w] or sig[i0 + w]
@@ -1606,6 +1501,8 @@ def decode_codeblock(
                             or visited[i0 + 3 * w] or sig[i0 + 3 * w]
                             or cidx[i0 + 3 * w]
                         )
+                    else:
+                        qcol = quiet_l[x]
                     if qcol:
                         # -- inlined MQ DECODE (run-length ctx) --
                         state = run_state

@@ -2879,21 +2879,14 @@ def _lex_content_fast(
 def _iter_content_ops(content: bytes, wanted: frozenset | None = None):
     """Lex a content stream into ``(operator, operands)`` pairs —
     the shared front end of :func:`content_text` (stream order) and
-    :func:`content_text_layout` (reading order). Clean streams take
-    :func:`_lex_content_fast`; anything unusual delegates to the
-    exact match-loop lexer below, whose behavior (down to its
+    :func:`content_text_layout` (reading order). Every stream, whatever its size, first
+    tries :func:`_lex_content_fast`; anything unusual delegates to
+    the exact match-loop lexer below, whose behavior (down to its
     exceptions on malformed input) is the contract.
 
     A yielded operand list is only valid until the next iteration:
     the match loop reuses one list and clears it after each yield.
     Copy it (``list(operands)``) to keep it."""
-    # tiny streams (a heading page, a stamp) lex cheaper through the
-    # match loop: the findall pass has per-call fixed cost (token
-    # tuple list, container bookkeeping) that only pays off once a
-    # stream carries a few dozen tokens
-    if len(content) < 1024:
-        yield from _iter_content_ops_matchloop(content, wanted)
-        return
     ops = _lex_content_fast(content, wanted)
     if ops is None:
         yield from _iter_content_ops_matchloop(content, wanted)

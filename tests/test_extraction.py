@@ -208,6 +208,71 @@ def test_observed_metrics_ride_along_with_one_action(spark, tmp_path):
     assert got["n_errors"] == 100
 
 
+def test_observed_counts_zero_errors_on_empty_input(spark):
+    from pdf2dataset_spark.plans.progress import observed
+
+    df = spark.range(0).selectExpr("id", "CAST(NULL AS STRING) AS error")
+    audited, obs = observed(df)
+    assert audited.collect() == []
+    assert obs.get == {"n_rows": 0, "n_errors": 0}
+
+
+def _fused_rows_in_process(docs: dict[str, bytes], features, codec):
+    """Run the fused pass's batch function in this process, so a
+    test-local codec class never has to reach a Spark worker."""
+    import pyarrow as pa
+
+    class _Manifest:
+        def mapInArrow(self, fn, schema):
+            self.run = fn
+            return self
+
+    m = extract_features(_Manifest(), features, codec=codec)
+    batch = pa.RecordBatch.from_pydict(
+        {"path": list(docs), "content": list(docs.values())},
+        schema=pa.schema([("path", pa.string()), ("content", pa.binary())]),
+    )
+    return [r for out in m.run(iter([batch])) for r in out.to_pylist()]
+
+
+#: features backed by optional ``DocumentCodec`` capabilities
+_CAPABILITY_FEATURES = [
+    "word_boxes", "paragraphs", "body_paragraphs", "artifact_text_rate",
+    "hidden_text_rate", "creation_date", "mod_date",
+]
+
+
+def test_capability_features_are_null_for_text_codec():
+    from pdf2dataset_spark.sources.codecs import TextBytesCodec
+
+    rows = _fused_rows_in_process(
+        {"a.txt": b"one\ftwo"}, _CAPABILITY_FEATURES, TextBytesCodec()
+    )
+    assert [r["page"] for r in rows] == [1, 2]
+    for r in rows:
+        assert r["error"] is None
+        assert all(r[name] is None for name in _CAPABILITY_FEATURES)
+
+
+def test_body_paragraphs_type_error_is_an_error_not_a_retry():
+    """A TypeError inside ``page_paragraphs`` must surface as the
+    row's error, never fall back to the paragraphs with artifacts."""
+    from pdf2dataset_spark.sources.codecs import TextBytesCodec
+
+    class _Codec(TextBytesCodec):
+        def page_paragraphs(self, handle, page, drop_artifacts=False):
+            if drop_artifacts:
+                raise TypeError("artifact filter failed")
+            return [handle[page - 1]]
+
+    (row,) = _fused_rows_in_process(
+        {"a.txt": b"body"}, ["paragraphs", "body_paragraphs"], _Codec()
+    )
+    assert row["paragraphs"] == '["body"]'
+    assert row["body_paragraphs"] is None
+    assert "TypeError: artifact filter failed" in row["error"]
+
+
 def test_directory_resume_adds_no_rows(spark, tmp_path):
     from pdf2dataset_spark.extraction import ExtractionPipeline
 

@@ -149,7 +149,10 @@ class TestEBCOT:
     @pytest.mark.parametrize("band", ["LL", "HL", "LH", "HH"])
     def test_codeblock_roundtrip(self, band):
         rng = random.Random(hash(band) & 0xFFFF)
-        for (w, h) in [(1, 1), (4, 4), (8, 5), (16, 16), (13, 9)]:
+        # one pixel up to a full 64x64 block, odd sides and partial
+        # last strips included
+        for (w, h) in [(1, 1), (4, 4), (8, 5), (16, 16), (13, 9),
+                       (32, 32), (45, 23), (64, 17), (64, 64)]:
             for mag in (1, 7, 255, 2047):
                 coeffs = [rng.randrange(-mag, mag + 1) for _ in range(w * h)]
                 data, npasses, nplanes = encode_codeblock(coeffs, w, h, band)
