@@ -2749,8 +2749,11 @@ _CONTENT_TOKENS_RE = re.compile(
     rb"|(\[(?:(?>[\x00\t\n\x0c\r ]*"
     rb"(?:[+-]?(?:\d+\.\d*|\.\d+|\d+)|\([^\\()]*\))))*+"
     rb"[\x00\t\n\x0c\r ]*\])"
-    # 4 flat literal string (escapes allowed, no nested parens)
-    rb"|(\((?:[^\\()]|\\[\s\S])*\))"
+    # 4 flat literal string (escapes allowed, no nested parens); a
+    #   backslash is only ever consumed as an escape pair, so the body
+    #   runs as possessive character-class loops between escapes
+    #   instead of one alternation per byte
+    rb"|(\([^\\()]*+(?:\\[\s\S][^\\()]*+)*+\))"
     # 5 container delimiters and hex strings (hex digits + PDF ws
     #   only — anything else must take the exact path to reproduce
     #   its error behavior)

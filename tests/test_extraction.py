@@ -290,6 +290,87 @@ def test_directory_resume_adds_no_rows(spark, tmp_path):
     assert spark.read.parquet(out).count() == first
 
 
+def test_resume_probe_skips_the_read_on_a_missing_path(spark, tmp_path, monkeypatch):
+    """A first run's output path does not exist: ``load_done`` answers
+    None from the path probe without starting a parquet read (whose
+    path-not-found error costs ~60 ms of driver time per job)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from pdf2dataset_spark.operators.resume import load_done
+
+    calls = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        calls.append(paths)
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    assert load_done(spark, str(tmp_path / "missing.parquet"), ["path"]) is None
+    assert load_done(spark, str(tmp_path / "none-*.parquet"), ["path"]) is None
+    assert calls == []
+
+
+def test_resume_probe_reads_written_and_globbed_output(spark, tmp_path):
+    from pdf2dataset_spark.operators.resume import load_done
+
+    out = str(tmp_path / "out.parquet")
+    spark.createDataFrame([("a.pdf", 1), ("b.pdf", 2)], "path string, page int") \
+        .write.parquet(out)
+    for path in (out, "file:" + out, str(tmp_path / "*.parquet")):
+        done = load_done(spark, path, ["path"])
+        assert sorted(r.path for r in done.collect()) == ["a.pdf", "b.pdf"]
+    # a directory that exists but holds no parquet: no keys, no error
+    (tmp_path / "empty").mkdir()
+    assert load_done(spark, str(tmp_path / "empty"), ["path"]) is None
+
+
+class TestFromDictPartitioning:
+    def test_partitions_scale_with_bytes_not_core_count(self, spark):
+        from pdf2dataset_spark.sources.memory import _TARGET_BYTES_PER_SLICE
+
+        tiny = from_dict(spark, {"a.pdf": b"x" * 100})
+        assert tiny.rdd.getNumPartitions() == 1
+        n_docs, doc_bytes = 12, _TARGET_BYTES_PER_SLICE // 2
+        mid = from_dict(
+            spark, {f"d{i}.pdf": b"y" * doc_bytes for i in range(n_docs)}
+        )
+        expect = min(
+            spark.sparkContext.defaultParallelism,
+            -(-(n_docs * doc_bytes) // _TARGET_BYTES_PER_SLICE),
+        )
+        assert mid.rdd.getNumPartitions() == expect
+
+    def test_schema_and_rows_survive_arrow_ship(self, spark):
+        payload = b"\x00\xff\x89PNG binary"
+        df = from_dict(spark, {"z.bin": payload, "a.bin": b"first"})
+        assert df.schema.simpleString() == "struct<path:string,content:binary>"
+        rows = df.orderBy("path").collect()
+        assert [r.path for r in rows] == ["a.bin", "z.bin"]
+        assert bytes(rows[1].content) == payload
+
+    def test_empty_dict(self, spark):
+        df = from_dict(spark, {})
+        assert df.count() == 0
+        assert df.schema.simpleString() == "struct<path:string,content:binary>"
+
+    def test_arrow_disabled_session_gives_the_same_manifest(self, spark):
+        from pdf2dataset_spark.sources.memory import _TARGET_BYTES_PER_SLICE
+
+        off = spark.newSession()
+        off.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+        docs = {f"d{i}.pdf": bytes([i]) * (_TARGET_BYTES_PER_SLICE // 3) for i in range(9)}
+        docs["e.pdf"] = b""
+        got = [from_dict(s, docs) for s in (spark, off)]
+        assert got[0].schema == got[1].schema
+        assert got[0].rdd.getNumPartitions() == got[1].rdd.getNumPartitions()
+        rows = [
+            [(r.path, bytes(r.content)) for r in df.orderBy("path").collect()]
+            for df in got
+        ]
+        assert rows[0] == rows[1] == sorted(docs.items())
+
+
 def test_directory_scan_balances_partitions_by_bytes(spark, tmp_path):
     """A few large documents among many small ones: each scan task
     gets about an equal share of the bytes, instead of the first task

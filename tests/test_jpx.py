@@ -148,7 +148,7 @@ class TestTagTree:
 class TestEBCOT:
     @pytest.mark.parametrize("band", ["LL", "HL", "LH", "HH"])
     def test_codeblock_roundtrip(self, band):
-        rng = random.Random(hash(band) & 0xFFFF)
+        rng = random.Random(band)
         # one pixel up to a full 64x64 block, odd sides and partial
         # last strips included
         for (w, h) in [(1, 1), (4, 4), (8, 5), (16, 16), (13, 9),

@@ -317,42 +317,6 @@ class TestJpegBitReader:
         assert br.read_bits(8) == 0xCD
 
 
-# ------------------------------------------- in-memory manifest source
-class TestFromDictPartitioning:
-    def test_partitions_scale_with_bytes_not_core_count(self, spark):
-        from pdf2dataset_spark.sources import from_dict
-        from pdf2dataset_spark.sources.memory import _TARGET_BYTES_PER_SLICE
-
-        tiny = from_dict(spark, {"a.pdf": b"x" * 100})
-        assert tiny.rdd.getNumPartitions() == 1
-        n_docs, doc_bytes = 12, _TARGET_BYTES_PER_SLICE // 2
-        mid = from_dict(
-            spark, {f"d{i}.pdf": b"y" * doc_bytes for i in range(n_docs)}
-        )
-        expect = min(
-            spark.sparkContext.defaultParallelism,
-            -(-(n_docs * doc_bytes) // _TARGET_BYTES_PER_SLICE),
-        )
-        assert mid.rdd.getNumPartitions() == expect
-
-    def test_schema_and_rows_survive_arrow_ship(self, spark):
-        from pdf2dataset_spark.sources import from_dict
-
-        payload = b"\x00\xff\x89PNG binary"
-        df = from_dict(spark, {"z.bin": payload, "a.bin": b"first"})
-        assert df.schema.simpleString() == "struct<path:string,content:binary>"
-        rows = df.orderBy("path").collect()
-        assert [r.path for r in rows] == ["a.bin", "z.bin"]
-        assert bytes(rows[1].content) == payload
-
-    def test_empty_dict(self, spark):
-        from pdf2dataset_spark.sources import from_dict
-
-        df = from_dict(spark, {})
-        assert df.count() == 0
-        assert df.schema.simpleString() == "struct<path:string,content:binary>"
-
-
 # --------------------------------------------- bounded ORDER BY helper
 class TestOrderedSmall:
     def test_total_order_and_single_partition_plan(self, spark):

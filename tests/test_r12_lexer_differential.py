@@ -46,6 +46,8 @@ TOKENS = [
     b"/F1", b"/", b"/Na#6de", b"/Long#20Name",
     b"(simple)", b"()", b"(with \\(escape\\))", b"(nested (paren) run)",
     b"(octal \\101\\102)", b"(line\\\ncont)", b"(unterminated",
+    b"(a\\\\)", b"(x\\\\\\))", b"(tail\\",
+    b"(" + b"long \\) body \\\\ " * 256 + b")",
     b"<48656C6C6F>", b"<48 65 6c>", b"<>", b"<zz>", b"<0>",
     b"[1 2 3]", b"[(a) -12 (b)]", b"[]", b"[(esc\\)ed) 5]",
     b"[/Name (s) 1]", b"[[1 2] 3]", b"[true false null]",

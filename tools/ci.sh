@@ -19,6 +19,9 @@ echo "warn markers: $WARN_DIR"
 echo "== pytest =="
 python -m pytest tests/ -q
 
+echo "== benchmark harness tests =="
+python -m pytest perfbench/tests -q
+
 echo "== oracle gate ($SF) =="
 python tools/verify_local.py --sf "$SF"
 
