@@ -445,12 +445,13 @@ def extract_features(
     Returns the page-grain DataFrame with the declared schema.
 
     ``page_range=(lo, hi)`` pushes a page predicate INTO the fan-out
-    (SURVEY §4.2 stretch): pages outside the range are never
-    extracted/rendered at all — the operator-level analog of not
-    generating unwanted tasks, and far cheaper than filtering after
-    an expensive render. A Catalyst rule could derive this from a
-    downstream ``filter(page <= N)`` automatically; the explicit
-    parameter keeps the plan obvious.
+    (SURVEY §4.2 stretch): no feature runs on a page outside the
+    range, though ``PdfCodec.open`` still lays out its text (ROADMAP
+    D4) — the operator-level analog of not generating unwanted
+    tasks, and far cheaper than filtering after an expensive render.
+    A Catalyst rule could derive this from a downstream
+    ``filter(page <= N)`` automatically; the explicit parameter keeps
+    the plan obvious.
     """
     feats = resolve_features(features)
     schema = output_schema(feats)

@@ -150,27 +150,29 @@ class TextBytesCodec(DocumentCodec):
 @dataclass
 class _PdfHandle:
     """Open-document handle for :class:`PdfCodec`: raw bytes (for the
-    raster paths), eagerly parsed page texts, and the parsed document
-    (parse ONCE per doc; metadata reads reuse it).
+    raster paths), the parsed document (parse ONCE per doc; metadata
+    reads reuse it) and the reading-order text of EVERY page, laid
+    out by :meth:`PdfCodec.open` — pages outside the pass's
+    ``page_range`` too, which the features then skip (lazy layout is
+    ROADMAP D4).
 
-    ``image_slot`` holds ONE page's decoded embedded images as
-    ``(page, entries, scan)``: the ``page_images(decode_pixels=True)``
-    entries, plus the :meth:`PdfCodec._scan_pixels` result once
-    computed (``_UNSET`` before). Every image consumer of a page —
-    ``n_images``, ``embedded_image(_meta)``, ``image``, ``ocr``, the
-    composite render — reads it, so a page's payload decodes once.
-    Reading another page replaces it: a handle never holds more than
-    one page's pixels. The fused pass visits pages in order; an
-    out-of-order caller just decodes again."""
+    ``page_slot`` memoizes what the features derive from ONE page
+    (see :meth:`PdfCodec._memo`): ``entries``, its
+    ``page_images(decode_pixels=True)``; ``scan``, the
+    :meth:`PdfCodec._scan_pixels` result; ``runs``, its
+    ``minipdf.page_runs``. The image features (``n_images``,
+    ``embedded_image(_meta)``, ``image``, ``ocr``, the composite
+    render) and the text features past ``text`` (``word_boxes``,
+    ``(body_)paragraphs``, the artifact and hidden text rates) all
+    read it, so a page decodes once and is interpreted once after
+    ``open``. Reading another page replaces it: a handle never holds
+    more than one page's pixels. The fused pass visits pages in
+    order; an out-of-order caller just computes again."""
 
     content: bytes
     pages: list[str]
     doc: Any = None
-    image_slot: tuple | None = None
-
-
-#: ``image_slot`` scan marker: the scan route has not run for the page
-_UNSET = object()
+    page_slot: dict | None = None
 
 
 class PdfCodec(DocumentCodec):
@@ -213,16 +215,12 @@ class PdfCodec(DocumentCodec):
         dpi: int = 200,
         image_size: str | None = None,
         password: str = "",
-        layout: bool = True,
     ):
         self.ocr_lang = ocr_lang
         self.image_format = image_format
         self.dpi = dpi
         self.image_size = image_size
         self.password = password
-        #: reading-order text (pdftotext parity: XY-cut column/section
-        #: ordering, kern-gap word breaks); False = raw stream order.
-        self.layout = layout
 
     def open(self, content: bytes) -> "_PdfHandle":
         from pdf2dataset_spark.sources import minipdf
@@ -230,32 +228,14 @@ class PdfCodec(DocumentCodec):
         doc = minipdf.PdfDocument(
             content, password=self.password.encode("latin-1", errors="replace")
         )
-        if self.layout:
-            # reading order honors the inheritable /Rotate + /MediaBox
-            # and inlines /Form XObject text (letterheads, OCR layers)
-            pages = [
-                minipdf.content_text_layout(
-                    doc.page_content(p),
-                    fonts=doc.page_fonts(p),
-                    rotate=minipdf.page_rotation(doc, p),
-                    media_box=minipdf.page_media_box(doc, p),
-                    forms=doc.page_forms(p),
-                    ext_gstates=doc.page_ext_gstates(p),
-                    props=doc.page_properties(p),
-                )
-                for p in doc.pages()
-            ]
-        else:
-            pages = [
-                minipdf.content_text(
-                    doc.page_content(p),
-                    fonts=doc.page_fonts(p),
-                    forms=doc.page_forms(p),
-                    ext_gstates=doc.page_ext_gstates(p),
-                    props=doc.page_properties(p),
-                )
-                for p in doc.pages()
-            ]
+        # reading order (pdftotext parity: XY-cut column/section
+        # ordering, kern-gap word breaks) honors the inheritable
+        # /Rotate + /MediaBox and inlines /Form XObject text
+        # (letterheads, OCR layers)
+        pages = [
+            minipdf.runs_layout_text(minipdf.page_runs(doc, p))
+            for p in doc.pages()
+        ]
         return _PdfHandle(content=content, pages=pages, doc=doc)
 
     def doc_info(self, handle: "_PdfHandle") -> dict[str, str]:
@@ -2441,21 +2421,12 @@ class PdfCodec(DocumentCodec):
 
     def page_word_boxes(self, handle: "_PdfHandle", page: int) -> list[dict]:
         """Word-level boxes in reading order (pdftotext -bbox shape)
-        — see minipdf.content_word_boxes."""
+        — see minipdf.runs_word_boxes."""
         if handle.doc is None:
             return []
         from pdf2dataset_spark.sources import minipdf
 
-        pg = handle.doc.pages()[page - 1]
-        return minipdf.content_word_boxes(
-            handle.doc.page_content(pg),
-            fonts=handle.doc.page_fonts(pg),
-            rotate=minipdf.page_rotation(handle.doc, pg),
-            media_box=minipdf.page_media_box(handle.doc, pg),
-            forms=handle.doc.page_forms(pg),
-            ext_gstates=handle.doc.page_ext_gstates(pg),
-            props=handle.doc.page_properties(pg),
-        )
+        return minipdf.runs_word_boxes(self._page_runs(handle, page))
 
     def page_artifact_char_fraction(
         self, handle: "_PdfHandle", page: int
@@ -2470,22 +2441,8 @@ class PdfCodec(DocumentCodec):
             return 0.0
         from pdf2dataset_spark.sources import minipdf
 
-        doc = handle.doc
-        pg = doc.pages()[page - 1]
-        runs = minipdf._text_runs(
-            doc.page_content(pg),
-            fonts=doc.page_fonts(pg),
-            forms=doc.page_forms(pg),
-            ext_gstates=doc.page_ext_gstates(pg),
-            props=doc.page_properties(pg),
-        )
-        tot = art = 0
-        for r in runs:
-            n = sum(1 for ch in r["text"] if not ch.isspace())
-            tot += n
-            if r.get("artifact"):
-                art += n
-        return art / tot if tot else 0.0
+        return minipdf.runs_char_fraction(
+            self._page_runs(handle, page), lambda r: r.get("artifact"))
 
     def page_hidden_char_fraction(
         self, handle: "_PdfHandle", page: int
@@ -2502,22 +2459,9 @@ class PdfCodec(DocumentCodec):
             return 0.0
         from pdf2dataset_spark.sources import minipdf
 
-        doc = handle.doc
-        pg = doc.pages()[page - 1]
-        runs = minipdf._text_runs(
-            doc.page_content(pg),
-            fonts=doc.page_fonts(pg),
-            forms=doc.page_forms(pg),
-            ext_gstates=doc.page_ext_gstates(pg),
-            props=doc.page_properties(pg),
-        )
-        tot = hid = 0
-        for r in runs:
-            n = sum(1 for ch in r["text"] if not ch.isspace())
-            tot += n
-            if r.get("mode", 0) in (3, 7):
-                hid += n
-        return hid / tot if tot else 0.0
+        return minipdf.runs_char_fraction(
+            self._page_runs(handle, page),
+            lambda r: r.get("mode", 0) in (3, 7))
 
     def page_paragraphs(
         self, handle: "_PdfHandle", page: int,
@@ -2527,22 +2471,13 @@ class PdfCodec(DocumentCodec):
         reflowed with line-break dehyphenation; blank-line gaps and
         column jumps split; ``drop_artifacts=True`` removes
         /Artifact pagination furniture first) — see
-        minipdf.content_paragraphs."""
+        minipdf.runs_paragraphs."""
         if handle.doc is None:
             return []
         from pdf2dataset_spark.sources import minipdf
 
-        pg = handle.doc.pages()[page - 1]
-        return minipdf.content_paragraphs(
-            handle.doc.page_content(pg),
-            fonts=handle.doc.page_fonts(pg),
-            rotate=minipdf.page_rotation(handle.doc, pg),
-            media_box=minipdf.page_media_box(handle.doc, pg),
-            forms=handle.doc.page_forms(pg),
-            ext_gstates=handle.doc.page_ext_gstates(pg),
-            props=handle.doc.page_properties(pg),
-            drop_artifacts=drop_artifacts,
-        )
+        return minipdf.runs_paragraphs(
+            self._page_runs(handle, page), drop_artifacts)
 
     def page_embedded_images(self, handle: "_PdfHandle", page: int) -> list[dict]:
         """Embedded image XObjects of one page (pdfimages-shaped; see
@@ -2558,19 +2493,36 @@ class PdfCodec(DocumentCodec):
         ]
 
     @staticmethod
-    def _page_images(handle: "_PdfHandle", page: int) -> list[dict]:
-        """``page_images(decode_pixels=True)`` of ``page`` through the
-        handle's one-page ``image_slot``: the decoders run once per
-        page however many image features read it (``page_images``
-        runs them for ``decodable`` anyway, so keeping the pixels
-        costs no extra decode). Callers must not mutate the entries."""
-        slot = handle.image_slot
-        if slot is None or slot[0] != page:
-            doc = handle.doc
-            handle.image_slot = None  # free the old page before decoding
-            entries = doc.page_images(doc.pages()[page - 1], decode_pixels=True)
-            slot = handle.image_slot = (page, entries, _UNSET)
-        return slot[1]
+    def _memo(handle: "_PdfHandle", page: int, key: str, compute):
+        """``compute()`` for ``page``, memoized under ``key`` in the
+        handle's one-page ``page_slot``. Reading another page drops
+        the old page's slot first, so its pixels free before any new
+        decode. Callers must not mutate the values."""
+        slot = handle.page_slot
+        if slot is None or slot["page"] != page:
+            slot = handle.page_slot = {"page": page}
+        if key not in slot:
+            slot[key] = compute()
+        return slot[key]
+
+    def _page_images(self, handle: "_PdfHandle", page: int) -> list[dict]:
+        """``page_images(decode_pixels=True)`` of ``page``, memoized:
+        the decoders run once per page however many image features
+        read it (``page_images`` runs them for ``decodable`` anyway,
+        so keeping the pixels costs no extra decode)."""
+        doc = handle.doc
+        return self._memo(handle, page, "entries", lambda: doc.page_images(
+            doc.pages()[page - 1], decode_pixels=True))
+
+    def _page_runs(self, handle: "_PdfHandle", page: int) -> list[dict]:
+        """``minipdf.page_runs`` of ``page``, memoized: one
+        interpreter pass serves every text feature but ``text``
+        (which ``open`` laid out)."""
+        from pdf2dataset_spark.sources import minipdf
+
+        doc = handle.doc
+        return self._memo(handle, page, "runs", lambda: minipdf.page_runs(
+            doc, doc.pages()[page - 1]))
 
     def _scan_pixels(
         self, handle: "_PdfHandle", page: int
@@ -2582,23 +2534,24 @@ class PdfCodec(DocumentCodec):
         8-bit grayscale ``(w, h, pixels)``; else None. JPEG payloads
         go through the engine decoder (baseline or progressive);
         raw-sample payloads are used directly (RGB reduced to BT.601
-        luma). The result rides the handle's ``image_slot``, so the
-        image and ocr features share it."""
+        luma). The result is memoized, so the image and ocr features
+        share it."""
         if handle.doc is None or handle.pages[page - 1].strip():
             return None
         entries = self._page_images(handle, page)
-        if handle.image_slot[2] is not _UNSET:
-            return handle.image_slot[2]
-        best: tuple[int, int, bytes] | None = None
-        for e in entries:
-            gray = self._entry_gray(e, handle.doc)
-            if gray is None:
-                continue  # undecodable / sub-byte payloads: skip
-            w, h, px = gray
-            if best is None or w * h > best[0] * best[1]:
-                best = (w, h, px)
-        handle.image_slot = (page, entries, best)
-        return best
+
+        def largest() -> tuple[int, int, bytes] | None:
+            best = None
+            for e in entries:
+                gray = self._entry_gray(e, handle.doc)
+                if gray is None:
+                    continue  # undecodable / sub-byte payloads: skip
+                w, h, px = gray
+                if best is None or w * h > best[0] * best[1]:
+                    best = (w, h, px)
+            return best
+
+        return self._memo(handle, page, "scan", largest)
 
     def page_ocr(self, handle: "_PdfHandle", page: int) -> str:
         try:

@@ -4011,8 +4011,8 @@ def _reading_frame(
     display transform is the IDENTITY for upright-in-display text —
     a /Rotate page whose text displays sideways reads in the text's
     own frame with its original in-page coordinates, the poppler
-    convention. Shared by content_text_layout and
-    content_word_boxes so both surfaces agree on rotated pages."""
+    convention. Runs once per page (:func:`_display_runs`), so every
+    text surface agrees on rotated pages."""
     import math
 
     votes = [0, 0, 0, 0]
@@ -4042,40 +4042,70 @@ def _display_frame(
     return (h, w) if rotate in (90, 270) else (w, h)
 
 
-def content_word_boxes(
-    content: bytes,
-    fonts: dict[str, tuple] | None = None,
+def _display_runs(
+    runs: list[dict],
     rotate: int = 0,
     media_box: tuple[float, float, float, float] | None = None,
-    forms: dict | None = None,
-    ext_gstates: dict | None = None,
-    props: dict | None = None,
 ) -> list[dict]:
+    """Runs mapped (in place) into the page's displayed reading frame:
+    /Rotate and /MediaBox first (:func:`_rotate_runs`), then the
+    dominant-orientation vote (:func:`_reading_frame`). Every
+    reading-order surface starts from these runs."""
+    return _reading_frame(
+        _rotate_runs(runs, rotate, media_box),
+        frame=_display_frame(rotate, media_box),
+    )
+
+
+def _page_text_inputs(
+    doc: "PdfDocument", page: dict
+) -> tuple[dict, int, tuple[float, float, float, float]]:
+    """The one place that names a page's text-interpretation inputs:
+    ``(interpreter keywords, rotate, media_box)``. The keywords —
+    content stream, fonts, /Form XObjects, ExtGStates, named
+    marked-content properties (which carry the hidden optional
+    content) — fit both :func:`_text_runs` and :func:`content_text`;
+    /Rotate and /MediaBox place the runs in the displayed frame."""
+    content, fonts = doc.page_content(page), doc.page_fonts(page)
+    rotate, media_box = page_rotation(doc, page), page_media_box(doc, page)
+    return ({"content": content, "fonts": fonts,
+             "forms": doc.page_forms(page),
+             "ext_gstates": doc.page_ext_gstates(page),
+             "props": doc.page_properties(page)}, rotate, media_box)
+
+
+def page_runs(doc: "PdfDocument", page: dict) -> list[dict]:
+    """A page's text runs (one interpreter pass) in its displayed
+    reading frame: the input of every ``runs_*`` text surface.
+    Callers that share the list must not mutate it."""
+    kw, rotate, media_box = _page_text_inputs(doc, page)
+    return _display_runs(_text_runs(**kw), rotate, media_box)
+
+
+def _cut_lines(runs: list[dict]) -> list[list[dict]]:
+    """Reading-order line groups of display-frame runs: the XY-cut at
+    the page's median font size. Leaves the runs untouched."""
+    if not runs:
+        return []
+    sizes = sorted(r["size"] for r in runs)
+    return _xy_cut(runs, sizes[len(sizes) // 2])
+
+
+def runs_word_boxes(runs: list[dict]) -> list[dict]:
     """Word-level boxes (the ``pdftotext -bbox`` shape): every
     whitespace-delimited word with its device-space baseline box
     ``{word, x0, y0, x1, y1}``, in reading order (same XY-cut as
-    :func:`content_text_layout`). RTL lines stay in VISUAL order
+    :func:`runs_layout_text`). RTL lines stay in VISUAL order
     here — boxes are geometry, and per-word geometry has no logical
-    reordering (the text surface :func:`content_text_layout` is the
-    one that emits UAX #9 logical order). Run-start positions are
-    EXACT (they
-    come from the positioning operators; /Rotate pages are mapped
-    into the displayed frame first); intra-run word offsets use
-    the same deterministic 0.5 em/char advance estimate the layout
-    engine uses, so boxes are approximate but reproducible. y0 is the
+    reordering (the text surface is the one that emits UAX #9
+    logical order). Run-start positions are EXACT (they come from
+    the positioning operators; /Rotate pages are mapped into the
+    displayed frame first); intra-run word offsets use the same
+    deterministic 0.5 em/char advance estimate the layout engine
+    uses, so boxes are approximate but reproducible. y0 is the
     baseline, y1 = baseline + the device font size (ascent box)."""
-    runs = _reading_frame(
-        _rotate_runs(_text_runs(content, fonts, forms,
-                        ext_gstates=ext_gstates, props=props),
-             rotate, media_box),
-        frame=_display_frame(rotate, media_box),
-    )
     out: list[dict] = []
-    if not runs:
-        return out
-    sizes = sorted(r["size"] for r in runs)
-    med = sizes[len(sizes) // 2]
-    for line in _xy_cut(runs, med):
+    for line in _cut_lines(runs):
         for r in line:
             text = r["text"]
             n = len(text)
@@ -4105,21 +4135,34 @@ def content_word_boxes(
     return out
 
 
+def content_word_boxes(
+    content: bytes,
+    fonts: dict[str, tuple] | None = None,
+    rotate: int = 0,
+    media_box: tuple[float, float, float, float] | None = None,
+    forms: dict | None = None,
+    ext_gstates: dict | None = None,
+    props: dict | None = None,
+) -> list[dict]:
+    """:func:`runs_word_boxes` of one content stream, with its runs
+    mapped into the displayed frame of ``rotate``/``media_box``."""
+    return runs_word_boxes(_display_runs(
+        _text_runs(content, fonts, forms,
+                   ext_gstates=ext_gstates, props=props),
+        rotate, media_box))
+
+
 def extract_page_word_boxes(data: bytes) -> list[list[dict]]:
     """Per-page word boxes of a PDF, in page order (the
     ``pdftotext -bbox`` primitive), ToUnicode-aware."""
     doc = PdfDocument(data)
-    return [
-        content_word_boxes(
-            doc.page_content(p),
-            fonts=doc.page_fonts(p),
-            rotate=page_rotation(doc, p),
-            media_box=page_media_box(doc, p),
-            forms=doc.page_forms(p),
-            ext_gstates=doc.page_ext_gstates(p),
-        )
-        for p in doc.pages()
-    ]
+    return [runs_word_boxes(page_runs(doc, p)) for p in doc.pages()]
+
+
+def runs_layout_text(runs: list[dict]) -> str:
+    """Reading-order text of display-frame runs — see
+    :func:`content_text_layout`."""
+    return "\n".join(t for _, _, t, _ in _layout_lines(runs))
 
 
 def content_text_layout(
@@ -4141,42 +4184,24 @@ def content_text_layout(
     column streams. ``rotate``/``media_box`` (the page's inheritable
     /Rotate and /MediaBox) map runs into the DISPLAYED frame first —
     see :func:`_rotate_runs`."""
-    return "\n".join(
-        t for _, _, t, _ in _layout_lines(content, fonts, rotate,
-                                          media_box, forms, ext_gstates,
-                                          props)
-    )
+    return runs_layout_text(_display_runs(
+        _text_runs(content, fonts, forms,
+                   ext_gstates=ext_gstates, props=props),
+        rotate, media_box))
 
 
-def _layout_lines(
-    content: bytes,
-    fonts: dict[str, tuple] | None = None,
-    rotate: int = 0,
-    media_box: tuple[float, float, float, float] | None = None,
-    forms: dict | None = None,
-    ext_gstates: dict | None = None,
-    props: dict | None = None,
-) -> list[tuple[float, float, str, bool]]:
-    """Reading-order lines as ``(y, size, text, artifact)`` — the
-    shared back end of :func:`content_text_layout` and
-    :func:`content_paragraphs`. ``artifact`` is True when EVERY run
-    on the line sits inside /Artifact marked content (ISO 32000-1
-    §14.8.2.2 — running headers/footers/page numbers in tagged
-    PDFs), the signal :func:`content_paragraphs` uses to drop
-    pagination furniture from training text."""
-    runs = _reading_frame(
-        _rotate_runs(_text_runs(content, fonts, forms,
-                        ext_gstates=ext_gstates, props=props),
-             rotate, media_box),
-        frame=_display_frame(rotate, media_box),
-    )
-    if not runs:
-        return []
-    sizes = sorted(r["size"] for r in runs)
-    med = sizes[len(sizes) // 2]
-    lines = _xy_cut(runs, med)
-    out: list[tuple[float, float, str]] = []
-    for line in lines:
+def _layout_lines(runs: list[dict]) -> list[tuple[float, float, str, bool]]:
+    """Reading-order lines of display-frame runs as ``(y, size,
+    text, artifact)`` — the shared back end of
+    :func:`runs_layout_text` and :func:`runs_paragraphs`.
+    ``artifact`` is True when EVERY run on the line sits inside
+    /Artifact marked content (ISO 32000-1 §14.8.2.2 — running
+    headers/footers/page numbers in tagged PDFs), the signal
+    :func:`runs_paragraphs` uses to drop pagination furniture from
+    training text. The runs are read, never written: a page's runs
+    feed several surfaces."""
+    out: list[tuple[float, float, str, bool]] = []
+    for line in _cut_lines(runs):
         # TeX \copyright overlay (round-10, from the real-corpus
         # libtasn1.pdf): plain TeX composes © by painting a text
         # 'c' INSIDE the CMSY circlecopyrt glyph (\ooalign). Once
@@ -4191,14 +4216,14 @@ def _layout_lines(
         # center sits >= ~0.5 em past the ©'s center, while a true
         # \ooalign overlay centers within ~0.3 em (0.28 em on the
         # real libtasn1 page) and shares the baseline.
-        cps = [r for r in line if r["text"] == "©"]
+        # id of each © run on the line -> the run as folded so far
+        cps = {id(r): r for r in line if r["text"] == "©"}
         if cps:
             kept = []
             for r in line:
                 host = next(
-                    (q for q in cps
-                     if q is not r
-                     and q["x"] - 0.1 <= r["x"] <= q["x_end"]
+                    (k for k, q in cps.items()
+                     if q["x"] - 0.1 <= r["x"] <= q["x_end"]
                      and abs((r["x"] + r["x_end"])
                              - (q["x"] + q["x_end"])) / 2.0
                      <= 0.35 * q["size"]
@@ -4209,14 +4234,15 @@ def _layout_lines(
                 if host is None:
                     kept.append(r)
                 else:
-                    # fold the companion into the ©: its extent is
-                    # the union, and the © stands as its own word
-                    # (TeX sources always set \copyright off with
-                    # spaces; the char-estimate gap test undershoots
-                    # the compound's true metrics)
-                    host["x_end"] = max(host["x_end"], r["x_end"])
-                    host["_word"] = True
-            line = kept
+                    # fold the companion into a copy of the ©: its
+                    # extent is the union, and the © stands as its
+                    # own word (TeX sources always set \copyright off
+                    # with spaces; the char-estimate gap test
+                    # undershoots the compound's true metrics)
+                    q = cps[host]
+                    cps[host] = {**q, "x_end": max(q["x_end"], r["x_end"]),
+                                 "_word": True}
+            line = [cps.get(id(r), r) for r in kept]
         parts: list[str] = []
         for i, r in enumerate(line):
             if i and parts and any(parts):
@@ -4252,15 +4278,8 @@ def _layout_lines(
     return out
 
 
-def content_paragraphs(
-    content: bytes,
-    fonts: dict[str, tuple] | None = None,
-    rotate: int = 0,
-    media_box: tuple[float, float, float, float] | None = None,
-    forms: dict | None = None,
-    ext_gstates: dict | None = None,
-    props: dict | None = None,
-    drop_artifacts: bool = False,
+def runs_paragraphs(
+    runs: list[dict], drop_artifacts: bool = False
 ) -> list[str]:
     """PARAGRAPH segmentation over the reading-order lines — the
     layout-aware chunking unit a training pipeline wants. A new
@@ -4285,9 +4304,7 @@ def content_paragraphs(
     pure function of the positioning operators."""
     lines = [
         (y, size, t)
-        for y, size, t, art in _layout_lines(content, fonts, rotate,
-                                             media_box, forms,
-                                             ext_gstates, props)
+        for y, size, t, art in _layout_lines(runs)
         if t.strip() and not (drop_artifacts and art)
     ]
     if not lines:
@@ -4330,6 +4347,36 @@ def content_paragraphs(
         return out
 
     return [reflow(p) for p in paras]
+
+
+def content_paragraphs(
+    content: bytes,
+    fonts: dict[str, tuple] | None = None,
+    rotate: int = 0,
+    media_box: tuple[float, float, float, float] | None = None,
+    forms: dict | None = None,
+    ext_gstates: dict | None = None,
+    props: dict | None = None,
+    drop_artifacts: bool = False,
+) -> list[str]:
+    """:func:`runs_paragraphs` of one content stream, with its runs
+    mapped into the displayed frame of ``rotate``/``media_box``."""
+    return runs_paragraphs(_display_runs(
+        _text_runs(content, fonts, forms,
+                   ext_gstates=ext_gstates, props=props),
+        rotate, media_box), drop_artifacts)
+
+
+def runs_char_fraction(runs: list[dict], counted) -> float:
+    """Share of the runs' non-whitespace characters that sit in runs
+    for which ``counted(run)`` holds; 0.0 for a page without text."""
+    tot = hit = 0
+    for r in runs:
+        n = sum(1 for ch in r["text"] if not ch.isspace())
+        tot += n
+        if counted(r):
+            hit += n
+    return hit / tot if tot else 0.0
 
 
 # ---------------------------------------------------------------------
@@ -5075,25 +5122,8 @@ def extract_page_texts(data: bytes, layout: bool = False) -> list[str]:
     see :func:`content_text_layout`."""
     doc = PdfDocument(data)
     if layout:
-        return [
-            content_text_layout(
-                doc.page_content(p),
-                fonts=doc.page_fonts(p),
-                rotate=page_rotation(doc, p),
-                media_box=page_media_box(doc, p),
-                forms=doc.page_forms(p),
-                ext_gstates=doc.page_ext_gstates(p),
-                props=doc.page_properties(p),
-            )
-            for p in doc.pages()
-        ]
-    return [
-        content_text(doc.page_content(p), fonts=doc.page_fonts(p),
-                     forms=doc.page_forms(p),
-                     ext_gstates=doc.page_ext_gstates(p),
-                     props=doc.page_properties(p))
-        for p in doc.pages()
-    ]
+        return [runs_layout_text(page_runs(doc, p)) for p in doc.pages()]
+    return [content_text(**_page_text_inputs(doc, p)[0]) for p in doc.pages()]
 
 
 def extract_page_images(

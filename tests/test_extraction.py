@@ -273,6 +273,65 @@ def test_body_paragraphs_type_error_is_an_error_not_a_retry():
     assert "TypeError: artifact filter failed" in row["error"]
 
 
+#: text features that derive from a page's interpreted runs
+_TEXT_FEATURES = ["text", "paragraphs", "body_paragraphs", "word_boxes",
+                  "artifact_text_rate", "hidden_text_rate"]
+_LIBTASN1 = "/usr/share/doc/libtasn1-doc/libtasn1.pdf"
+_SMI = "/usr/share/doc/shared-mime-info/shared-mime-info-spec.pdf"
+
+
+def _read_or_skip(path: str) -> bytes:
+    import os
+
+    if not os.path.exists(path):
+        pytest.skip(f"{path} not installed")
+    with open(path, "rb") as f:
+        return f.read()
+
+
+def test_text_feature_order_does_not_change_values():
+    """The text features share one memoized run list per page: no
+    feature may alter it for the next. libtasn1.pdf has two pages with
+    the TeX \\copyright overlay, whose fold must not touch the
+    shared runs."""
+    from pdf2dataset_spark.operators.features import PageContext
+    from pdf2dataset_spark.sources.codecs import PdfCodec
+
+    pdf = _read_or_skip(_LIBTASN1)
+    order = ["word_boxes", "text", "paragraphs", "body_paragraphs"]
+    codec = PdfCodec()
+    got = []
+    for feats in (order, order[::-1]):
+        handle = codec.open(pdf)
+        got.append([
+            {f.name: f.fn(PageContext(path="l.pdf", page=page,
+                                      codec=codec, handle=handle))
+             for f in resolve_features(feats)}
+            for page in range(1, codec.page_count(handle) + 1)
+        ])
+    assert len(got[0]) == 36
+    assert sum("©" in row["text"] for row in got[0]) == 2
+    assert got[0] == got[1]
+
+
+def test_text_features_interpret_each_page_at_most_twice():
+    """``open`` lays out every page, and the page memo serves every
+    other text feature from one more interpreter pass."""
+    from unittest import mock
+
+    from pdf2dataset_spark.sources import minipdf
+    from pdf2dataset_spark.sources.codecs import PdfCodec
+
+    pdf = _read_or_skip(_SMI)
+    with mock.patch.object(
+        minipdf, "_text_runs", wraps=minipdf._text_runs
+    ) as spy:
+        rows = _fused_rows_in_process({"s.pdf": pdf}, _TEXT_FEATURES,
+                                      PdfCodec())
+    assert len(rows) == 17 and all(r["error"] is None for r in rows)
+    assert spy.call_count <= 2 * len(rows)
+
+
 def test_directory_resume_adds_no_rows(spark, tmp_path):
     from pdf2dataset_spark.extraction import ExtractionPipeline
 

@@ -4516,11 +4516,22 @@ class TestOptionalContent:
         pdf = self._doc(
             b"<< /OCGs [20 0 R 21 0 R] /D << /OFF [21 0 R] >> >>",
             self.EXTRA, self.PROPS)
-        for layout in (True, False):
-            codec = PdfCodec(layout=layout)
-            h = codec.open(pdf)
-            t = codec.page_text(h, 1)
+        codec = PdfCodec()
+        # reading order, then stream order (the content_text walker)
+        for t in (codec.page_text(codec.open(pdf), 1),
+                  minipdf.extract_page_texts(pdf)[0]):
             assert "on layer" in t and "off layer" not in t
+
+    def test_word_boxes_hide_off_layer_on_both_surfaces(self):
+        pdf = self._doc(
+            b"<< /OCGs [20 0 R 21 0 R] /D << /OFF [21 0 R] >> >>",
+            self.EXTRA, self.PROPS)
+        codec = PdfCodec()
+        via_codec = codec.page_word_boxes(codec.open(pdf), 1)
+        (via_doc,) = minipdf.extract_page_word_boxes(pdf)
+        assert via_doc == via_codec
+        assert " ".join(b["word"] for b in via_doc) == \
+            "Visible body on layer"
 
     def test_no_ocproperties_shows_everything(self):
         base = minipdf.build_pdf(["Visible body"], extra_content=self.EXTRA)

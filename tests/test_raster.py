@@ -638,7 +638,7 @@ def test_headerless_and_truncated_jpegs_raise_valueerror():
 
 def test_scanned_page_decode_is_memoized_per_handle():
     """image + ocr features over a scanned page must share ONE decode
-    (the handle's image_slot), not re-decode the multi-megapixel
+    (the handle's page slot), not re-decode the multi-megapixel
     payload per feature."""
     from unittest import mock
 
@@ -784,11 +784,12 @@ class TestOneDecodePerPage:
         hd = codec.open(pdf)
         codec.page_image(hd, 1)
         codec.page_ocr(hd, 2)
-        page, entries, scan = hd.image_slot
-        assert page == 2
+        slot = hd.page_slot
+        assert slot["page"] == 2
+        entries = slot["entries"]
         assert [(e["width"], e["height"]) for e in entries] == [dims[1]]
         assert len(entries[0]["pixels"]) == dims[1][0] * dims[1][1]
-        assert scan[:2] == dims[1]
+        assert slot["scan"][:2] == dims[1]
 
     def test_rows_match_a_fresh_handle_per_page(self):
         from pdf2dataset_spark.operators.features import (
