@@ -37,18 +37,29 @@ if sys.version_info < (3, 11):
         f"(running {sys.version.split()[0]})"
     )
 
-from pdf2dataset_spark.session import get_spark
-from pdf2dataset_spark.io import load_table, load_tables, TABLES
-from pdf2dataset_spark.extraction import extract, extract_text, ExtractionPipeline
+#: public name -> the submodule that defines it. The names load on
+#: first use, so a Python worker that imports one submodule (say
+#: ``worker``) does not load the session, IO and extraction modules.
+_EXPORTS = {
+    "get_spark": "session",
+    "load_table": "io",
+    "load_tables": "io",
+    "TABLES": "io",
+    "extract": "extraction",
+    "extract_text": "extraction",
+    "ExtractionPipeline": "extraction",
+}
 
-__all__ = [
-    "get_spark",
-    "load_table",
-    "load_tables",
-    "TABLES",
-    "extract",
-    "extract_text",
-    "ExtractionPipeline",
-]
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    import importlib
+
+    value = getattr(importlib.import_module(f"{__name__}.{_EXPORTS[name]}"), name)
+    globals()[name] = value
+    return value
 
 __version__ = "0.1.0"

@@ -11,7 +11,7 @@ H1 `scalar_udf`      row-at-a-time (last resort, pickled per row)
 H2 `vectorized_udf`  pandas Series→Series (Arrow-batched; default)
 H3 `iterator_udf`    Iterator[Series]→Iterator[Series] with one-time
                      per-worker init (OCR-engine pattern)
-H4 mapInPandas       → operators/features.extract_features
+H4 mapInArrow        → operators/features.extract_features
 H5 applyInPandas     → operators/asof.py, tier G g6
 H6 GROUPED_AGG       → tier C c12
 H7 `page_split_udtf` Python UDTF: doc → one row per page
@@ -116,7 +116,7 @@ def with_error_capture_row(fn: Callable[[Any], Any], pyarrow_type: str):
 
 def page_split_udtf():
     """H7 — Python UDTF: (path, content) → one row per page, the
-    declarative alternative to the fused mapInPandas fan-out."""
+    declarative alternative to the fused mapInArrow fan-out."""
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="path: string, page: int, text: string")

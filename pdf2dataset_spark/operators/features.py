@@ -29,10 +29,7 @@ memory when rows carry rendered-image bytes (session.py).
 
 from __future__ import annotations
 
-import os
-import sys
 import traceback
-import zipimport
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 from typing import Any
@@ -44,6 +41,7 @@ from pyspark.sql import types as T
 
 from pdf2dataset_spark.schemas import spark_type_for
 from pdf2dataset_spark.sources.codecs import DocumentCodec, default_codec
+from pdf2dataset_spark.worker import setup_task
 
 ERROR_PAGE = -1  # sentinel page for document-level failures
 
@@ -382,56 +380,6 @@ def output_schema(features: list[Feature]) -> T.StructType:
     return T.StructType(fields)
 
 
-def _archive_stamp(archive: str) -> tuple[int, int] | None:
-    try:
-        st = os.stat(archive)
-    except OSError:
-        return None
-    return st.st_mtime_ns, st.st_size
-
-
-def _reread_if_changed(zi: zipimport.zipimporter) -> Callable[[], None]:
-    """``zi.invalidate_caches`` that re-reads the archive directory only
-    when the archive's (mtime, size) moved since the last read."""
-    reread = zi.invalidate_caches
-    seen = _archive_stamp(zi.archive)
-
-    def invalidate_caches() -> None:
-        nonlocal seen
-        stamp = _archive_stamp(zi.archive)
-        if stamp is None or stamp != seen:
-            reread()
-            seen = stamp
-
-    return invalidate_caches
-
-
-def skip_unchanged_zip_rereads() -> None:
-    """Stop ``importlib.invalidate_caches()`` from re-reading zip
-    archives that have not changed.
-
-    PySpark's worker calls ``importlib.invalidate_caches()`` at the
-    start of every task (``worker_util.setup_spark_files``). On Python
-    3.10+ that makes every cached ``zipimporter`` re-read its whole
-    archive directory: one read of ``pyspark.zip`` (~1.3k entries)
-    per imported pyspark subpackage and two of the spark-core jar
-    (~5.4k entries) — 0.16-0.23 s of CPU per task before the UDF
-    runs. Each cached zipimporter not yet wrapped gets an instance
-    ``invalidate_caches`` that re-reads only when its archive's
-    ``(st_mtime_ns, st_size)`` changed, so imports see exactly what a
-    re-read would find. The stamp is taken when wrapping, which
-    follows the task's own start-of-task re-read. Idempotent and
-    cheap (one pass over ``sys.path_importer_cache``), so it runs on
-    every task and also wraps importers created by later imports.
-    """
-    for finder in list(sys.path_importer_cache.values()):
-        if (
-            isinstance(finder, zipimport.zipimporter)
-            and "invalidate_caches" not in vars(finder)
-        ):
-            finder.invalidate_caches = _reread_if_changed(finder)
-
-
 def extract_features(
     manifest: DataFrame,
     features: list[str | Feature],
@@ -469,9 +417,7 @@ def extract_features(
     feat_types = [_arrow_type_for(f.spark_type) for f in feats]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # runs once per task, in the worker: spares the worker's later
-        # tasks the zip directory re-reads
-        skip_unchanged_zip_rereads()
+        setup_task()
         # Per-worker init happens here, once per Python worker process
         # (iterator-UDF pattern, SURVEY §2 H3) — e.g. OCR engine spin-up.
         codec.init_worker()

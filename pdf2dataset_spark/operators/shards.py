@@ -21,6 +21,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdf2dataset_spark.worker import setup_task
+
 
 def write_shards(
     df: DataFrame,
@@ -110,6 +112,7 @@ def write_webdataset(
         )
 
     def write_shard(pdf):
+        setup_task()
         import hashlib
         import io
         import tarfile
@@ -179,6 +182,7 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
     )
 
     def untar(batches):
+        setup_task()
         import io
         import tarfile
 

@@ -32,7 +32,7 @@ from pdf2dataset_spark.queries._util import t
 )
 def a0_extract_pipeline(spark, sf_dir):
     """The reference's core loop end-to-end (A2+A4+A5+A8): in-memory
-    docs → fused mapInPandas fan-out + text feature + error capture.
+    docs → fused mapInArrow fan-out + text feature + error capture.
     Deterministic fixture incl. a corrupted doc → error row; the
     oracle is the golden expected output (fixture is constant, so the
     full value-hash check applies)."""
@@ -2039,7 +2039,7 @@ def a3_parquet_scan(spark, sf_dir):
 def a4_page_fanout(spark, sf_dir):
     """Doc→page fan-out (A4), relational analog: explode a per-doc
     page sequence (n_pages = doc_id % 5 + 1). The production path is
-    the fused mapInPandas in operators/features.py; this proves the
+    the fused mapInArrow in operators/features.py; this proves the
     pure-relational expansion Catalyst sees."""
     d = t(spark, sf_dir, "documents")
     n_pages = (F.col("doc_id") % 5 + 1).cast("int")
@@ -4311,7 +4311,7 @@ if all(__import__("os").path.exists(p)
         decides, which at fixture size means a broadcast join
         anyway; the corpus itself never leaves executors). 53/53
         pages carry text. Scale shape: identical to a5 — one
-        mapInPandas fan-out, page grain, no driver collect of page
+        mapInArrow fan-out, page grain, no driver collect of page
         data."""
         from pyspark.sql import Window
 

@@ -27,7 +27,7 @@ Implementation notes:
 
 Scale note: decode runs inside Arrow-batched extraction UDFs; one
 page decodes in O(columns x rows) python-int work, which the
-mapInPandas fan-out parallelizes per document exactly like minipdf
+mapInArrow fan-out parallelizes per document exactly like minipdf
 text extraction.
 """
 

@@ -160,7 +160,8 @@ class _PdfHandle:
     (see :meth:`PdfCodec._memo`): ``entries``, its
     ``page_images(decode_pixels=True)``; ``scan``, the
     :meth:`PdfCodec._scan_pixels` result; ``runs``, its
-    ``minipdf.page_runs``. The image features (``n_images``,
+    ``minipdf.page_runs``; ``lines``, those runs'
+    ``minipdf._layout_lines``. The image features (``n_images``,
     ``embedded_image(_meta)``, ``image``, ``ocr``, the composite
     render) and the text features past ``text`` (``word_boxes``,
     ``(body_)paragraphs``, the artifact and hidden text rates) all
@@ -2471,13 +2472,15 @@ class PdfCodec(DocumentCodec):
         reflowed with line-break dehyphenation; blank-line gaps and
         column jumps split; ``drop_artifacts=True`` removes
         /Artifact pagination furniture first) — see
-        minipdf.runs_paragraphs."""
+        minipdf.lines_paragraphs. The page's lines are memoized, so
+        ``paragraphs`` and ``body_paragraphs`` lay it out once."""
         if handle.doc is None:
             return []
         from pdf2dataset_spark.sources import minipdf
 
-        return minipdf.runs_paragraphs(
-            self._page_runs(handle, page), drop_artifacts)
+        lines = self._memo(handle, page, "lines", lambda: (
+            minipdf._layout_lines(self._page_runs(handle, page))))
+        return minipdf.lines_paragraphs(lines, drop_artifacts)
 
     def page_embedded_images(self, handle: "_PdfHandle", page: int) -> list[dict]:
         """Embedded image XObjects of one page (pdfimages-shaped; see

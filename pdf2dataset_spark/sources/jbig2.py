@@ -64,7 +64,7 @@ Output convention matches :func:`sources.ccitt.decode_ccitt_gray`:
 
 Scale note: decode runs inside the Arrow-batched extraction UDFs;
 one page is O(pixels) python-int MQ work, parallelized per document
-by the mapInPandas fan-out like every other minipdf codec.
+by the mapInArrow fan-out like every other minipdf codec.
 """
 
 from __future__ import annotations

@@ -4193,11 +4193,11 @@ def content_text_layout(
 def _layout_lines(runs: list[dict]) -> list[tuple[float, float, str, bool]]:
     """Reading-order lines of display-frame runs as ``(y, size,
     text, artifact)`` — the shared back end of
-    :func:`runs_layout_text` and :func:`runs_paragraphs`.
+    :func:`runs_layout_text` and :func:`lines_paragraphs`.
     ``artifact`` is True when EVERY run on the line sits inside
     /Artifact marked content (ISO 32000-1 §14.8.2.2 — running
     headers/footers/page numbers in tagged PDFs), the signal
-    :func:`runs_paragraphs` uses to drop pagination furniture from
+    :func:`lines_paragraphs` uses to drop pagination furniture from
     training text. The runs are read, never written: a page's runs
     feed several surfaces."""
     out: list[tuple[float, float, str, bool]] = []
@@ -4278,10 +4278,12 @@ def _layout_lines(runs: list[dict]) -> list[tuple[float, float, str, bool]]:
     return out
 
 
-def runs_paragraphs(
-    runs: list[dict], drop_artifacts: bool = False
+def lines_paragraphs(
+    lines: list[tuple[float, float, str, bool]], drop_artifacts: bool = False
 ) -> list[str]:
-    """PARAGRAPH segmentation over the reading-order lines — the
+    """PARAGRAPH segmentation over the reading-order lines of
+    :func:`_layout_lines` (a page's lines serve both the ``paragraphs``
+    and the ``body_paragraphs`` feature) — the
     layout-aware chunking unit a training pipeline wants. A new
     paragraph starts when the vertical advance to the next line
     exceeds 1.8x the median line advance (a blank-line-sized gap),
@@ -4304,7 +4306,7 @@ def runs_paragraphs(
     pure function of the positioning operators."""
     lines = [
         (y, size, t)
-        for y, size, t, art in _layout_lines(runs)
+        for y, size, t, art in lines
         if t.strip() and not (drop_artifacts and art)
     ]
     if not lines:
@@ -4359,12 +4361,12 @@ def content_paragraphs(
     props: dict | None = None,
     drop_artifacts: bool = False,
 ) -> list[str]:
-    """:func:`runs_paragraphs` of one content stream, with its runs
+    """:func:`lines_paragraphs` of one content stream, with its runs
     mapped into the displayed frame of ``rotate``/``media_box``."""
-    return runs_paragraphs(_display_runs(
+    return lines_paragraphs(_layout_lines(_display_runs(
         _text_runs(content, fonts, forms,
                    ext_gstates=ext_gstates, props=props),
-        rotate, media_box), drop_artifacts)
+        rotate, media_box)), drop_artifacts)
 
 
 def runs_char_fraction(runs: list[dict], counted) -> float:

@@ -332,6 +332,47 @@ def test_text_features_interpret_each_page_at_most_twice():
     assert spy.call_count <= 2 * len(rows)
 
 
+def test_paragraph_features_lay_out_each_page_once_after_open():
+    """``paragraphs`` and ``body_paragraphs`` read one memoized line
+    layout per page: ``open`` lays out each page once, the page memo
+    once more."""
+    from unittest import mock
+
+    from pdf2dataset_spark.sources import minipdf
+    from pdf2dataset_spark.sources.codecs import PdfCodec
+
+    pdf = _read_or_skip(_SMI)
+    with mock.patch.object(
+        minipdf, "_layout_lines", wraps=minipdf._layout_lines
+    ) as spy:
+        rows = _fused_rows_in_process({"s.pdf": pdf}, _TEXT_FEATURES,
+                                      PdfCodec())
+    assert len(rows) == 17 and all(r["error"] is None for r in rows)
+    assert spy.call_count == 2 * len(rows)
+
+
+def test_tasks_start_with_the_workers_heap_frozen(spark):
+    """Each task of the fused pass freezes its worker's long-lived
+    objects first, so the collector (and PySpark's ``gc.collect()``
+    between tasks of a reused worker) sees only what the task
+    allocated — tens of thousands of objects otherwise."""
+    import gc
+
+    from pdf2dataset_spark.extraction import ExtractionPipeline
+    from pdf2dataset_spark.sources.codecs import PdfCodec
+    from pdf2dataset_spark.sources.minipdf import build_pdf
+
+    tracked = Feature("tracked", "int64", lambda ctx: len(gc.get_objects()))
+    docs = {f"d{i}.pdf": build_pdf([f"page {i}"]) for i in range(4)}
+    pipe = ExtractionPipeline(
+        spark=spark, features=["text", tracked], codec=PdfCodec()
+    )
+    for _ in range(3):  # fresh workers first, then reused ones
+        df = pipe.run(docs, small=True)
+        assert sorted(df["text"]) == [f"page {i}" for i in range(4)]
+        assert df["tracked"].max() < 5_000
+
+
 def test_directory_resume_adds_no_rows(spark, tmp_path):
     from pdf2dataset_spark.extraction import ExtractionPipeline
 
@@ -465,7 +506,7 @@ def test_zip_rereads_skip_unchanged_archives(tmp_path):
     import sys
     import zipfile
 
-    from pdf2dataset_spark.operators.features import skip_unchanged_zip_rereads
+    from pdf2dataset_spark.worker import skip_unchanged_zip_rereads
 
     archive = str(tmp_path / "guarded.zip")
 
