@@ -73,9 +73,9 @@ class ExtractionPipeline:
     ) -> DataFrame:
         """The page-grain result DataFrame (lazy; no action run).
 
-        ``page_range`` pushes a page predicate into the fan-out: the
-        features skip out-of-range pages (SURVEY §4.2 stretch), though
-        ``PdfCodec.open`` still lays out their text (ROADMAP D4).
+        ``page_range`` pushes a page predicate into the fan-out: an
+        out-of-range page is never laid out or extracted (SURVEY §4.2
+        stretch).
         ``observe=True`` attaches an Observation named
         ``extract_metrics`` (rows / error rows) populated when the
         DataFrame executes — see :attr:`last_observation`.

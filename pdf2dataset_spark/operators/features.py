@@ -17,10 +17,12 @@ Spark-first re-expression:
   ``mapInArrow`` pass (SURVEY §3.2: fuse features to avoid N
   JVM⇄Python Arrow crossings — upstream likewise computes all
   features in one task visit).
-- Heavy codec state (PDF renderer / OCR engine) initializes once per
-  Python worker, in the iterator-UDF style (SURVEY §2 H3).
-- Errors: document-level failures emit a single ``page = -1`` row;
-  page-level failures keep the row with ``error`` = traceback.
+- Codec state (PDF renderer / OCR engine) initializes at the start of
+  each task, in the iterator-UDF style (SURVEY §2 H3).
+- Errors: a document that fails before page splitting (``open`` or
+  ``page_count``) emits a single ``page = -1`` row; any later failure,
+  a page's layout included, keeps that page's row with ``error`` =
+  traceback, and the document's other pages still extract.
 
 At 100 TB: the pass is embarrassingly parallel (no shuffle), input
 splits come from the binaryFile source, and Arrow batch size caps
@@ -393,10 +395,10 @@ def extract_features(
     Returns the page-grain DataFrame with the declared schema.
 
     ``page_range=(lo, hi)`` pushes a page predicate INTO the fan-out
-    (SURVEY §4.2 stretch): no feature runs on a page outside the
-    range, though ``PdfCodec.open`` still lays out its text (ROADMAP
-    D4) — the operator-level analog of not generating unwanted
-    tasks, and far cheaper than filtering after an expensive render.
+    (SURVEY §4.2 stretch): a page outside the range is never laid
+    out or extracted — the operator-level analog of not generating
+    unwanted tasks, and far cheaper than filtering after an expensive
+    render.
     A Catalyst rule could derive this from a downstream
     ``filter(page <= N)`` automatically; the explicit parameter keeps
     the plan obvious.
@@ -418,8 +420,8 @@ def extract_features(
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         setup_task()
-        # Per-worker init happens here, once per Python worker process
-        # (iterator-UDF pattern, SURVEY §2 H3) — e.g. OCR engine spin-up.
+        # Codec init happens here, at the start of every task (a reused
+        # Python worker runs many; iterator-UDF pattern, SURVEY §2 H3).
         codec.init_worker()
         for batch in batches:
             names = batch.schema.names

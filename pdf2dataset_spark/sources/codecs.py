@@ -10,12 +10,11 @@ explicit and pluggable:
   page separator pdftotext emits — so the whole pipeline (fan-out,
   feature fusion, error rows, resume, sinks) is real and testable
   end-to-end with deterministic fixtures.
-- :class:`PdfCodec`: the production binding; each method imports its
-  library lazily and raises ``NotImplementedError`` with a clear
-  message when the dependency is absent (clearly-marked stub per the
-  build mandate). The Spark-side plumbing (schema, batching, UDF
-  signature) is identical for both codecs and is what the tests
-  verify.
+- :class:`PdfCodec`: the production binding over the pure-Python
+  parser, decoders and raster (:mod:`.minipdf`, :mod:`.raster`); only
+  an ``image_format`` other than png/jpeg needs pdf2image/poppler
+  (``NotImplementedError`` when absent). ``open`` only parses; a
+  page is laid out when a feature first reads it.
 
 OCR in the default codec is a deterministic fake (identity over the
 page text) so the ``ocr`` feature's plumbing is exercised.
@@ -34,7 +33,8 @@ class DocumentCodec:
     name = "abstract"
 
     def init_worker(self) -> None:
-        """Called once per Python worker before any batch (H3 pattern)."""
+        """Called at the start of every task of the fused pass, before
+        its first batch (H3 pattern): a reused worker runs it again."""
 
     def open(self, content: bytes) -> Any:
         raise NotImplementedError
@@ -150,29 +150,27 @@ class TextBytesCodec(DocumentCodec):
 @dataclass
 class _PdfHandle:
     """Open-document handle for :class:`PdfCodec`: raw bytes (for the
-    raster paths), the parsed document (parse ONCE per doc; metadata
-    reads reuse it) and the reading-order text of EVERY page, laid
-    out by :meth:`PdfCodec.open` — pages outside the pass's
-    ``page_range`` too, which the features then skip (lazy layout is
-    ROADMAP D4).
+    raster paths) and the parsed document (parse ONCE per doc;
+    metadata reads reuse it). A page is laid out only when a feature
+    reads it, never at open.
 
     ``page_slot`` memoizes what the features derive from ONE page
     (see :meth:`PdfCodec._memo`): ``entries``, its
     ``page_images(decode_pixels=True)``; ``scan``, the
     :meth:`PdfCodec._scan_pixels` result; ``runs``, its
-    ``minipdf.page_runs``; ``lines``, those runs'
+    ``minipdf.page_runs``; ``cut``, those runs'
+    ``minipdf._cut_lines``; ``lines``, that cut's
     ``minipdf._layout_lines``. The image features (``n_images``,
     ``embedded_image(_meta)``, ``image``, ``ocr``, the composite
-    render) and the text features past ``text`` (``word_boxes``,
+    render) and the text features (``text``, ``word_boxes``,
     ``(body_)paragraphs``, the artifact and hidden text rates) all
-    read it, so a page decodes once and is interpreted once after
-    ``open``. Reading another page replaces it: a handle never holds
+    read it, so a page decodes once, is interpreted once and is cut
+    once. Reading another page replaces it: a handle never holds
     more than one page's pixels. The fused pass visits pages in
     order; an out-of-order caller just computes again."""
 
     content: bytes
-    pages: list[str]
-    doc: Any = None
+    doc: Any
     page_slot: dict | None = None
 
 
@@ -229,23 +227,13 @@ class PdfCodec(DocumentCodec):
         doc = minipdf.PdfDocument(
             content, password=self.password.encode("latin-1", errors="replace")
         )
-        # reading order (pdftotext parity: XY-cut column/section
-        # ordering, kern-gap word breaks) honors the inheritable
-        # /Rotate + /MediaBox and inlines /Form XObject text
-        # (letterheads, OCR layers)
-        pages = [
-            minipdf.runs_layout_text(minipdf.page_runs(doc, p))
-            for p in doc.pages()
-        ]
-        return _PdfHandle(content=content, pages=pages, doc=doc)
+        return _PdfHandle(content=content, doc=doc)
 
     def doc_info(self, handle: "_PdfHandle") -> dict[str, str]:
         """/Info dictionary with XMP fallback (ISO 32000-1 §14.3):
         a key absent from /Info fills from the catalog's /Metadata
         XMP packet (Title/Author/CreationDate/ModDate) — real files
         increasingly carry XMP only. /Info wins where both exist."""
-        if handle.doc is None:
-            return {}
         info = dict(handle.doc.info())
         for k, v in handle.doc.xmp().items():
             info.setdefault(k, v)
@@ -255,8 +243,6 @@ class PdfCodec(DocumentCodec):
         """Structural facts — version / linearized / tagged /
         encrypted (+ has_xmp) — the corpus-faceting surface; see
         minipdf.PdfDocument.profile."""
-        if handle.doc is None:
-            return {}
         out = dict(handle.doc.profile())
         out["has_xmp"] = bool(handle.doc.xmp())
         return out
@@ -279,21 +265,23 @@ class PdfCodec(DocumentCodec):
         )
 
     def page_annotations(self, handle: "_PdfHandle", page: int) -> list[str]:
-        if handle.doc is None:
-            return []
         return handle.doc.page_annotations(handle.doc.pages()[page - 1])
 
     def doc_outline(self, handle: "_PdfHandle") -> list[tuple[int, str]]:
-        return handle.doc.outline() if handle.doc is not None else []
+        return handle.doc.outline()
 
     def doc_attachments(self, handle: "_PdfHandle") -> list[dict]:
-        return handle.doc.attachments() if handle.doc is not None else []
+        return handle.doc.attachments()
 
     def page_count(self, handle: "_PdfHandle") -> int:
-        return len(handle.pages)
+        return len(handle.doc.pages())
 
     def page_text(self, handle: "_PdfHandle", page: int) -> str:
-        return handle.pages[page - 1]
+        """Reading-order text (pdftotext parity) of the page's
+        memoized lines, which the paragraph features read too."""
+        from pdf2dataset_spark.sources import minipdf
+
+        return minipdf.lines_text(self._page_lines(handle, page))
 
     def _entry_gray(
         self, e: dict, doc=None
@@ -1918,8 +1906,6 @@ class PdfCodec(DocumentCodec):
         per PDF unit), instead of the text-grid raster. Pure-text
         pages keep the grid raster (whose pixel OCR round-trips
         exactly); image-ONLY pages take the scan route before this."""
-        if handle.doc is None:
-            return None
         from pdf2dataset_spark.sources import minipdf, raster
 
         doc = handle.doc
@@ -2395,7 +2381,7 @@ class PdfCodec(DocumentCodec):
                     from pdf2dataset_spark.sources import raster
 
                     return raster.render_text_jpeg(
-                        handle.pages[page - 1],
+                        self.page_text(handle, page),
                         size=parse_image_size(self.image_size),
                     )
                 raise NotImplementedError(
@@ -2417,17 +2403,15 @@ class PdfCodec(DocumentCodec):
         from pdf2dataset_spark.sources import raster
 
         return raster.render_text_png(
-            handle.pages[page - 1], size=parse_image_size(self.image_size)
+            self.page_text(handle, page), size=parse_image_size(self.image_size)
         )
 
     def page_word_boxes(self, handle: "_PdfHandle", page: int) -> list[dict]:
         """Word-level boxes in reading order (pdftotext -bbox shape)
-        — see minipdf.runs_word_boxes."""
-        if handle.doc is None:
-            return []
+        — see minipdf.cut_word_boxes."""
         from pdf2dataset_spark.sources import minipdf
 
-        return minipdf.runs_word_boxes(self._page_runs(handle, page))
+        return minipdf.cut_word_boxes(self._page_cut(handle, page))
 
     def page_artifact_char_fraction(
         self, handle: "_PdfHandle", page: int
@@ -2438,8 +2422,6 @@ class PdfCodec(DocumentCodec):
         watermarks in tagged PDFs. High values flag pages that are
         mostly pagination furniture; page_paragraphs(drop_artifacts)
         is the surgical cut."""
-        if handle.doc is None:
-            return 0.0
         from pdf2dataset_spark.sources import minipdf
 
         return minipdf.runs_char_fraction(
@@ -2456,8 +2438,6 @@ class PdfCodec(DocumentCodec):
         strong curation signal: the page's machine text carries the
         OCR engine's quality, not the author's. 0.0 = all glyphs
         visible, or no text at all."""
-        if handle.doc is None:
-            return 0.0
         from pdf2dataset_spark.sources import minipdf
 
         return minipdf.runs_char_fraction(
@@ -2472,15 +2452,11 @@ class PdfCodec(DocumentCodec):
         reflowed with line-break dehyphenation; blank-line gaps and
         column jumps split; ``drop_artifacts=True`` removes
         /Artifact pagination furniture first) — see
-        minipdf.lines_paragraphs. The page's lines are memoized, so
-        ``paragraphs`` and ``body_paragraphs`` lay it out once."""
-        if handle.doc is None:
-            return []
+        minipdf.lines_paragraphs, over the lines ``text`` reads too."""
         from pdf2dataset_spark.sources import minipdf
 
-        lines = self._memo(handle, page, "lines", lambda: (
-            minipdf._layout_lines(self._page_runs(handle, page))))
-        return minipdf.lines_paragraphs(lines, drop_artifacts)
+        return minipdf.lines_paragraphs(
+            self._page_lines(handle, page), drop_artifacts)
 
     def page_embedded_images(self, handle: "_PdfHandle", page: int) -> list[dict]:
         """Embedded image XObjects of one page (pdfimages-shaped; see
@@ -2488,8 +2464,6 @@ class PdfCodec(DocumentCodec):
         as complete JFIF files with zero native deps. The entries are
         copies of the page's memoized decode (:meth:`_page_images`)
         without the ``pixels`` key."""
-        if handle.doc is None:
-            return []
         return [
             {k: v for k, v in e.items() if k != "pixels"}
             for e in self._page_images(handle, page)
@@ -2519,13 +2493,26 @@ class PdfCodec(DocumentCodec):
 
     def _page_runs(self, handle: "_PdfHandle", page: int) -> list[dict]:
         """``minipdf.page_runs`` of ``page``, memoized: one
-        interpreter pass serves every text feature but ``text``
-        (which ``open`` laid out)."""
+        interpreter pass serves every text feature."""
         from pdf2dataset_spark.sources import minipdf
 
         doc = handle.doc
         return self._memo(handle, page, "runs", lambda: minipdf.page_runs(
             doc, doc.pages()[page - 1]))
+
+    def _page_cut(self, handle: "_PdfHandle", page: int) -> list[list[dict]]:
+        """The page's memoized XY-cut: word boxes and lines read it."""
+        from pdf2dataset_spark.sources import minipdf
+
+        return self._memo(handle, page, "cut", lambda: minipdf._cut_lines(
+            self._page_runs(handle, page)))
+
+    def _page_lines(self, handle: "_PdfHandle", page: int) -> list[tuple]:
+        """The page's memoized ``minipdf._layout_lines``."""
+        from pdf2dataset_spark.sources import minipdf
+
+        return self._memo(handle, page, "lines", lambda: (
+            minipdf._layout_lines(self._page_cut(handle, page))))
 
     def _scan_pixels(
         self, handle: "_PdfHandle", page: int
@@ -2539,7 +2526,7 @@ class PdfCodec(DocumentCodec):
         raw-sample payloads are used directly (RGB reduced to BT.601
         luma). The result is memoized, so the image and ocr features
         share it."""
-        if handle.doc is None or handle.pages[page - 1].strip():
+        if self.page_text(handle, page).strip():
             return None
         entries = self._page_images(handle, page)
 
@@ -2578,7 +2565,7 @@ class PdfCodec(DocumentCodec):
                 return raster.ocr_gray_flex(w, h, px)
             # built-in pixel OCR of the built-in render (native-res)
             return raster.ocr_png(
-                raster.render_text_png(handle.pages[page - 1])
+                raster.render_text_png(self.page_text(handle, page))
             )
         import io
 

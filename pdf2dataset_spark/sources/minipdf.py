@@ -4091,21 +4091,21 @@ def _cut_lines(runs: list[dict]) -> list[list[dict]]:
     return _xy_cut(runs, sizes[len(sizes) // 2])
 
 
-def runs_word_boxes(runs: list[dict]) -> list[dict]:
-    """Word-level boxes (the ``pdftotext -bbox`` shape): every
-    whitespace-delimited word with its device-space baseline box
-    ``{word, x0, y0, x1, y1}``, in reading order (same XY-cut as
-    :func:`runs_layout_text`). RTL lines stay in VISUAL order
-    here — boxes are geometry, and per-word geometry has no logical
-    reordering (the text surface is the one that emits UAX #9
-    logical order). Run-start positions are EXACT (they come from
-    the positioning operators; /Rotate pages are mapped into the
-    displayed frame first); intra-run word offsets use the same
-    deterministic 0.5 em/char advance estimate the layout engine
-    uses, so boxes are approximate but reproducible. y0 is the
+def cut_word_boxes(cut: list[list[dict]]) -> list[dict]:
+    """Word-level boxes (the ``pdftotext -bbox`` shape) of a page's
+    :func:`_cut_lines` groups: every whitespace-delimited word with
+    its device-space baseline box ``{word, x0, y0, x1, y1}``, in
+    reading order (the cut :func:`_layout_lines` reads). RTL lines
+    stay in VISUAL order here — boxes are geometry, and per-word
+    geometry has no logical reordering (the text surface is the one
+    that emits UAX #9 logical order). Run-start positions are EXACT
+    (they come from the positioning operators; /Rotate pages are
+    mapped into the displayed frame first); intra-run word offsets use
+    the same deterministic 0.5 em/char advance estimate the layout
+    engine uses, so boxes are approximate but reproducible. y0 is the
     baseline, y1 = baseline + the device font size (ascent box)."""
     out: list[dict] = []
-    for line in _cut_lines(runs):
+    for line in cut:
         for r in line:
             text = r["text"]
             n = len(text)
@@ -4144,25 +4144,30 @@ def content_word_boxes(
     ext_gstates: dict | None = None,
     props: dict | None = None,
 ) -> list[dict]:
-    """:func:`runs_word_boxes` of one content stream, with its runs
+    """:func:`cut_word_boxes` of one content stream, with its runs
     mapped into the displayed frame of ``rotate``/``media_box``."""
-    return runs_word_boxes(_display_runs(
+    return cut_word_boxes(_cut_lines(_display_runs(
         _text_runs(content, fonts, forms,
                    ext_gstates=ext_gstates, props=props),
-        rotate, media_box))
+        rotate, media_box)))
 
 
 def extract_page_word_boxes(data: bytes) -> list[list[dict]]:
     """Per-page word boxes of a PDF, in page order (the
     ``pdftotext -bbox`` primitive), ToUnicode-aware."""
     doc = PdfDocument(data)
-    return [runs_word_boxes(page_runs(doc, p)) for p in doc.pages()]
+    return [cut_word_boxes(_cut_lines(page_runs(doc, p))) for p in doc.pages()]
+
+
+def lines_text(lines: list[tuple[float, float, str, bool]]) -> str:
+    """Page text of :func:`_layout_lines`' lines, one per line."""
+    return "\n".join(t for _, _, t, _ in lines)
 
 
 def runs_layout_text(runs: list[dict]) -> str:
     """Reading-order text of display-frame runs — see
     :func:`content_text_layout`."""
-    return "\n".join(t for _, _, t, _ in _layout_lines(runs))
+    return lines_text(_layout_lines(_cut_lines(runs)))
 
 
 def content_text_layout(
@@ -4190,18 +4195,18 @@ def content_text_layout(
         rotate, media_box))
 
 
-def _layout_lines(runs: list[dict]) -> list[tuple[float, float, str, bool]]:
-    """Reading-order lines of display-frame runs as ``(y, size,
-    text, artifact)`` — the shared back end of
-    :func:`runs_layout_text` and :func:`lines_paragraphs`.
+def _layout_lines(cut: list[list]) -> list[tuple[float, float, str, bool]]:
+    """Reading-order lines of a page's :func:`_cut_lines` groups as
+    ``(y, size, text, artifact)`` — the shared back end of
+    :func:`lines_text` and :func:`lines_paragraphs`.
     ``artifact`` is True when EVERY run on the line sits inside
     /Artifact marked content (ISO 32000-1 §14.8.2.2 — running
     headers/footers/page numbers in tagged PDFs), the signal
     :func:`lines_paragraphs` uses to drop pagination furniture from
-    training text. The runs are read, never written: a page's runs
-    feed several surfaces."""
+    training text. The groups and their runs are read, never
+    written: a page's cut feeds several surfaces."""
     out: list[tuple[float, float, str, bool]] = []
-    for line in _cut_lines(runs):
+    for line in cut:
         # TeX \copyright overlay (round-10, from the real-corpus
         # libtasn1.pdf): plain TeX composes © by painting a text
         # 'c' INSIDE the CMSY circlecopyrt glyph (\ooalign). Once
@@ -4363,10 +4368,10 @@ def content_paragraphs(
 ) -> list[str]:
     """:func:`lines_paragraphs` of one content stream, with its runs
     mapped into the displayed frame of ``rotate``/``media_box``."""
-    return lines_paragraphs(_layout_lines(_display_runs(
+    return lines_paragraphs(_layout_lines(_cut_lines(_display_runs(
         _text_runs(content, fonts, forms,
                    ext_gstates=ext_gstates, props=props),
-        rotate, media_box)), drop_artifacts)
+        rotate, media_box))), drop_artifacts)
 
 
 def runs_char_fraction(runs: list[dict], counted) -> float:

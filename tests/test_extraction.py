@@ -7,7 +7,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from pdf2dataset_spark.extraction import extract, extract_text
+from pdf2dataset_spark.extraction import ExtractionPipeline, extract, extract_text
 from pdf2dataset_spark.operators.features import (
     ERROR_PAGE,
     Feature,
@@ -16,6 +16,8 @@ from pdf2dataset_spark.operators.features import (
     resolve_features,
 )
 from pdf2dataset_spark.sources import from_dict
+from pdf2dataset_spark.sources.codecs import PdfCodec
+from pdf2dataset_spark.sources.minipdf import build_pdf
 
 DOCS = {
     "a.pdf": "page one text\fpage two text".encode(),
@@ -217,7 +219,8 @@ def test_observed_counts_zero_errors_on_empty_input(spark):
     assert obs.get == {"n_rows": 0, "n_errors": 0}
 
 
-def _fused_rows_in_process(docs: dict[str, bytes], features, codec):
+def _fused_rows_in_process(docs: dict[str, bytes], features, codec,
+                           page_range=None):
     """Run the fused pass's batch function in this process, so a
     test-local codec class never has to reach a Spark worker."""
     import pyarrow as pa
@@ -227,7 +230,8 @@ def _fused_rows_in_process(docs: dict[str, bytes], features, codec):
             self.run = fn
             return self
 
-    m = extract_features(_Manifest(), features, codec=codec)
+    m = extract_features(_Manifest(), features, codec=codec,
+                         page_range=page_range)
     batch = pa.RecordBatch.from_pydict(
         {"path": list(docs), "content": list(docs.values())},
         schema=pa.schema([("path", pa.string()), ("content", pa.binary())]),
@@ -314,9 +318,9 @@ def test_text_feature_order_does_not_change_values():
     assert got[0] == got[1]
 
 
-def test_text_features_interpret_each_page_at_most_twice():
-    """``open`` lays out every page, and the page memo serves every
-    other text feature from one more interpreter pass."""
+def test_text_features_interpret_each_page_once():
+    """``open`` lays out nothing, and the page memo serves every text
+    feature, ``text`` included, from one interpreter pass."""
     from unittest import mock
 
     from pdf2dataset_spark.sources import minipdf
@@ -329,13 +333,13 @@ def test_text_features_interpret_each_page_at_most_twice():
         rows = _fused_rows_in_process({"s.pdf": pdf}, _TEXT_FEATURES,
                                       PdfCodec())
     assert len(rows) == 17 and all(r["error"] is None for r in rows)
-    assert spy.call_count <= 2 * len(rows)
+    assert spy.call_count == len(rows)
 
 
 def test_paragraph_features_lay_out_each_page_once_after_open():
-    """``paragraphs`` and ``body_paragraphs`` read one memoized line
-    layout per page: ``open`` lays out each page once, the page memo
-    once more."""
+    """``text``, ``paragraphs`` and ``body_paragraphs`` read one
+    memoized line layout per page, and it and ``word_boxes`` read one
+    memoized XY-cut; ``open`` lays out nothing."""
     from unittest import mock
 
     from pdf2dataset_spark.sources import minipdf
@@ -344,11 +348,77 @@ def test_paragraph_features_lay_out_each_page_once_after_open():
     pdf = _read_or_skip(_SMI)
     with mock.patch.object(
         minipdf, "_layout_lines", wraps=minipdf._layout_lines
-    ) as spy:
+    ) as spy, mock.patch.object(
+        minipdf, "_cut_lines", wraps=minipdf._cut_lines
+    ) as cut:
         rows = _fused_rows_in_process({"s.pdf": pdf}, _TEXT_FEATURES,
                                       PdfCodec())
     assert len(rows) == 17 and all(r["error"] is None for r in rows)
-    assert spy.call_count == 2 * len(rows)
+    assert spy.call_count == len(rows)
+    assert cut.call_count == len(rows)
+
+
+_PAGE_WORDS = ["one", "two", "three", "four", "five"]
+
+
+def _interpreted_pages(features, page_range=None):
+    """Run ``features`` over a five-page PDF; return the rows and the
+    pages whose content stream reached the text interpreter."""
+    from unittest import mock
+
+    from pdf2dataset_spark.sources import minipdf
+    from pdf2dataset_spark.sources.codecs import PdfCodec
+
+    pdf = minipdf.build_pdf([f"page {w}" for w in _PAGE_WORDS])
+    with mock.patch.object(
+        minipdf, "_text_runs", wraps=minipdf._text_runs
+    ) as spy:
+        rows = _fused_rows_in_process({"a.pdf": pdf}, features, PdfCodec(),
+                                      page_range=page_range)
+    doc = minipdf.PdfDocument(pdf)
+    page_of = {doc.page_content(p): i for i, p in enumerate(doc.pages(), 1)}
+    return rows, [page_of[c.kwargs["content"]] for c in spy.call_args_list]
+
+
+def test_pages_outside_page_range_are_never_laid_out():
+    rows, seen = _interpreted_pages(["text"], page_range=(2, 3))
+    assert [(r["page"], r["text"]) for r in rows] == [
+        (2, "page two"), (3, "page three")]
+    assert seen == [2, 3]
+
+
+def test_metadata_only_features_lay_out_nothing():
+    rows, seen = _interpreted_pages(["pdf_version", "n_annotations"])
+    assert [r["page"] for r in rows] == [1, 2, 3, 4, 5]
+    assert all(r["error"] is None for r in rows)
+    assert seen == []
+
+
+def test_a_page_layout_failure_is_a_page_level_error():
+    """A page whose layout raises keeps its row with ``error`` set;
+    the document's other pages still extract. Only a failure before
+    page splitting makes the single ``page = -1`` row."""
+    from unittest import mock
+
+    from pdf2dataset_spark.sources import minipdf
+    from pdf2dataset_spark.sources.codecs import PdfCodec
+
+    real = minipdf._text_runs
+
+    def runs(**kw):
+        if b"(page two)" in kw["content"]:
+            raise ValueError("broken page two")
+        return real(**kw)
+
+    pdf = minipdf.build_pdf([f"page {w}" for w in _PAGE_WORDS[:3]])
+    with mock.patch.object(minipdf, "_text_runs", side_effect=runs):
+        rows = _fused_rows_in_process({"a.pdf": pdf}, ["text", "paragraphs"],
+                                      PdfCodec())
+    assert [r["page"] for r in rows] == [1, 2, 3]
+    assert [r["text"] for r in rows] == ["page one", None, "page three"]
+    assert rows[0]["error"] is None and rows[2]["error"] is None
+    assert rows[1]["paragraphs"] is None
+    assert "ValueError: broken page two" in rows[1]["error"]
 
 
 def test_tasks_start_with_the_workers_heap_frozen(spark):
@@ -560,3 +630,77 @@ def test_import_names_the_python_floor():
         text=True, check=True,
     ).stdout
     assert "requires Python 3.11 or newer" in out
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+class TestArrowExtractionPass:
+    """The fused fan-out runs as ONE MapInArrow node over the
+    manifest — no pandas conversion node, no exchange, and the
+    Arrow-shipped manifest plans as LocalTableScan."""
+
+    def test_plan_shape(self, spark):
+        pipe = ExtractionPipeline(
+            spark=spark, features=["text"], codec=PdfCodec()
+        )
+        docs = {"a.pdf": build_pdf(["page one", "page two"])}
+        plan = _plan(pipe.pages(docs))
+        assert "MapInArrow" in plan
+        assert "MapInPandas" not in plan
+        assert "Exchange" not in plan
+        # round-11 verdict item 6: the memory source must keep the
+        # Arrow driver-ship path (LocalTableScan), not regress to a
+        # pickled RDD scan
+        assert "LocalTableScan" in plan
+        assert "Scan ExistingRDD" not in plan
+
+    def test_rows_and_error_capture(self, spark):
+        docs = {
+            "a.pdf": build_pdf(["alpha", "beta"]),
+            "bad.pdf": b"\xff\xfenot a pdf",
+        }
+        pdf = extract(docs, spark=spark, small=True, use_pdf_codec=True)
+        rows = {
+            (r.path, r.page): (r.text, r.error)
+            for r in spark.createDataFrame(pdf).collect()
+        }
+        assert rows[("a.pdf", 1)][0] == "alpha"
+        assert rows[("a.pdf", 2)][0] == "beta"
+        assert rows[("bad.pdf", -1)][0] is None
+        assert "not a PDF" in rows[("bad.pdf", -1)][1]
+
+    def test_typed_feature_columns_roundtrip(self, spark):
+        """int32 / bool / float64 / binary feature values survive the
+        Arrow batch assembly with their declared Spark types."""
+        docs = {"a.pdf": build_pdf(["only page"])}
+        df = ExtractionPipeline(
+            spark=spark,
+            features=[
+                "text", "n_images", "is_tagged", "artifact_text_rate",
+                "embedded_image",
+            ],
+            codec=PdfCodec(),
+        ).pages(docs)
+        fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+        assert fields["n_images"] == "int"
+        assert fields["is_tagged"] == "boolean"
+        assert fields["artifact_text_rate"] == "double"
+        assert fields["embedded_image"] == "binary"
+        row = df.collect()[0]
+        assert row.text == "only page"
+        assert row.n_images == 0
+        assert row.is_tagged is False
+        assert row.embedded_image is None
+        assert row.error is None
+
+    def test_page_range_pushdown_still_prunes(self, spark):
+        docs = {"a.pdf": build_pdf([f"p{i}" for i in range(1, 6)])}
+        pipe = ExtractionPipeline(
+            spark=spark, features=["text"], codec=PdfCodec()
+        )
+        got = sorted(
+            r.page for r in pipe.pages(docs, page_range=(2, 4)).collect()
+        )
+        assert got == [2, 3, 4]
