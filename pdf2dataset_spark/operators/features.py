@@ -449,14 +449,19 @@ def extract_features(
                     ctx = PageContext(
                         path=path, page=page, codec=codec, handle=handle
                     )
+                    # (exception, traceback) pairs: a memoized page
+                    # failure re-raises one exception in every feature
+                    # that reads it, and gets one traceback
                     errs = []
                     for f, fc in zip(feats, feat_cols):
                         try:
                             fc.append(f.fn(ctx))
-                        except Exception:
+                        except Exception as exc:
                             fc.append(None)
-                            errs.append(traceback.format_exc())
-                    err_col.append("\n".join(errs) if errs else None)
+                            if all(exc is not e for e, _ in errs):
+                                errs.append((exc, traceback.format_exc()))
+                    err_col.append(
+                        "\n".join(t for _, t in errs) if errs else None)
             arrays = [
                 pa.array(path_col, type=pa.string()),
                 pa.array(page_col, type=pa.int32()),

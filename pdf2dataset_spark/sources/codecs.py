@@ -174,6 +174,15 @@ class _PdfHandle:
     page_slot: dict | None = None
 
 
+class _Raised:
+    """A ``page_slot`` entry whose computation raised ``exc``."""
+
+    __slots__ = ("exc",)
+
+    def __init__(self, exc: Exception):
+        self.exc = exc
+
+
 class PdfCodec(DocumentCodec):
     """Real PDF binding.
 
@@ -2474,13 +2483,23 @@ class PdfCodec(DocumentCodec):
         """``compute()`` for ``page``, memoized under ``key`` in the
         handle's one-page ``page_slot``. Reading another page drops
         the old page's slot first, so its pixels free before any new
-        decode. Callers must not mutate the values."""
+        decode. A failure is memoized too: every later read re-raises
+        the same exception instance, so a page whose layout raises is
+        interpreted once however many features read it. Callers must
+        not mutate the values."""
         slot = handle.page_slot
         if slot is None or slot["page"] != page:
             slot = handle.page_slot = {"page": page}
         if key not in slot:
-            slot[key] = compute()
-        return slot[key]
+            try:
+                slot[key] = compute()
+            except Exception as exc:
+                slot[key] = _Raised(exc)
+                raise
+        value = slot[key]
+        if type(value) is _Raised:
+            raise value.exc
+        return value
 
     def _page_images(self, handle: "_PdfHandle", page: int) -> list[dict]:
         """``page_images(decode_pixels=True)`` of ``page``, memoized:

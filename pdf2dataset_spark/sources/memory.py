@@ -11,8 +11,14 @@ from __future__ import annotations
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-_SCHEMA = "path string, content binary"
+#: a StructType, not a DDL string: ``createDataFrame`` parses a DDL
+#: string through the JVM on every call
+_SCHEMA = T.StructType([
+    T.StructField("path", T.StringType(), True),
+    T.StructField("content", T.BinaryType(), True),
+])
 
 #: Target manifest bytes per extraction task. Document parse/extract
 #: cost scales with input bytes (~0.3 ms/KB for the pure-Python PDF

@@ -45,7 +45,9 @@ import re
 import struct
 import zlib
 from bisect import bisect_left, bisect_right
+from codecs import charmap_decode as _charmap_decode
 from dataclasses import dataclass
+from operator import itemgetter
 from typing import Any
 
 _WS = b"\x00\t\n\x0c\r "
@@ -84,6 +86,9 @@ def _skip_ws(data: bytes, pos: int) -> int:
     return _WS_RUN.match(data, pos).end()
 
 
+#: a number token; it is a float when it holds a '.' — tested as
+#: ``0x2E in tok``: an int operand of ``in`` is one memchr, a bytes
+#: operand first acquires a buffer (several times slower per token)
 _NUM_RE = re.compile(rb"[+-]?(?:\d+\.\d*|\.\d+|\d+)")
 
 
@@ -273,7 +278,7 @@ def parse_value(data: bytes, pos: int) -> tuple[Any, int]:
                 append(Ref(int(m.group(1))))
             elif gi == 3:  # number that cannot be a reference
                 tok = m.group(3)
-                append(float(tok) if b"." in tok else int(tok))
+                append(float(tok) if 0x2E in tok else int(tok))
             else:  # ']'
                 return arr, pos
     if c == 0x2F:
@@ -287,7 +292,7 @@ def parse_value(data: bytes, pos: int) -> tuple[Any, int]:
     m = _NUM_RE.match(data, pos)
     if m:
         tok = m.group()
-        if b"." in tok:  # a real can never open an 'N G R' reference
+        if 0x2E in tok:  # a real can never open an 'N G R' reference
             return float(tok), m.end()
         after = _skip_ws(data, m.end())
         # 'N G R' lookahead → indirect reference
@@ -641,9 +646,15 @@ class PdfDocument:
         # body) is parsed, matches of `N G obj` INSIDE it are skipped —
         # otherwise document text like "1 0 obj ... endobj" in an
         # uncompressed content stream would shadow real objects
-        # (last-definition-wins would corrupt the table).
-        consumed_to = 0
-        for m in _OBJ_RE.finditer(data):
+        # (last-definition-wins would corrupt the table). The search
+        # resumes past a consumed stream body instead of regex-scanning
+        # it: no match can straddle the body's end (only whitespace and
+        # "endstream" follow it), so the matches found are exactly those
+        # a scan of every byte would keep.
+        consumed_to = resume = 0
+        search = _OBJ_RE.search
+        while (m := search(data, resume)) is not None:
+            resume = m.end()
             if m.start() < consumed_to:
                 continue
             num = int(m.group(1))
@@ -673,7 +684,7 @@ class PdfDocument:
                         continue
                     raw = data[p:e].rstrip(b"\r\n")
                 self.objects[num] = StreamObj(val, raw)
-                consumed_to = p + len(raw)
+                consumed_to = resume = p + len(raw)
             else:
                 # last definition wins (incremental updates append)
                 self.objects[num] = val
@@ -1485,9 +1496,16 @@ class PdfDocument:
 
     @staticmethod
     def _finish_font_map(mapping, code_len: int) -> tuple:
-        """1-byte maps decode via str.translate (C-speed) — a
-        per-char Python loop would tax EVERY show op."""
+        """1-byte maps decode at C speed (see :func:`_decode_byte_map`)
+        — a per-char Python loop would tax EVERY show op: through a
+        256-char charmap table when every code decodes to exactly one
+        character, else through a ``str.maketrans`` table."""
         if code_len == 1:
+            chars = [mapping.get(c, chr(c)) for c in range(256)]
+            # U+FFFE marks an undefined byte to charmap_decode
+            if all(type(ch) is str and len(ch) == 1 and ch != "\ufffe"
+                   for ch in chars):
+                return (mapping, 1, "".join(chars))
             return (mapping, 1, str.maketrans(
                 {chr(c): v for c, v in mapping.items()}
             ))
@@ -2614,7 +2632,7 @@ def _parse_content_value(data: bytes, pos: int) -> tuple[Any, int]:
     m = _WS_NUM_RE.match(data, pos)
     if m:
         tok = m.group(1)
-        return (float(tok) if b"." in tok else int(tok)), m.end()
+        return (float(tok) if 0x2E in tok else int(tok)), m.end()
     pos = _skip_ws(data, pos)
     c = data[pos]
     if c == 0x3C:  # '<' — dict or hex string
@@ -2645,7 +2663,7 @@ def _parse_content_value(data: bytes, pos: int) -> tuple[Any, int]:
             append = arr.append
             for tok, s, br in _WS_ELEM_RE.findall(data, pos, end):
                 if tok:
-                    append(float(tok) if b"." in tok else int(tok))
+                    append(float(tok) if 0x2E in tok else int(tok))
                 elif not br:
                     append(s)
             return arr, end
@@ -2674,7 +2692,7 @@ def _parse_content_value(data: bytes, pos: int) -> tuple[Any, int]:
             gi = m.lastindex
             if gi == 1:  # kern number
                 tok = m.group(1)
-                append(float(tok) if b"." in tok else int(tok))
+                append(float(tok) if 0x2E in tok else int(tok))
             elif gi == 2:  # simple (no escape, no nesting) string
                 append(m.group(2))
             else:  # ']'
@@ -2690,7 +2708,7 @@ def _parse_content_value(data: bytes, pos: int) -> tuple[Any, int]:
     m = _NUM_RE.match(data, pos)
     if m:  # number behind a '%' comment: the fused fast path above
         tok = m.group()  # stops at the comment, _skip_ws consumed it
-        return (float(tok) if b"." in tok else int(tok)), m.end()
+        return (float(tok) if 0x2E in tok else int(tok)), m.end()
     raise ValueError(
         f"cannot parse content value at byte {pos}: {data[pos:pos+20]!r}"
     )
@@ -2728,10 +2746,13 @@ _NUM_FINDALL_RE = re.compile(rb"[+-]?(?:\d+\.\d*|\.\d+|\d+)")
 
 #: ONE total tokenizer for content streams: every byte of a clean
 #: stream is consumed by exactly one alternative, so ``findall`` is a
-#: contiguous tokenization (group 7 catches any byte no other
+#: contiguous tokenization (group 10 catches any byte no other
 #: alternative starts, which flags the stream for the exact
-#: match-loop lexer). Ordered by corpus frequency after the
-#: first-char quick-fail alternatives.
+#: match-loop lexer). An operand — a number run, a simple array or a
+#: literal string — captures the operator right after it (group 6),
+#: so ``x y Td``, ``(...) Tj``, ``[...] TJ`` and ``12 Tf`` each cost
+#: one tuple. Ordered by corpus frequency after the first-char
+#: quick-fail alternatives.
 _CONTENT_TOKENS_RE = re.compile(
     # POSSESSIVE skip (a failed match would let findall resync INSIDE
     # a comment and invent phantom tokens), and only EOL-TERMINATED
@@ -2741,27 +2762,37 @@ _CONTENT_TOKENS_RE = re.compile(
     # for the exact match-loop lexer, which ends it cleanly. The
     # caller rstrips trailing PDF whitespace for the same reason.
     rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*(?=[\r\n]))*+"
-    rb"(?:([+-]?(?:\d+\.\d*|\.\d+|\d+))"  # 1 number
-    rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # 2 name body
-    # 3 a WHOLE simple array (numbers + escape-free strings) — the TJ
+    rb"(?:(?:([+-]?(?:\d+\.\d*|\.\d+|\d+))"  # 1 number
+    # 2 the run's second number ("0 -14" before Td) and 3 the REST of
+    #   the run ("0 0 1 50 700" before Tm), split by _NUM_FINDALL_RE;
+    #   possessive and atomic so a run can never re-split digits
+    #   across iterations
+    rb"(?:[\x00\t\n\x0c\r ]*([+-]?(?:\d+\.\d*|\.\d+|\d+)))?+"
+    rb"((?:(?>[\x00\t\n\x0c\r ]*[+-]?(?:\d+\.\d*|\.\d+|\d+)))*+)"
+    # 4 a WHOLE simple array (numbers + escape-free strings) — the TJ
     #   shape — as one token; atomic+possessive so a non-simple array
     #   fails in O(n) and falls to the bare '[' delimiter below
     rb"|(\[(?:(?>[\x00\t\n\x0c\r ]*"
     rb"(?:[+-]?(?:\d+\.\d*|\.\d+|\d+)|\([^\\()]*\))))*+"
     rb"[\x00\t\n\x0c\r ]*\])"
-    # 4 flat literal string (escapes allowed, no nested parens); a
+    # 5 flat literal string (escapes allowed, no nested parens); a
     #   backslash is only ever consumed as an escape pair, so the body
     #   runs as possessive character-class loops between escapes
     #   instead of one alternation per byte
-    rb"|(\([^\\()]*+(?:\\[\s\S][^\\()]*+)*+\))"
-    # 5 container delimiters and hex strings (hex digits + PDF ws
+    rb"|(\([^\\()]*+(?:\\[\s\S][^\\()]*+)*+\)))"
+    # 6 the operator right after the operand, whitespace between
+    #   (a comment between them leaves it to group 9)
+    rb"(?:[\x00\t\n\x0c\r ]*([^\x00\t\n\x0c\r ()<>\[\]{}/%0-9+.\-]"
+    rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*))?"
+    rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # 7 name body
+    # 8 container delimiters and hex strings (hex digits + PDF ws
     #   only — anything else must take the exact path to reproduce
     #   its error behavior)
     rb"|(<<|>>|\[|\]|<[0-9A-Fa-f\x00\t\n\x0c\r ]*>)"
-    # 6 operator / keyword
+    # 9 operator / keyword
     rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%0-9+.\-]"
     rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|([\s\S]))"  # 7 anomaly byte
+    rb"|([\s\S]))"  # 10 anomaly byte
 )
 
 
@@ -2781,24 +2812,21 @@ def _lex_content_fast(
     cstack: list = []  # enclosing (container, kind) frames
     cur = stack
     ckind = -1  # -1 top level, 0 list, 1 dict item list
+    num_findall = _NUM_FINDALL_RE.findall
     # trailing PDF whitespace would strand the skip at EOF with no
     # token to anchor on (see the pattern comment); stripping it is
     # behavior-neutral — the match loop ends cleanly on a whitespace
     # tail without yielding
-    for num, name, arr, lit, delim, op, junk in \
+    for num, num2, rest, arr, lit, op, name, delim, bare, _ in \
             _CONTENT_TOKENS_RE.findall(
                 content.rstrip(b"\x00\t\n\x0c\r ")):
         if num:
-            cur.append(float(num) if b"." in num else int(num))
-        elif arr:
-            sub: list = []
-            sapp = sub.append
-            for tok, s, br in _WS_ELEM_RE.findall(arr, 1):
-                if tok:
-                    sapp(float(tok) if b"." in tok else int(tok))
-                elif not br:
-                    sapp(s)
-            cur.append(sub)
+            cur.append(float(num) if 0x2E in num else int(num))
+            if num2:
+                cur.append(float(num2) if 0x2E in num2 else int(num2))
+                if rest:
+                    for tok in num_findall(rest):
+                        cur.append(float(tok) if 0x2E in tok else int(tok))
         elif lit:
             if 0x5C in lit:  # backslash: unescape on the span
                 try:
@@ -2810,27 +2838,22 @@ def _lex_content_fast(
                 cur.append(v)
             else:
                 cur.append(lit[1:-1])
-        elif op:
-            if ckind >= 0:  # keyword VALUE inside a container
-                if op == b"true":
-                    cur.append(True)
-                elif op == b"false":
-                    cur.append(False)
-                elif op == b"null":
-                    cur.append(None)
-                else:
-                    return None
-            elif op == b"BI":  # inline image: binary follows
-                return None
-            elif wanted is None or op in wanted:
-                ops.append((op, stack))
-                cur = stack = []
-            else:
-                stack.clear()
+        elif arr:
+            sub: list = []
+            sapp = sub.append
+            for tok, s, br in _WS_ELEM_RE.findall(arr, 1):
+                if tok:
+                    sapp(float(tok) if 0x2E in tok else int(tok))
+                elif not br:
+                    sapp(s)
+            cur.append(sub)
         elif name:
             if 0x23 in name:  # '#xx' escape: exact decode path
                 return None
             cur.append("/" + name.decode("latin-1"))
+            continue
+        elif bare:
+            op = bare
         elif delim:
             if delim == b"[":
                 cstack.append((cur, ckind))
@@ -2872,18 +2895,38 @@ def _lex_content_fast(
                 if len(hx) % 2:
                     hx += "0"
                 cur.append(bytes.fromhex(hx))
+            continue
         else:  # anomaly byte (or empty name '/')
             return None
+        if not op:
+            continue
+        if ckind >= 0:  # keyword VALUE inside a container
+            if op == b"true":
+                cur.append(True)
+            elif op == b"false":
+                cur.append(False)
+            elif op == b"null":
+                cur.append(None)
+            else:
+                return None
+        elif op == b"BI":  # inline image: binary follows
+            return None
+        elif wanted is None or op in wanted:
+            ops.append((op, stack))
+            cur = stack = []
+        else:
+            stack.clear()
     if ckind >= 0:  # unterminated container
         return None
     return ops
 
 
 def _iter_content_ops(content: bytes, wanted: frozenset | None = None):
-    """Lex a content stream into ``(operator, operands)`` pairs —
-    the shared front end of :func:`content_text` (stream order) and
-    :func:`content_text_layout` (reading order). Every stream, whatever its size, first
-    tries :func:`_lex_content_fast`; anything unusual delegates to
+    """Lex a content stream into an iterable of ``(operator,
+    operands)`` pairs — the shared front end of :func:`content_text`
+    (stream order) and :func:`content_text_layout` (reading order).
+    Every stream, whatever its size, first tries
+    :func:`_lex_content_fast`; anything unusual delegates to
     the exact match-loop lexer below, whose behavior (down to its
     exceptions on malformed input) is the contract.
 
@@ -2892,9 +2935,8 @@ def _iter_content_ops(content: bytes, wanted: frozenset | None = None):
     Copy it (``list(operands)``) to keep it."""
     ops = _lex_content_fast(content, wanted)
     if ops is None:
-        yield from _iter_content_ops_matchloop(content, wanted)
-    else:
-        yield from ops
+        return _iter_content_ops_matchloop(content, wanted)
+    return ops
 
 
 def _iter_content_ops_matchloop(
@@ -2918,10 +2960,10 @@ def _iter_content_ops_matchloop(
             # second group() lookup on every token
             tok, rest, body, op = m.group(1, 2, 3, 4)
             if tok is not None:  # number (possibly a fused run)
-                append(float(tok) if b"." in tok else int(tok))
+                append(float(tok) if 0x2E in tok else int(tok))
                 if rest:
                     for tok in _NUM_FINDALL_RE.findall(rest):
-                        append(float(tok) if b"." in tok else int(tok))
+                        append(float(tok) if 0x2E in tok else int(tok))
                 continue
             if op is None:  # name
                 if 0x23 in body:  # '#xx' escape: exact decode
@@ -2967,6 +3009,16 @@ def _iter_content_ops_matchloop(
             stack.clear()
 
 
+def _decode_byte_map(raw: bytes, table: str | dict) -> str:
+    """Glyph codes of a 1-byte font map to text: ``table`` is a
+    256-char charmap string (one character per code) or, when some
+    code decodes to several characters or none, a ``str.maketrans``
+    table over the Latin-1 characters of the codes."""
+    if type(table) is str:
+        return _charmap_decode(raw, "strict", table)[0]
+    return raw.decode("latin-1").translate(table)
+
+
 def _decode_shown(raw: bytes, cmap: tuple | None) -> str:
     """Decode a shown glyph string through the active font's map."""
     if cmap is None:
@@ -2976,8 +3028,8 @@ def _decode_shown(raw: bytes, cmap: tuple | None) -> str:
     if cmap[0] == "utf16":  # predefined Uni*-UCS2/UTF16-* CMaps:
         # the code bytes are the text (surrogate pairs combine)
         return raw.decode("utf-16-be", errors="replace")
-    if len(cmap) == 3:  # 1-byte map with a translate table
-        return raw.decode("latin-1").translate(cmap[2])
+    if len(cmap) == 3:  # 1-byte map with a decode table
+        return _decode_byte_map(raw, cmap[2])
     return _decode_with_cmap(raw, cmap[0], cmap[1])
 
 
@@ -3268,15 +3320,15 @@ def _text_runs(
             / 100.0
         )
 
-    # frame cache: (a, b, c, d, size, xscale) of the text rendering
-    # matrix depend only on tm's a..d, the ctm and tfs — all of which
-    # change orders of magnitude less often than shows happen (Tm/cm
-    # vs one show per TJ). Keyed by identity/value compare, recomputed
-    # on miss; e/f (the origin) are recomputed per show from tm's
-    # translation row.
+    # frame cache: (a, b, c, d, xscale) of the text rendering matrix,
+    # the run's size and its direction (ux, uy) depend only on tm's
+    # a..d, the ctm and tfs — all of which change orders of magnitude
+    # less often than shows happen (Tm/cm vs one show per TJ). Keyed
+    # by identity/value compare, recomputed on miss; e/f (the origin)
+    # are recomputed per show from tm's translation row.
     fr_key: tuple | None = None
     fr_ctm: tuple | None = None
-    fr_val = (0.0, 0.0, 0.0, 1.0, 12.0, 1.0)
+    fr_val = (0.0, 0.0, 0.0, 1.0, 1.0, 12.0, 1.0, 0.0)
     hypot = math.hypot
 
     def show(raw: bytes, parts: list | None = None) -> None:
@@ -3284,133 +3336,152 @@ def _text_runs(
         tm0, tm1, tm2, tm3, tm4, tm5 = tm
         ca, cb, cc, cd, ce, cf = ctm
         if ctm is fr_ctm and fr_key == (tm0, tm1, tm2, tm3, tfs):
-            a, b, c, d, size, xscale = fr_val
+            a, b, c, d, xscale, size, ux, uy = fr_val
         else:
             a = tm0 * ca + tm1 * cc
             b = tm0 * cb + tm1 * cd
             c = tm2 * ca + tm3 * cc
             d = tm2 * cb + tm3 * cd
             size = tfs * hypot(c, d)
+            size = size if size > 0 else 12.0
             xscale = hypot(a, b) or 1.0
+            ux = a / xscale
+            uy = b / xscale
             fr_ctm = ctm
             fr_key = (tm0, tm1, tm2, tm3, tfs)
-            fr_val = (a, b, c, d, size, xscale)
+            fr_val = (a, b, c, d, xscale, size, ux, uy)
         e = tm4 * ca + tm5 * cc + ce
         f = tm4 * cb + tm5 * cd + cf
         cmap = cur_cmap
         vertical = cmap is not None and cmap[0] == "vert"
         if vertical:
             cmap = cmap[1]
-        if parts is None:
-            parts = [raw]
         t3 = (
             t3_fonts.get(cur_font)
             if t3_fonts and t3_glyphs is not None and cur_font
             else None
         )
         # hoist the decode dispatch out of the parts loop: the hot
-        # shape is the 1-byte translate map (len-3 tuple; the
+        # shape is the 1-byte decode table (len-3 tuple; the
         # "vert"/"utf16" sentinels are len-2, so the test is exact)
         trans = cmap[2] if cmap is not None and len(cmap) == 3 else None
-        texts: list[str] = []
         adv = 0.0
         if t3 is None and not vertical:
-            # hot path (no Type3, horizontal): all text state into
-            # locals (closure cell loads per element add up over long
-            # TJ arrays), expression shapes kept bit-identical
-            l_tc = tc
-            l_tw = tw
-            l_tz = tz
-            l_tfs = tfs
-            em_tfs = _EST_CHAR_EM * l_tfs
-            neg_wb = -_TJ_WORD_BREAK
-            t_append = texts.append
-            for el in parts:
-                if type(el) is bytes:
+            # hot path (no Type3, horizontal), expression shapes kept
+            # bit-identical
+            if parts is None:  # Tj / ' / ": one string
+                text = (
+                    _decode_byte_map(raw, trans)
+                    if trans is not None
+                    else _decode_shown(raw, cmap)
+                )
+                nch = len(text)
+                adv += (
+                    (_EST_CHAR_EM * tfs * nch + tc * nch
+                     + tw * text.count(" "))
+                    * tz
+                    / 100.0
+                )
+            else:
+                # all text state into locals (closure cell loads per
+                # element add up over long TJ arrays)
+                l_tc = tc
+                l_tw = tw
+                l_tz = tz
+                l_tfs = tfs
+                em_tfs = _EST_CHAR_EM * l_tfs
+                texts: list[str] = []
+                neg_wb = -_TJ_WORD_BREAK
+                t_append = texts.append
+                for el in parts:
+                    if type(el) is bytes:
+                        s = (
+                            _decode_byte_map(el, trans)
+                            if trans is not None
+                            else _decode_shown(el, cmap)
+                        )
+                        t_append(s)
+                        nch = len(s)
+                        adv += (
+                            (em_tfs * nch + l_tc * nch
+                             + l_tw * s.count(" "))
+                            * l_tz
+                            / 100.0
+                        )
+                    elif isinstance(el, (int, float)):
+                        adv += -el / 1000.0 * l_tfs * l_tz / 100.0
+                        if el <= neg_wb and texts \
+                                and not texts[-1].endswith(" "):
+                            t_append(" ")
+                text = "".join(texts)
+        else:
+            texts = []
+            for el in [raw] if parts is None else parts:
+                if isinstance(el, bytes):
                     s = (
-                        el.decode("latin-1").translate(trans)
+                        _decode_byte_map(el, trans)
                         if trans is not None
                         else _decode_shown(el, cmap)
                     )
-                    t_append(s)
-                    nch = len(s)
-                    adv += (
-                        (em_tfs * nch + l_tc * nch
-                         + l_tw * s.count(" "))
-                        * l_tz
-                        / 100.0
-                    )
-                elif isinstance(el, (int, float)):
-                    adv += -el / 1000.0 * l_tfs * l_tz / 100.0
-                    if el <= neg_wb and texts \
-                            and not texts[-1].endswith(" "):
-                        t_append(" ")
-            parts = ()
-        for el in parts:
-            if isinstance(el, bytes):
-                s = (
-                    el.decode("latin-1").translate(trans)
-                    if trans is not None
-                    else _decode_shown(el, cmap)
-                )
-                texts.append(s)
-                if t3 is not None:
-                    # per-glyph events with REAL /Widths advances
-                    fm, widths = t3["matrix"], t3["widths"]
-                    for code in el:  # Type3 codes are 1-byte
-                        local_tm = _mat_mul((1, 0, 0, 1, adv, 0), tm)
-                        gm = _mat_mul(
-                            fm,
-                            _mat_mul(
-                                (tfs * tz / 100.0, 0.0, 0.0, tfs,
-                                 0.0, 0.0),
-                                _mat_mul(local_tm, ctm),
-                            ),
-                        )
-                        if mode not in (3, 7) and oc_depth == 0:
-                            # invisible/clip/hidden-layer glyphs
-                            # never paint, but their REAL advances
-                            # still position what follows
-                            t3_glyphs.append((cur_font, code, gm))
-                        wx = widths.get(code, 0.0)
-                        # advance = text-space displacement of
-                        # (wx, 0) through the full /FontMatrix — a
-                        # rotated or skewed FontMatrix contributes
-                        # fm[1] too (ISO 32000-1 §9.6.5; round-9
-                        # advice fix). hypot is unsigned, so a
-                        # MIRRORED FontMatrix (fm[0] < 0) must keep
-                        # its sign or glyph runs advance the wrong
-                        # way (round-10 advice fix).
+                    texts.append(s)
+                    if t3 is not None:
+                        # per-glyph events with REAL /Widths advances
+                        fm, widths = t3["matrix"], t3["widths"]
+                        for code in el:  # Type3 codes are 1-byte
+                            local_tm = _mat_mul((1, 0, 0, 1, adv, 0), tm)
+                            gm = _mat_mul(
+                                fm,
+                                _mat_mul(
+                                    (tfs * tz / 100.0, 0.0, 0.0, tfs,
+                                     0.0, 0.0),
+                                    _mat_mul(local_tm, ctm),
+                                ),
+                            )
+                            if mode not in (3, 7) and oc_depth == 0:
+                                # invisible/clip/hidden-layer glyphs
+                                # never paint, but their REAL advances
+                                # still position what follows
+                                t3_glyphs.append((cur_font, code, gm))
+                            wx = widths.get(code, 0.0)
+                            # advance = text-space displacement of
+                            # (wx, 0) through the full /FontMatrix — a
+                            # rotated or skewed FontMatrix contributes
+                            # fm[1] too (ISO 32000-1 §9.6.5; round-9
+                            # advice fix). hypot is unsigned, so a
+                            # MIRRORED FontMatrix (fm[0] < 0) must keep
+                            # its sign or glyph runs advance the wrong
+                            # way (round-10 advice fix).
+                            adv += (
+                                math.copysign(
+                                    math.hypot(fm[0] * wx, fm[1] * wx),
+                                    fm[0] or 1.0,
+                                ) * tfs
+                                + tc + (tw if code == 32 else 0.0)
+                            ) * tz / 100.0
+                    elif vertical:
+                        # WMode 1 (ISO 32000-1 §9.7.4.3): glyphs advance
+                        # DOWN the column by the default vertical
+                        # displacement — /DW2's w1y default −1000/1000 =
+                        # one full em per glyph (CJK glyphs are
+                        # full-height); Tz scales horizontal displacements
+                        # only, Tw applies to 1-byte code 32 only (these
+                        # codes are 2-byte), Tc applies per glyph
+                        adv += (1.0 * tfs + tc) * len(s)
+                    else:  # advance_em(s), inlined for the hot path
+                        nch = len(s)
                         adv += (
-                            math.copysign(
-                                math.hypot(fm[0] * wx, fm[1] * wx),
-                                fm[0] or 1.0,
-                            ) * tfs
-                            + tc + (tw if code == 32 else 0.0)
-                        ) * tz / 100.0
-                elif vertical:
-                    # WMode 1 (ISO 32000-1 §9.7.4.3): glyphs advance
-                    # DOWN the column by the default vertical
-                    # displacement — /DW2's w1y default −1000/1000 =
-                    # one full em per glyph (CJK glyphs are
-                    # full-height); Tz scales horizontal displacements
-                    # only, Tw applies to 1-byte code 32 only (these
-                    # codes are 2-byte), Tc applies per glyph
-                    adv += (1.0 * tfs + tc) * len(s)
-                else:  # advance_em(s), inlined for the hot path
-                    nch = len(s)
-                    adv += (
-                        (_EST_CHAR_EM * tfs * nch + tc * nch
-                         + tw * s.count(" "))
-                        * tz
-                        / 100.0
-                    )
-            elif isinstance(el, (int, float)):
-                delta = -el / 1000.0 * tfs
-                adv += delta if vertical else delta * tz / 100.0
-                if el <= -_TJ_WORD_BREAK and texts and not texts[-1].endswith(" "):
-                    texts.append(" ")
-        text = "".join(texts)
+                            (_EST_CHAR_EM * tfs * nch + tc * nch
+                             + tw * s.count(" "))
+                            * tz
+                            / 100.0
+                        )
+                elif isinstance(el, (int, float)):
+                    delta = -el / 1000.0 * tfs
+                    adv += delta if vertical else delta * tz / 100.0
+                    if el <= -_TJ_WORD_BREAK and texts \
+                            and not texts[-1].endswith(" "):
+                        texts.append(" ")
+            text = "".join(texts)
         # empty shows still anchor a line (a `() Tj` on its own
         # baseline is a BLANK line — content_text emits its break,
         # so reading order must too)
@@ -3430,7 +3501,7 @@ def _text_runs(
                     "x": e,
                     "y": f,
                     "x_end": e + adv * yscale,
-                    "size": size if size > 0 else 12.0,
+                    "size": size,
                     "text": text,
                     "font": cur_font,
                     "ux": -c / yscale,
@@ -3451,13 +3522,13 @@ def _text_runs(
                 "x": e,
                 "y": f,
                 "x_end": e + adv * xscale,
-                "size": size if size > 0 else 12.0,
+                "size": size,
                 "text": text,
                 "font": cur_font,
                 # device-space text direction (unit), for dominant-
                 # orientation detection on rotated pages
-                "ux": a / xscale,
-                "uy": b / xscale,
+                "ux": ux,
+                "uy": uy,
                 "mode": mode,
                 "artifact": art_depth > 0,
             }
@@ -3523,9 +3594,13 @@ def _text_runs(
         )
 
     def td(tx: float, ty: float) -> None:
+        """``tlm = [1 0 0 1 tx ty] x tlm`` (the ``_mat_mul`` terms
+        with a1 = d1 = 1 and b1 = c1 = 0 written out; 1 * x is x for
+        every float, 0 * x keeps its NaN and signed zero)."""
         nonlocal tm, tlm
-        tlm = _mat_mul((1, 0, 0, 1, tx, ty), tlm)
-        tm = tlm
+        a2, b2, c2, d2, e2, f2 = tlm
+        tm = tlm = (a2 + 0 * c2, b2 + 0 * d2, 0 * a2 + c2, 0 * b2 + d2,
+                    tx * a2 + ty * c2 + e2, tx * b2 + ty * d2 + f2)
 
     def exec_ops(
         ops_content: bytes,
@@ -3896,14 +3971,21 @@ def _bidi_logical(line: str) -> str:
 
 def _projection_gaps(intervals: list[tuple], min_gap: float) -> list[float]:
     """Midpoints of gaps >= ``min_gap`` in the union of intervals."""
-    ivs = sorted((min(a, b), max(a, b)) for a, b in intervals)
+    # (a, b) is exactly (min(a, b), max(a, b)) when a < b; the calls
+    # stay for the rest (equal ends, NaN)
+    ivs = sorted([(a, b) if a < b else (min(a, b), max(a, b))
+                  for a, b in intervals])
     gaps: list[float] = []
     cur_end = ivs[0][1]
     for lo, hi in ivs[1:]:
         if lo - cur_end >= min_gap:
             gaps.append((cur_end + lo) / 2.0)
-        cur_end = max(cur_end, hi)
+        if hi > cur_end:  # cur_end = max(cur_end, hi)
+            cur_end = hi
     return gaps
+
+
+_RUN_X = itemgetter("x")
 
 
 def _emit_lines(runs: list[dict]) -> list[list[dict]]:
@@ -3925,6 +4007,10 @@ def _emit_lines(runs: list[dict]) -> list[list[dict]]:
         rs = r["size"]
         lo = bisect_left(neg_heads, -ry - 0.5 * rs)
         hi = bisect_right(neg_heads, -ry + 0.5 * rs)
+        if lo == hi:  # no candidate line: the usual case
+            lines.append([r])
+            neg_heads.append(-ry)
+            continue
         for li in range(lo, hi):
             line = lines[li]
             head = line[0]
@@ -3949,7 +4035,8 @@ def _emit_lines(runs: list[dict]) -> list[list[dict]]:
             lines.append([r])
             neg_heads.append(-ry)
     for line in lines:
-        line.sort(key=lambda r: r["x"])
+        if len(line) > 1:
+            line.sort(key=_RUN_X)
     lines.sort(key=lambda ln: -ln[0]["y"])
     return lines
 
@@ -4017,7 +4104,10 @@ def _reading_frame(
 
     votes = [0, 0, 0, 0]
     for r in runs:
-        q = round(math.degrees(math.atan2(r["uy"], r["ux"])) / 90) % 4
+        uy, ux = r["uy"], r["ux"]
+        # atan2(+-0, x > 0) is +-0, which rounds to quadrant 0
+        q = 0 if uy == 0 and ux > 0 else round(
+            math.degrees(math.atan2(uy, ux)) / 90) % 4
         votes[q] += len(r["text"]) or 1
     dom = max(range(4), key=lambda q: votes[q])
     if dom:
@@ -4207,6 +4297,11 @@ def _layout_lines(cut: list[list]) -> list[tuple[float, float, str, bool]]:
     written: a page's cut feeds several surfaces."""
     out: list[tuple[float, float, str, bool]] = []
     for line in cut:
+        if len(line) == 1:  # one run: nothing to fold, join or space
+            r = line[0]
+            out.append((r["y"], r["size"], _bidi_logical(r["text"]),
+                        bool(r.get("artifact"))))
+            continue
         # TeX \copyright overlay (round-10, from the real-corpus
         # libtasn1.pdf): plain TeX composes © by painting a text
         # 'c' INSIDE the CMSY circlecopyrt glyph (\ooalign). Once

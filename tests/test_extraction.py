@@ -397,7 +397,9 @@ def test_metadata_only_features_lay_out_nothing():
 def test_a_page_layout_failure_is_a_page_level_error():
     """A page whose layout raises keeps its row with ``error`` set;
     the document's other pages still extract. Only a failure before
-    page splitting makes the single ``page = -1`` row."""
+    page splitting makes the single ``page = -1`` row. The failure is
+    memoized: the six text features interpret the bad page once, and
+    its ``error`` carries one traceback."""
     from unittest import mock
 
     from pdf2dataset_spark.sources import minipdf
@@ -411,13 +413,15 @@ def test_a_page_layout_failure_is_a_page_level_error():
         return real(**kw)
 
     pdf = minipdf.build_pdf([f"page {w}" for w in _PAGE_WORDS[:3]])
-    with mock.patch.object(minipdf, "_text_runs", side_effect=runs):
-        rows = _fused_rows_in_process({"a.pdf": pdf}, ["text", "paragraphs"],
+    with mock.patch.object(minipdf, "_text_runs", side_effect=runs) as spy:
+        rows = _fused_rows_in_process({"a.pdf": pdf}, _TEXT_FEATURES,
                                       PdfCodec())
+    assert spy.call_count == 3
     assert [r["page"] for r in rows] == [1, 2, 3]
     assert [r["text"] for r in rows] == ["page one", None, "page three"]
     assert rows[0]["error"] is None and rows[2]["error"] is None
-    assert rows[1]["paragraphs"] is None
+    assert all(rows[1][f] is None for f in _TEXT_FEATURES)
+    assert rows[1]["error"].count("Traceback (most recent call last)") == 1
     assert "ValueError: broken page two" in rows[1]["error"]
 
 
@@ -518,6 +522,16 @@ class TestFromDictPartitioning:
         rows = df.orderBy("path").collect()
         assert [r.path for r in rows] == ["a.bin", "z.bin"]
         assert bytes(rows[1].content) == payload
+
+    def test_schema_constant_equals_its_ddl(self, spark):
+        """The StructType constant is the schema the DDL string
+        ``path string, content binary`` parses to, nullability
+        included."""
+        from pdf2dataset_spark.sources.memory import _SCHEMA
+
+        ddl = spark.createDataFrame([], "path string, content binary")
+        assert _SCHEMA == ddl.schema
+        assert from_dict(spark, {"a.pdf": b"x"}).schema == ddl.schema
 
     def test_empty_dict(self, spark):
         df = from_dict(spark, {})

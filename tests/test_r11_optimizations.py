@@ -236,6 +236,25 @@ class TestFontMapCache:
                     assert id(v) == first[k]
         assert doc._font_map_cache  # populated
 
+    @pytest.mark.parametrize("extra, kind", [
+        ({}, str),
+        ({0x41: "\u03a9", 0x09: "\u2022"}, str),
+        ({0x66: "fi"}, dict),  # a ligature: several characters
+        ({0x20: ""}, dict),  # a code that decodes to nothing
+        ({0x41: "\ufffe"}, dict),  # charmap_decode's undefined mark
+    ])
+    def test_byte_map_decodes_like_translate(self, extra, kind):
+        """A 1-byte font map decodes through a 256-char charmap table
+        when every code is one character, else through translate;
+        either way every code decodes as translate would."""
+        mapping = {**encoding_map("/WinAnsiEncoding", lambda v: v), **extra}
+        _, _, table = PdfDocument._finish_font_map(mapping, 1)
+        assert type(table) is kind
+        raw = bytes(range(256))
+        want = raw.decode("latin-1").translate(
+            str.maketrans({chr(c): v for c, v in mapping.items()}))
+        assert minipdf._decode_byte_map(raw, table) == want
+
     def test_encoding_map_returns_fresh_mutable_dict(self):
         # the shared base table must never leak: mutating one result
         # cannot affect the next call
