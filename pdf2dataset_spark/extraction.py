@@ -31,8 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pdf2dataset_spark.io import write_parquet_append
 from pdf2dataset_spark.operators.features import (
     Feature,
+    decodes_images,
     extract_features,
-    resolve_features,
 )
 from pdf2dataset_spark.operators.resume import load_done, resume_filter
 from pdf2dataset_spark.plans.progress import observed
@@ -57,7 +57,9 @@ class ExtractionPipeline:
 
     def manifest(self, input_data: str | dict[str, bytes]) -> DataFrame:
         if isinstance(input_data, dict):
-            df = from_dict(self.spark, input_data)
+            df = from_dict(
+                self.spark, input_data, decode_images=decodes_images(self.features)
+            )
         else:
             df = scan_documents(self.spark, input_data, glob=self.glob)
         if self.num_partitions:
@@ -106,7 +108,11 @@ class ExtractionPipeline:
         small: bool = False,
     ) -> DataFrame | pd.DataFrame | None:
         if small:
-            return self.pages(input_data).toPandas()
+            # one row per (path, page): the order no longer depends on
+            # how the manifest spread the documents over tasks
+            return self.pages(input_data).toPandas().sort_values(
+                ["path", "page"], ignore_index=True
+            )
         if out_path is None:
             return self.pages(input_data)
         df = self.pages(input_data, resume_from=out_path)

@@ -331,6 +331,21 @@ BUILTIN_FEATURES: dict[str, Feature] = {
 }
 
 
+#: built-in features that decode a page's images
+IMAGE_FEATURES = frozenset(
+    {"image", "ocr", "n_images", "embedded_image", "embedded_image_meta"}
+)
+
+
+def decodes_images(features: list[str | Feature]) -> bool:
+    """Whether extracting ``features`` may decode images: any of
+    :data:`IMAGE_FEATURES`, or any custom :class:`Feature`."""
+    return any(
+        f.name in IMAGE_FEATURES or BUILTIN_FEATURES.get(f.name) is not f
+        for f in resolve_features(features)
+    )
+
+
 def resolve_features(features: list[str | Feature]) -> list[Feature]:
     out: list[Feature] = []
     for f in features:

@@ -616,6 +616,7 @@ def inline_images(content: bytes, resolve=lambda v: v) -> list[dict]:
 
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
+_TRAILER_RE = re.compile(rb"trailer\b")
 
 
 class PdfDocument:
@@ -652,6 +653,9 @@ class PdfDocument:
         # "endstream" follow it), so the matches found are exactly those
         # a scan of every byte would keep.
         consumed_to = resume = 0
+        #: (start, end) of the bytes between consumed objects, where
+        #: the trailers live (see _trailer_dicts)
+        self._gaps = gaps = []
         search = _OBJ_RE.search
         while (m := search(data, resume)) is not None:
             resume = m.end()
@@ -684,24 +688,35 @@ class PdfDocument:
                         continue
                     raw = data[p:e].rstrip(b"\r\n")
                 self.objects[num] = StreamObj(val, raw)
+                gaps.append((consumed_to, m.start()))
                 consumed_to = resume = p + len(raw)
             else:
                 # last definition wins (incremental updates append)
                 self.objects[num] = val
+                gaps.append((consumed_to, m.start()))
                 consumed_to = pos
+        gaps.append((consumed_to, len(data)))
 
     # -- encryption ---------------------------------------------------
     def _trailer_dicts(self) -> list[dict]:
         """Every trailer dict plus every /Type /XRef stream dict —
-        the places /Encrypt, /ID and /Info live."""
+        the places /Encrypt, /ID and /Info live.
+
+        ``trailer`` is searched for only between the objects ``_scan``
+        consumed: the word inside a stream body or a string is page
+        content, not a trailer. The search may run one byte into the
+        next object's header (a digit, so no match ends there) so that
+        ``\\b`` sees the byte after the gap."""
+        data = self._data
         out: list[dict] = []
-        for m in re.finditer(rb"trailer\b", self._data):
-            try:
-                d, _ = parse_value(self._data, m.end())
-            except (ValueError, IndexError):
-                continue
-            if isinstance(d, dict):
-                out.append(d)
+        for lo, hi in self._gaps:
+            for m in _TRAILER_RE.finditer(data, lo, hi + 1):
+                try:
+                    d, _ = parse_value(data, m.end())
+                except (ValueError, IndexError):
+                    continue
+                if isinstance(d, dict):
+                    out.append(d)
         for obj in self.objects.values():
             v = obj.sdict if isinstance(obj, StreamObj) else obj
             if isinstance(v, dict) and v.get("/Type") == "/XRef":
@@ -960,18 +975,7 @@ class PdfDocument:
         cached = getattr(self, "_info_cache", None)
         if cached is not None:
             return cached
-        refs: list[Any] = []
-        for m in re.finditer(rb"trailer\b", self._data):
-            try:
-                d, _ = parse_value(self._data, m.end())
-            except (ValueError, IndexError):
-                continue
-            if isinstance(d, dict) and "/Info" in d:
-                refs.append(d["/Info"])
-        for obj in self.objects.values():
-            v = obj.sdict if isinstance(obj, StreamObj) else obj
-            if isinstance(v, dict) and v.get("/Type") == "/XRef" and "/Info" in v:
-                refs.append(v["/Info"])
+        refs = [d["/Info"] for d in self._trailer_dicts() if "/Info" in d]
         out: dict[str, str] = {}
         for ref in refs:
             info = self.resolve(ref)
@@ -1055,23 +1059,7 @@ class PdfDocument:
             or (cat and self.resolve(cat.get("/StructTreeRoot"))
                 is not None)
         )
-        enc = False
-        for tm in re.finditer(rb"trailer\b", self._data):
-            try:
-                d, _ = parse_value(self._data, tm.end())
-            except (ValueError, IndexError):
-                continue
-            if isinstance(d, dict) and "/Encrypt" in d:
-                enc = True
-                break
-        if not enc:
-            for obj in self.objects.values():
-                sv = obj.sdict if isinstance(obj, StreamObj) else obj
-                if isinstance(sv, dict) and sv.get("/Type") == "/XRef" \
-                        and "/Encrypt" in sv:
-                    enc = True
-                    break
-        out["encrypted"] = enc
+        out["encrypted"] = any("/Encrypt" in d for d in self._trailer_dicts())
         self._profile_cache = out
         return out
 

@@ -499,21 +499,103 @@ def test_resume_probe_reads_written_and_globbed_output(spark, tmp_path):
     assert load_done(spark, str(tmp_path / "empty"), ["path"]) is None
 
 
+def _image_doc(filt: str, w: int, h: int, size: int = 64) -> bytes:
+    """One page drawing one image XObject; the ``size``-byte payload is
+    a stand-in, since the manifest only reads the XObject's dict."""
+    xobj = {"filter": filt, "data": b"\x00" * size, "width": w, "height": h}
+    return build_pdf([""], images=[xobj],
+                     extra_content=b"q %d 0 0 %d 0 0 cm /Im0 Do Q" % (w, h))
+
+
+def _partitions(df) -> dict[int, list[str]]:
+    """Partition id -> its paths, in row order."""
+    from pyspark.sql import functions as F
+
+    out: dict[int, list[str]] = {}
+    for r in df.select(F.spark_partition_id().alias("p"), "path").collect():
+        out.setdefault(r.p, []).append(r.path)
+    return out
+
+
 class TestFromDictPartitioning:
     def test_partitions_scale_with_bytes_not_core_count(self, spark):
-        from pdf2dataset_spark.sources.memory import _TARGET_BYTES_PER_SLICE
+        from pdf2dataset_spark.sources.memory import _MIN_TASK_MS, doc_cost_ms
 
         tiny = from_dict(spark, {"a.pdf": b"x" * 100})
         assert tiny.rdd.getNumPartitions() == 1
-        n_docs, doc_bytes = 12, _TARGET_BYTES_PER_SLICE // 2
-        mid = from_dict(
-            spark, {f"d{i}.pdf": b"y" * doc_bytes for i in range(n_docs)}
-        )
+        # each document costs about half a minimum task
+        n_docs = 12
+        doc = b"y" * int(_MIN_TASK_MS / 2 / 0.30 * 1024)
+        mid = from_dict(spark, {f"d{i}.pdf": doc for i in range(n_docs)})
         expect = min(
             spark.sparkContext.defaultParallelism,
-            -(-(n_docs * doc_bytes) // _TARGET_BYTES_PER_SLICE),
+            -(-(n_docs * doc_cost_ms(doc, True)) // _MIN_TASK_MS),
         )
         assert mid.rdd.getNumPartitions() == expect
+
+    def test_large_dict_runs_one_task_per_core(self, spark):
+        """Above Spark's 48 MB Arrow local-relation threshold the rows
+        still spread over every core (they used to run as one task)."""
+        docs = {f"d{i:02d}.pdf": bytes([i]) * (2 << 20) for i in range(30)}
+        df = from_dict(spark, docs)
+        assert df.rdd.getNumPartitions() == min(
+            spark.sparkContext.defaultParallelism, 30
+        )
+
+    def test_costly_images_land_in_different_bins(self, spark):
+        """Three JPX pages among JPEG and CCITT ones: each JPX page
+        costs about ten JPEG pages to decode, so no task gets two of
+        them when the features decode images. Text-only features
+        weigh bytes alone, and the tasks' bytes stay within one
+        document of each other."""
+        if spark.sparkContext.defaultParallelism < 3:
+            pytest.skip("needs 3 cores")
+        docs = {f"j{i}.pdf": _image_doc("/JPXDecode", 128, 80) for i in range(3)}
+        docs.update(
+            {f"p{i:02d}.pdf": _image_doc("/DCTDecode", 208, 120, 24 << 10)
+             for i in range(9)}
+        )
+        docs.update(
+            {f"c{i:02d}.pdf": _image_doc("/CCITTFaxDecode", 180, 40, 8 << 10)
+             for i in range(6)}
+        )
+        jpx = {p for p in docs if p.startswith("j")}
+        parts = _partitions(
+            ExtractionPipeline(spark=spark, features=["n_images"]).manifest(docs)
+        )
+        assert sum(len(jpx & set(v)) == 1 for v in parts.values()) == 3
+        parts = _partitions(
+            ExtractionPipeline(spark=spark, features=["text"]).manifest(docs)
+        )
+        sizes = [sum(len(docs[p]) for p in v) for v in parts.values()]
+        assert len(parts) > 1
+        assert max(sizes) - min(sizes) <= max(len(v) for v in docs.values())
+
+    def test_rows_equal_the_dict_each_task_in_path_order(self, spark):
+        docs = {
+            f"d{i:02d}.pdf": bytes([i]) * ((i * 7919) % 40 + 1) * 1024
+            for i in range(24)
+        }
+        df = from_dict(spark, docs)
+        rows = [(r.path, bytes(r.content)) for r in df.collect()]
+        assert sorted(rows) == sorted(docs.items())
+        for paths in _partitions(df).values():
+            assert paths == sorted(paths)
+
+    def test_image_cost_is_read_from_the_xobject_dict(self):
+        from pdf2dataset_spark.sources.memory import _MS_PER_MPX, doc_cost_ms
+
+        plain = build_pdf([""])
+        jpx = _image_doc("/JPXDecode", 1000, 500)
+        assert doc_cost_ms(jpx, True) - doc_cost_ms(jpx, False) == pytest.approx(
+            _MS_PER_MPX[b"JPX"] / 2
+        )
+        assert doc_cost_ms(plain, True) == doc_cost_ms(plain, False)
+        # a filter array and an indirect /Height (not charged)
+        chained = jpx.replace(b"/Filter /JPXDecode", b"/Filter [/JPXDecode]")
+        assert doc_cost_ms(chained, True) > doc_cost_ms(chained, False)
+        indirect = jpx.replace(b"/Height 500", b"/Height 9 0 R")
+        assert doc_cost_ms(indirect, True) == doc_cost_ms(indirect, False)
 
     def test_schema_and_rows_survive_arrow_ship(self, spark):
         payload = b"\x00\xff\x89PNG binary"
@@ -539,11 +621,9 @@ class TestFromDictPartitioning:
         assert df.schema.simpleString() == "struct<path:string,content:binary>"
 
     def test_arrow_disabled_session_gives_the_same_manifest(self, spark):
-        from pdf2dataset_spark.sources.memory import _TARGET_BYTES_PER_SLICE
-
         off = spark.newSession()
         off.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
-        docs = {f"d{i}.pdf": bytes([i]) * (_TARGET_BYTES_PER_SLICE // 3) for i in range(9)}
+        docs = {f"d{i}.pdf": bytes([i]) * (16 << 10) for i in range(9)}
         docs["e.pdf"] = b""
         got = [from_dict(s, docs) for s in (spark, off)]
         assert got[0].schema == got[1].schema
@@ -553,6 +633,21 @@ class TestFromDictPartitioning:
             for df in got
         ]
         assert rows[0] == rows[1] == sorted(docs.items())
+
+    def test_small_frame_is_in_path_page_order(self, spark):
+        """The largest document is the first task's first row, yet
+        ``small=True`` returns rows by (path, page)."""
+        docs = {
+            "a.pdf": build_pdf(["a one"]),
+            "b.pdf": b"\xff\xfe not a pdf",
+            "m.pdf": build_pdf(["m one", "m two"]),
+            "z.pdf": build_pdf([f"z page {i} " + "word " * 400 for i in range(1, 9)]),
+        }
+        pdf = extract(docs, spark=spark, small=True, use_pdf_codec=True)
+        got = list(zip(pdf["path"], pdf["page"]))
+        assert got == sorted(got)
+        assert got[:4] == [("a.pdf", 1), ("b.pdf", -1), ("m.pdf", 1), ("m.pdf", 2)]
+        assert list(pdf.index) == list(range(len(pdf)))
 
 
 def test_directory_scan_balances_partitions_by_bytes(spark, tmp_path):
@@ -653,7 +748,7 @@ def _plan(df) -> str:
 class TestArrowExtractionPass:
     """The fused fan-out runs as ONE MapInArrow node over the
     manifest — no pandas conversion node, no exchange, and the
-    Arrow-shipped manifest plans as LocalTableScan."""
+    Arrow-shipped manifest plans as the scan of its Arrow RDD."""
 
     def test_plan_shape(self, spark):
         pipe = ExtractionPipeline(
@@ -664,11 +759,10 @@ class TestArrowExtractionPass:
         assert "MapInArrow" in plan
         assert "MapInPandas" not in plan
         assert "Exchange" not in plan
-        # round-11 verdict item 6: the memory source must keep the
-        # Arrow driver-ship path (LocalTableScan), not regress to a
-        # pickled RDD scan
-        assert "LocalTableScan" in plan
-        assert "Scan ExistingRDD" not in plan
+        # the memory source keeps the Arrow driver-ship path (one
+        # record batch per partition, an RDD Spark names "arrow"), not
+        # a pickled RDD scan
+        assert "Scan ExistingRDD arrow[" in plan
 
     def test_rows_and_error_capture(self, spark):
         docs = {

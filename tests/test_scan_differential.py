@@ -177,3 +177,99 @@ def test_real_pdf_tables_match():
         pytest.skip("real corpus not installed")
     for path in docs:
         _assert_same(path.read_bytes())
+
+
+# -- trailers -----------------------------------------------------------
+
+def _every_byte_trailers(doc: PdfDocument) -> list[dict]:
+    """The trailer search over every byte of the file, stream bodies
+    included, plus the /Type /XRef stream dicts."""
+    import re
+
+    out: list[dict] = []
+    for m in re.finditer(rb"trailer\b", doc._data):
+        try:
+            d, _ = parse_value(doc._data, m.end())
+        except (ValueError, IndexError):
+            continue
+        if isinstance(d, dict):
+            out.append(d)
+    for obj in doc.objects.values():
+        v = obj.sdict if isinstance(obj, StreamObj) else obj
+        if isinstance(v, dict) and v.get("/Type") == "/XRef":
+            out.append(v)
+    return out
+
+
+def _assert_same_trailers(data: bytes) -> bool:
+    """Compare the two trailer searches on a document none of whose
+    streams holds the word; False (nothing compared) otherwise."""
+    doc = PdfDocument.__new__(PdfDocument)
+    doc._data, doc.objects, doc._gens = data, {}, {}
+    doc._scan(data)
+    if any(isinstance(o, StreamObj) and b"trailer" in o.raw
+           for o in doc.objects.values()):
+        return False
+    assert doc._trailer_dicts() == _every_byte_trailers(doc)
+    return True
+
+
+@pytest.mark.parametrize("name", sorted(_FIXTURES))
+def test_fixture_trailers_match(name):
+    assert _assert_same_trailers(_FIXTURES[name])
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_mutated_fixture_trailers_match(seed):
+    """Truncations, bit flips, range deletions and spliced object,
+    stream and trailer tokens at random offsets."""
+    rng = random.Random(seed)
+    bases = [_FIXTURES[k] for k in sorted(_FIXTURES)]
+    for _ in range(60):
+        data = bytearray(rng.choice(bases))
+        op = rng.randrange(4)
+        if op == 0:
+            data = data[: rng.randrange(1, len(data))]
+        elif op == 1:
+            for _ in range(rng.randrange(1, 9)):
+                data[rng.randrange(len(data))] ^= 1 << rng.randrange(8)
+        elif op == 2:
+            i = rng.randrange(len(data))
+            del data[i : i + rng.randrange(1, 64)]
+        else:
+            at = rng.randrange(len(data))
+            data[at:at] = rng.choice(
+                [b" 12 0 obj\n", b"endstream", b"\nendobj\n",
+                 b"trailer << /Size 3 >>\n"])
+        _assert_same_trailers(bytes(data))
+
+
+def test_real_pdf_trailers_match():
+    docs = [pathlib.Path(p) for p in _REAL if pathlib.Path(p).exists()]
+    if not docs:
+        pytest.skip("real corpus not installed")
+    for path in docs:
+        assert _assert_same_trailers(path.read_bytes())
+
+
+def test_trailer_word_in_page_text_is_not_a_trailer():
+    """A page that shows `trailer << /Encrypt 99 0 R >>` opens as a
+    plain document; the every-byte search took it for the trailer that
+    declares the file encrypted."""
+    pdf = minipdf.build_pdf(["see the trailer << /Encrypt 99 0 R >> here"])
+    assert minipdf.extract_page_texts(pdf) == [
+        "see the trailer << /Encrypt 99 0 R >> here"
+    ]
+    doc = PdfDocument(pdf)
+    assert all("/Encrypt" not in d for d in doc._trailer_dicts())
+    assert doc.profile()["encrypted"] is False
+
+
+def test_trailer_word_in_page_text_adds_no_info():
+    """`/Info` and the encrypted flag read the same trailer dicts as
+    decryption, so page text cannot inject a document title."""
+    pdf = minipdf.build_pdf(["trailer << /Info 5 0 R >>", "two"])
+    pdf = pdf.replace(b"%%EOF", b"5 0 obj << /Title (Fake) >> endobj\n%%EOF")
+    doc = PdfDocument(pdf)
+    assert "Title" not in doc.info()
+    assert doc.profile()["encrypted"] is False
