@@ -333,33 +333,16 @@ class PdfCodec(DocumentCodec):
                     return None  # unsupported tint fn: decline
                 return w, h, bytes(px).translate(lut)
             return w, h, bytes(px)
-        if len(px) == 3 * w * h:  # RGB -> BT.601 luma
+        if len(px) in (3 * w * h, 4 * w * h):
+            # RGB -> BT.601 luma; CMYK (DeviceCMYK / ICCBased N=4)
             import numpy as np
 
-            rgb = (
-                np.frombuffer(bytes(px), np.uint8)
-                .reshape(h, w, 3)
-                .astype(np.float64)
-            )
-            y = 0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-            return w, h, np.clip(np.round(y), 0, 255).astype(np.uint8).tobytes()
-        if len(px) == 4 * w * h:  # CMYK (DeviceCMYK / ICCBased N=4)
-            import numpy as np
+            from pdf2dataset_spark.sources.jpeg import gray_u8
 
-            cmyk = (
-                np.frombuffer(bytes(px), np.uint8)
-                .reshape(h, w, 4)
-                .astype(np.float64)
-            ) / 255.0
-            v = (1.0 - np.minimum(1.0, cmyk[..., 3])) * (
-                1.0 - np.minimum(
-                    1.0,
-                    (cmyk[..., 0] + cmyk[..., 1] + cmyk[..., 2]) / 3.0,
-                )
+            samples = np.frombuffer(bytes(px), np.uint8)
+            return w, h, gray_u8(
+                samples.reshape(h, w, -1).astype(np.float64)
             )
-            return w, h, np.clip(
-                np.round(v * 255.0), 0, 255
-            ).astype(np.uint8).tobytes()
         return None
 
     @staticmethod
@@ -402,27 +385,11 @@ class PdfCodec(DocumentCodec):
         if len(pal_b) < need:
             pal_b = pal_b + b"\x00" * (need - len(pal_b))
         table = np.frombuffer(pal_b, np.uint8).reshape(n, bn)             .astype(np.float64)
-        rows = table[np.minimum(idx, n - 1)]
-        if bn == 1:
-            g = rows[..., 0]
-        elif bn == 3:
-            g = (0.299 * rows[..., 0] + 0.587 * rows[..., 1]
-                 + 0.114 * rows[..., 2])
-        elif bn == 4:
-            cmyk = rows / 255.0
-            g = 255.0 * (
-                (1.0 - np.minimum(1.0, cmyk[..., 3]))
-                * (1.0 - np.minimum(
-                    1.0,
-                    (cmyk[..., 0] + cmyk[..., 1] + cmyk[..., 2])
-                    / 3.0,
-                ))
-            )
-        else:
+        if bn not in (1, 3, 4):
             return None
-        return w, h, np.clip(
-            np.round(g), 0, 255
-        ).astype(np.uint8).tobytes()
+        from pdf2dataset_spark.sources.jpeg import gray_u8
+
+        return w, h, gray_u8(table[np.minimum(idx, n - 1)])
 
     @staticmethod
     def _entry_alpha(e: dict, w: int, h: int) -> bytes | None:

@@ -555,8 +555,11 @@ def _decode_generic_fast(
 ) -> list:
     """Nominal-AT generic decode: sliding per-row context windows +
     the MQ DECODE/BYTEIN/RENORMD procedures inlined into the pixel
-    loop (same coder state object — interleaves freely with
-    dict-driven decode calls before/after)."""
+    loop, the one place a method call per decision costs measurable
+    time. The once-per-row TPGDON decision calls ``dec.decode``, with
+    the local registers synced to ``dec`` around it; they are
+    restored to ``dec`` on exit, so the coder interleaves freely with
+    dict-driven decode calls before/after."""
     span2, span1, span0 = _GB_SLIDING[template]
     sltp_cx = _SLTP_CX[template]
     n2 = (span2[1] - span2[0] + 1) if span2 else 0
@@ -584,81 +587,23 @@ def _decode_generic_fast(
     npl = max(-l1, -l2, 0)  # left zero-pad so negative dx reads 0
     qe_q, qe_q16 = _QE_Q, _QE_Q16
     qe_nmps, qe_nlps, qe_sw = _QE_NMPS, _QE_NLPS, _QE_SW
-    # local MQ state (restored to the decoder object on exit)
+    # local MQ state, synced with the decoder object around each
+    # dec.decode call and restored to it on exit
     data = dec.data
-    bp = dec.bp
-    c_reg = dec.c
-    ct = dec.ct
-    a_reg = dec.a
     ndata = len(data)
-
-    def getstate(key):
-        s = cx.get(key)
-        if s is None:
-            s = [0, 0]
-            cx[key] = s
-        return s
-
+    bp, c_reg, ct, a_reg = dec.bp, dec.c, dec.ct, dec.a
     rows: list = []
     padded: list = []  # rows + right padding, for window reads
     ltp = 0
     for y in range(height):
         if tpgdon:
-            # inline one MQ decode for the SLTP pseudo-pixel
-            state = getstate(sltp_cx)
-            i_st = state[0]
-            qe = qe_q[i_st]
-            qe16 = qe_q16[i_st]
-            a_reg -= qe
-            if c_reg < qe16:  # == Chigh < Qe (C < 2**32 invariant)
-                if a_reg < qe:
-                    bit = state[1]
-                    state[0] = qe_nmps[i_st]
-                else:
-                    bit = 1 - state[1]
-                    if qe_sw[i_st]:
-                        state[1] = bit
-                    state[0] = qe_nlps[i_st]
-                a_reg = qe
-                renorm = True
-            else:
-                c_reg -= qe16  # stays >= 0: c >= qe16 here
-                if a_reg & 0x8000:
-                    bit = state[1]
-                    renorm = False
-                else:
-                    if a_reg < qe:
-                        bit = 1 - state[1]
-                        if qe_sw[i_st]:
-                            state[1] = bit
-                        state[0] = qe_nlps[i_st]
-                    else:
-                        bit = state[1]
-                        state[0] = qe_nmps[i_st]
-                    renorm = True
-            if renorm:
-                while True:
-                    if ct == 0:
-                        b = data[bp] if bp < ndata else 0xFF
-                        b1 = data[bp + 1] if bp + 1 < ndata else 0xFF
-                        if b == 0xFF:
-                            if b1 > 0x8F:
-                                c_reg += 0xFF00
-                                ct = 8
-                            else:
-                                bp += 1
-                                c_reg += b1 << 9
-                                ct = 7
-                        else:
-                            bp += 1
-                            c_reg += b1 << 8
-                            ct = 8
-                    a_reg = (a_reg << 1) & 0xFFFF
-                    c_reg = (c_reg << 1) & 0xFFFFFFFF
-                    ct -= 1
-                    if a_reg & 0x8000:
-                        break
-            ltp ^= bit
+            # one decision per row: the SLTP pseudo-pixel
+            state = cx.get(sltp_cx)
+            if state is None:
+                state = cx[sltp_cx] = [0, 0]
+            dec.bp, dec.c, dec.ct, dec.a = bp, c_reg, ct, a_reg
+            ltp ^= dec.decode(state)
+            bp, c_reg, ct, a_reg = dec.bp, dec.c, dec.ct, dec.a
             if ltp:
                 prev = rows[-1] if rows else bytearray(width)
                 rows.append(bytearray(prev))
@@ -770,10 +715,7 @@ def _decode_generic_fast(
             w0 = ((w0 << 1) | bit) & mask0  # current-row slide only
         rows.append(row)
         padded.append(bytes(row) + b"\x00" * pad)
-    dec.bp = bp
-    dec.c = c_reg
-    dec.ct = ct
-    dec.a = a_reg
+    dec.bp, dec.c, dec.ct, dec.a = bp, c_reg, ct, a_reg
     return rows
 
 
@@ -936,8 +878,9 @@ def _decode_refinement_fast(
     contribution is a per-ROW numpy precompute (bounded gathers with
     zero fill replicate :func:`_ref_px` range clamping); the pixel
     loop keeps only the just-decoded-bit slide, with the MQ
-    DECODE/BYTEIN/RENORMD procedures inlined as in
-    :func:`_decode_generic_fast`. TPGRON typical pixels (uniform 3x3
+    DECODE/BYTEIN/RENORMD procedures inlined per pixel as in
+    :func:`_decode_generic_fast`; the once-per-row TPGRON decision
+    calls ``dec.decode``. TPGRON typical pixels (uniform 3x3
     reference neighbourhood) are likewise vectorized per row."""
     coding, reference = _gr_templates(template, None)
     sltp_cx = _GR_SLTP_CX[template]
@@ -981,14 +924,10 @@ def _decode_refinement_fast(
                 out[lo:hi] = arr[lo + base:hi + base]
         return out
 
-    # local MQ state (restored to the decoder object on exit), same
-    # register conventions as _decode_generic_fast
+    # local MQ state, as in _decode_generic_fast
     data = dec.data
-    bp = dec.bp
-    c_reg = dec.c
-    ct = dec.ct
-    a_reg = dec.a
     ndata = len(data)
+    bp, c_reg, ct, a_reg = dec.bp, dec.c, dec.ct, dec.a
     qe_q, qe_q16 = _QE_Q, _QE_Q16
     qe_nmps, qe_nlps, qe_sw = _QE_NMPS, _QE_NLPS, _QE_SW
     zero_src = None
@@ -996,63 +935,13 @@ def _decode_refinement_fast(
     ltp = 0
     for y in range(height):
         if tpgron:
-            # inline one MQ decode for the SLTP pseudo-pixel
+            # one decision per row: the SLTP pseudo-pixel
             state = cx.get(sltp_cx)
             if state is None:
                 state = cx[sltp_cx] = [0, 0]
-            i_st = state[0]
-            qe = qe_q[i_st]
-            qe16 = qe_q16[i_st]
-            a_reg -= qe
-            if c_reg < qe16:  # == Chigh < Qe (C < 2**32 invariant)
-                if a_reg < qe:
-                    bit = state[1]
-                    state[0] = qe_nmps[i_st]
-                else:
-                    bit = 1 - state[1]
-                    if qe_sw[i_st]:
-                        state[1] = bit
-                    state[0] = qe_nlps[i_st]
-                a_reg = qe
-                renorm = True
-            else:
-                c_reg -= qe16  # stays >= 0: c >= qe16 here
-                if a_reg & 0x8000:
-                    bit = state[1]
-                    renorm = False
-                else:
-                    if a_reg < qe:
-                        bit = 1 - state[1]
-                        if qe_sw[i_st]:
-                            state[1] = bit
-                        state[0] = qe_nlps[i_st]
-                    else:
-                        bit = state[1]
-                        state[0] = qe_nmps[i_st]
-                    renorm = True
-            if renorm:
-                while True:
-                    if ct == 0:
-                        b = data[bp] if bp < ndata else 0xFF
-                        b1 = data[bp + 1] if bp + 1 < ndata else 0xFF
-                        if b == 0xFF:
-                            if b1 > 0x8F:
-                                c_reg += 0xFF00
-                                ct = 8
-                            else:
-                                bp += 1
-                                c_reg += b1 << 9
-                                ct = 7
-                        else:
-                            bp += 1
-                            c_reg += b1 << 8
-                            ct = 8
-                    a_reg = (a_reg << 1) & 0xFFFF
-                    c_reg = (c_reg << 1) & 0xFFFFFFFF
-                    ct -= 1
-                    if a_reg & 0x8000:
-                        break
-            ltp ^= bit
+            dec.bp, dec.c, dec.ct, dec.a = bp, c_reg, ct, a_reg
+            ltp ^= dec.decode(state)
+            bp, c_reg, ct, a_reg = dec.bp, dec.c, dec.ct, dec.a
         # static per-row context contribution: previous coding row +
         # all reference-layer reads
         if rows:
@@ -1147,10 +1036,7 @@ def _decode_refinement_fast(
             # ---------------------------
             row[x] = bit
             prev_bit = bit
-    dec.bp = bp
-    dec.c = c_reg
-    dec.ct = ct
-    dec.a = a_reg
+    dec.bp, dec.c, dec.ct, dec.a = bp, c_reg, ct, a_reg
     return rows
 
 

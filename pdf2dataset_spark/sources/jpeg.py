@@ -1751,6 +1751,27 @@ def decode_jpeg_gray(data: bytes) -> tuple[int, int, bytes]:
     w, h, px = decode_jpeg(data)
     if len(px) == w * h:
         return w, h, px
-    rgb = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3).astype(np.float64)
-    y = 0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-    return w, h, np.clip(np.round(y), 0, 255).astype(np.uint8).tobytes()
+    rgb = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
+    return w, h, gray_u8(rgb.astype(np.float64))
+
+
+def gray_u8(samples) -> bytes:
+    """8-bit gray bytes of float64 ``samples`` over 0-255 whose last
+    axis holds one pixel's components: 1 (gray, rounded), 3 (RGB:
+    BT.601 luma) or 4 (CMYK: the k-operator formula of ISO 32000-1
+    §10.3.5). The one gray reduction of the image paths."""
+    n = samples.shape[-1]
+    if n == 3:
+        g = (0.299 * samples[..., 0] + 0.587 * samples[..., 1]
+             + 0.114 * samples[..., 2])
+    elif n == 4:
+        cmyk = samples / 255.0
+        g = 255.0 * (
+            (1.0 - np.minimum(1.0, cmyk[..., 3]))
+            * (1.0 - np.minimum(
+                1.0, (cmyk[..., 0] + cmyk[..., 1] + cmyk[..., 2]) / 3.0
+            ))
+        )
+    else:
+        g = samples[..., 0]
+    return np.clip(np.round(g), 0, 255).astype(np.uint8).tobytes()

@@ -1027,13 +1027,19 @@ def decode_codeblock(
     """Inverse of :func:`encode_codeblock` → signed coefficient list.
 
     This is the production (per-corpus-page) path, so it is written
-    for speed: the MQ decoder is inlined, neighbor significance is
-    tracked incrementally (updated on the rare became-significant
-    events instead of re-scanned per decision), and every block, of
-    any size, runs the same numpy snapshot walkers, which visit only
-    the pixels a pass can decode. The encoder keeps the readable
-    shared walkers — the round-trip property tests pin the two
-    implementations to the same coding decisions."""
+    for speed: MQ DECODE is inlined into the five pass loops (the
+    significance pass's snapshot and live walks, the refinement
+    pass, the cleanup pass's run-length and per-pixel decisions),
+    which make one decision per visited coefficient; the sign and
+    run-length position decisions, one per became-significant
+    event, call :meth:`MQDecoder.decode` on the same coder. Neighbor
+    significance is tracked incrementally (updated on the rare
+    became-significant events instead of re-scanned per decision),
+    and every block, of any size, runs the same numpy snapshot
+    walkers, which visit only the pixels a pass can decode. The
+    encoder keeps the readable shared walkers — the round-trip
+    property tests pin the two implementations to the same coding
+    decisions."""
     size = w * h
     sig = bytearray(size)
     visited = bytearray(size)
@@ -1053,81 +1059,13 @@ def decode_codeblock(
         else (_SIG_LUT["HH"] if band == "HH" else _SIG_LUT["LL"])
     )
     cx = _fresh_contexts()
-    qe_q, qe_q16 = _QE_Q, _QE_Q16
-    qe_nmps, qe_nlps, qe_sw = _QE_NMPS, _QE_NLPS, _QE_SW
-    # local MQ registers (same INITDEC as MQDecoder)
-    bp = 0
-    b0 = data[0] if data else 0xFF
-    c_reg = b0 << 16
-    ndata = len(data)
-    b = data[0] if 0 < ndata else 0xFF
-    b1 = data[1] if 1 < ndata else 0xFF
-    if b == 0xFF:
-        if b1 > 0x8F:
-            c_reg += 0xFF00
-            ct = 8
-        else:
-            bp = 1
-            c_reg += b1 << 9
-            ct = 7
-    else:
-        bp = 1
-        c_reg += b1 << 8
-        ct = 8
-    c_reg = (c_reg << 7) & 0xFFFFFFFF
-    ct -= 7
-    a_reg = 0x8000
-
-    def mq(state):
-        nonlocal bp, c_reg, ct, a_reg
-        i_st = state[0]
-        qe = qe_q[i_st]
-        qe16 = qe_q16[i_st]
-        a_reg -= qe
-        if c_reg < qe16:  # == Chigh < Qe (C < 2**32 invariant)
-            if a_reg < qe:
-                bit = state[1]
-                state[0] = qe_nmps[i_st]
-            else:
-                bit = 1 - state[1]
-                if qe_sw[i_st]:
-                    state[1] = bit
-                state[0] = qe_nlps[i_st]
-            a_reg = qe
-        else:
-            c_reg -= qe16  # stays >= 0: c >= qe16 here
-            if a_reg & 0x8000:
-                return state[1]
-            if a_reg < qe:
-                bit = 1 - state[1]
-                if qe_sw[i_st]:
-                    state[1] = bit
-                state[0] = qe_nlps[i_st]
-            else:
-                bit = state[1]
-                state[0] = qe_nmps[i_st]
-        while True:
-            if ct == 0:
-                bb = data[bp] if bp < ndata else 0xFF
-                bb1 = data[bp + 1] if bp + 1 < ndata else 0xFF
-                if bb == 0xFF:
-                    if bb1 > 0x8F:
-                        c_reg += 0xFF00
-                        ct = 8
-                    else:
-                        bp += 1
-                        c_reg += bb1 << 9
-                        ct = 7
-                else:
-                    bp += 1
-                    c_reg += bb1 << 8
-                    ct = 8
-            a_reg = (a_reg << 1) & 0xFFFF
-            c_reg = (c_reg << 1) & 0xFFFFFFFF
-            ct -= 1
-            if a_reg & 0x8000:
-                break
-        return bit
+    # the registers live on ``dec``; each pass loop copies them into
+    # the locals l_a/l_c/l_ct/l_bp for its inlined DECODEs and syncs
+    # them back around every decision that goes through dec.decode
+    dec = MQDecoder(data)
+    l_data, l_nd = data, len(data)
+    l_qq, l_q16 = _QE_Q, _QE_Q16
+    l_nm, l_nl, l_sw = _QE_NMPS, _QE_NLPS, _QE_SW
 
     def decode_sign_and_set(i, x, y, plane_bit):
         # sign context from h/v neighbor contributions
@@ -1143,7 +1081,7 @@ def decode_codeblock(
         hs = -1 if hs < 0 else (1 if hs > 0 else 0)
         vs = -1 if vs < 0 else (1 if vs > 0 else 0)
         sctx, xor = _SIGN_CTX[(hs, vs)]
-        sign[i] = mq(cx[sctx]) ^ xor
+        sign[i] = dec.decode(cx[sctx]) ^ xor
         mag[i] |= plane_bit
         sig[i] = 1
         # bump neighbor significance-context indexes (the rare
@@ -1195,13 +1133,10 @@ def decode_codeblock(
             # runs the per-pixel live loop. Strips snapshot
             # lazily (after all earlier strips), so cross-strip
             # effects are always visible. The MQ decode is
-            # inlined on pass-local registers; the closure cells
-            # sync around each decode_sign_and_set (whose sign
-            # decision still goes through mq()).
-            l_a, l_c, l_ct, l_bp = a_reg, c_reg, ct, bp
-            l_data, l_nd = data, ndata
-            l_qq, l_q16 = qe_q, qe_q16
-            l_nm, l_nl, l_sw = qe_nmps, qe_nlps, qe_sw
+            # inlined on pass-local registers, synced with ``dec``
+            # around each decode_sign_and_set (whose sign decision
+            # goes through dec.decode).
+            l_a, l_c, l_ct, l_bp = dec.a, dec.c, dec.ct, dec.bp
             for ys in range(0, h, 4):
                 ye = ys + 4 if ys + 4 <= h else h
                 seg_el = (
@@ -1274,9 +1209,9 @@ def decode_codeblock(
                             if l_a & 0x8000:
                                 break
                     if bit:
-                        a_reg, c_reg, ct, bp = l_a, l_c, l_ct, l_bp
+                        dec.a, dec.c, dec.ct, dec.bp = l_a, l_c, l_ct, l_bp
                         decode_sign_and_set(i, x, y, plane_bit)
-                        l_a, l_c, l_ct, l_bp = a_reg, c_reg, ct, bp
+                        l_a, l_c, l_ct, l_bp = dec.a, dec.c, dec.ct, dec.bp
                         ev_x, ev_y = x, y
                         break
                 if ev_x < 0:
@@ -1346,12 +1281,12 @@ def decode_codeblock(
                                     if l_a & 0x8000:
                                         break
                             if bit:
-                                a_reg, c_reg, ct, bp = \
+                                dec.a, dec.c, dec.ct, dec.bp = \
                                     l_a, l_c, l_ct, l_bp
                                 decode_sign_and_set(
                                     i, x, y, plane_bit)
                                 l_a, l_c, l_ct, l_bp = \
-                                    a_reg, c_reg, ct, bp
+                                    dec.a, dec.c, dec.ct, dec.bp
                         y += 1
                         i += w
                     x += 1
@@ -1359,7 +1294,7 @@ def decode_codeblock(
                         break
                     y = ys
                     i = ys * w + x
-            a_reg, c_reg, ct, bp = l_a, l_c, l_ct, l_bp
+            dec.a, dec.c, dec.ct, dec.bp = l_a, l_c, l_ct, l_bp
             p += 1
             if p >= npasses:
                 break
@@ -1382,18 +1317,15 @@ def decode_codeblock(
                     (cidx_np[cand] != 0).astype(np.int8),
                 )
                 ctx_by = (ctx14, ctx15, ctx16)
-                # every name this loop touches is hoisted out of
-                # its closure cell into a plain local (mq() and
-                # decode_sign_and_set are never called here, so
-                # the registers are exclusively ours), written
-                # back once at the end of the pass
-                l_a, l_c, l_ct, l_bp = a_reg, c_reg, ct, bp
-                l_data, l_nd, l_mag = data, ndata, mag
-                l_qq, l_q16 = qe_q, qe_q16
-                l_nm, l_nl, l_sw = qe_nmps, qe_nlps, qe_sw
+                # ``mag`` is hoisted out of its closure cell into a
+                # plain local; no decision here goes through
+                # dec.decode, so the registers are written back
+                # once at the end of the pass
+                l_a, l_c, l_ct, l_bp = dec.a, dec.c, dec.ct, dec.bp
+                l_mag = mag
                 for i, k in zip(cand.tolist(), cls.tolist()):
                     state = ctx_by[k]
-                    # -- inlined MQ DECODE (same as mq()) --
+                    # -- inlined MQ DECODE --
                     i_st = state[0]
                     qe = l_qq[i_st]
                     qe16 = l_q16[i_st]
@@ -1448,7 +1380,7 @@ def decode_codeblock(
                     # -----------------------
                     if bit:
                         l_mag[i] |= plane_bit
-                a_reg, c_reg, ct, bp = l_a, l_c, l_ct, l_bp
+                dec.a, dec.c, dec.ct, dec.bp = l_a, l_c, l_ct, l_bp
                 ref_np[cand] = 1
                 vis_np[cand] = 1
             p += 1
@@ -1457,12 +1389,9 @@ def decode_codeblock(
         # ---- cleanup pass ----
         run_state = cx[_CTX_RUNLENGTH]
         uni_state = cx[_CTX_UNIFORM]
-        # MQ inlined on pass-local registers (cells sync around each
-        # decode_sign_and_set / run-length uniform decode)
-        l_a, l_c, l_ct, l_bp = a_reg, c_reg, ct, bp
-        l_data, l_nd = data, ndata
-        l_qq, l_q16 = qe_q, qe_q16
-        l_nm, l_nl, l_sw = qe_nmps, qe_nlps, qe_sw
+        # MQ inlined on pass-local registers (synced with ``dec``
+        # around each decode_sign_and_set / run-length uniform decode)
+        l_a, l_c, l_ct, l_bp = dec.a, dec.c, dec.ct, dec.bp
         for ys in range(0, h, 4):
             full = ys + 4 <= h
             ye = ys + 4 if full else h
@@ -1561,12 +1490,13 @@ def decode_codeblock(
                                     break
                         if not bit:
                             continue  # whole column stays insignificant
-                        a_reg, c_reg, ct, bp = l_a, l_c, l_ct, l_bp
-                        r = (mq(uni_state) << 1) | mq(uni_state)
+                        dec.a, dec.c, dec.ct, dec.bp = l_a, l_c, l_ct, l_bp
+                        r = (dec.decode(uni_state) << 1) \
+                            | dec.decode(uni_state)
                         y = ys + r
                         i = y * w + x
                         decode_sign_and_set(i, x, y, plane_bit)
-                        l_a, l_c, l_ct, l_bp = a_reg, c_reg, ct, bp
+                        l_a, l_c, l_ct, l_bp = dec.a, dec.c, dec.ct, dec.bp
                         event = True
                         y += 1
                 i = y * w + x
@@ -1628,13 +1558,13 @@ def decode_codeblock(
                                 if l_a & 0x8000:
                                     break
                         if bit:
-                            a_reg, c_reg, ct, bp = l_a, l_c, l_ct, l_bp
+                            dec.a, dec.c, dec.ct, dec.bp = l_a, l_c, l_ct, l_bp
                             decode_sign_and_set(i, x, y, plane_bit)
-                            l_a, l_c, l_ct, l_bp = a_reg, c_reg, ct, bp
+                            l_a, l_c, l_ct, l_bp = dec.a, dec.c, dec.ct, dec.bp
                             event = True
                     y += 1
                     i += w
-        a_reg, c_reg, ct, bp = l_a, l_c, l_ct, l_bp
+        dec.a, dec.c, dec.ct, dec.bp = l_a, l_c, l_ct, l_bp
         visited[:] = zeros  # C-level clear (was a size-long loop)
         p += 1
         plane -= 1
@@ -1758,17 +1688,6 @@ def _passes_codeword_read(r: _HeaderReader) -> int:
 # =====================================================================
 
 _CB_EXP = 6  # 64x64 code blocks (the common default)
-
-
-def _level_dims(w: int, h: int, levels: int) -> list:
-    """Window dims [ (w, h) pre-split at each level 1..NL ]."""
-    dims = []
-    cw, ch = w, h
-    for _ in range(levels):
-        dims.append((cw, ch))
-        cw = (cw + 1) // 2
-        ch = (ch + 1) // 2
-    return dims
 
 
 def _level_windows(x0: int, y0: int, w: int, h: int,
@@ -4159,12 +4078,6 @@ def _unwrap_jp2_info(data: bytes) -> tuple:
     raise JPXError("JP2 container has no codestream box")
 
 
-def _unwrap_jp2(data: bytes) -> bytes:
-    """Extract the contiguous codestream from a JP2 container (or
-    return `data` unchanged if it already starts with SOC)."""
-    return _unwrap_jp2_info(data)[0]
-
-
 def decode_jpx(data: bytes) -> tuple[int, int, bytes]:
     """/JPXDecode entry: decode a JP2 file or raw codestream to
     ``(width, height, samples)`` — 8-bit gray, or interleaved RGB
@@ -4281,12 +4194,13 @@ def decode_jpx_gray(data: bytes) -> tuple[int, int, bytes]:
     scanned-page OCR route's input shape."""
     import numpy as np
 
+    from pdf2dataset_spark.sources.jpeg import gray_u8
+
     w, h, px = decode_jpx(data)
     if len(px) == w * h:
         return w, h, px
-    rgb = np.frombuffer(px, np.uint8).reshape(-1, 3).astype(np.float64)
-    y = 0.299 * rgb[:, 0] + 0.587 * rgb[:, 1] + 0.114 * rgb[:, 2]
-    return w, h, np.clip(np.round(y), 0, 255).astype(np.uint8).tobytes()
+    rgb = np.frombuffer(px, np.uint8).reshape(-1, 3)
+    return w, h, gray_u8(rgb.astype(np.float64))
 
 
 # =====================================================================

@@ -73,10 +73,6 @@ class StreamObj:
     raw: bytes  # still encoded; use decoded()
 
 
-def _is_ws(b: int) -> bool:
-    return b in _WS
-
-
 #: whitespace runs interleaved with '%'-to-EOL comments, matched in
 #: one C-speed scan (may match empty — .end() is then just ``pos``)
 _WS_RUN = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*")
@@ -426,14 +422,6 @@ def _rle_decode(data: bytes) -> bytes:
     return bytes(out)
 
 
-#: image-compression filters: the decoded form IS a compressed image
-#: file, transcoded (or honestly surfaced) by page_images, never by
-#: the text path
-_IMAGE_FILTERS = (
-    "/DCTDecode", "/JPXDecode", "/CCITTFaxDecode", "/JBIG2Decode"
-)
-
-
 def _parms_for_filter(
     sdict: dict, resolve, filter_name: str, fallback_keys: tuple
 ) -> dict:
@@ -467,6 +455,95 @@ def _parms_for_filter(
         ),
         {},
     )
+
+
+def _jpeg_adaptor(doc, sdict, data: bytes, entry: dict):
+    from pdf2dataset_spark.sources.jpeg import decode_jpeg
+
+    return lambda: (*decode_jpeg(data), {})
+
+
+def _jpx_adaptor(doc, sdict, data: bytes, entry: dict):
+    from pdf2dataset_spark.sources.jpx import decode_jpx
+
+    return lambda: (*decode_jpx(data), {})
+
+
+def _ccitt_adaptor(doc, sdict, data: bytes, entry: dict):
+    parms = _parms_for_filter(
+        sdict,
+        doc.resolve,
+        "/CCITTFaxDecode",
+        ("/K", "/Columns", "/Rows", "/EncodedByteAlign", "/BlackIs1"),
+    )
+    # all three K regimes decode: K<0 G4 (T.6), K==0 G3 1D (MH), K>0
+    # G3 mixed 2D (EOL+tag framing)
+    k = int(doc.resolve(parms.get("/K", 0)) or 0)
+    cols = int(doc.resolve(parms.get("/Columns", 1728)) or 1728)
+    nrows = doc.resolve(parms.get("/Rows")) or entry["height"] or None
+    align = bool(doc.resolve(parms.get("/EncodedByteAlign", False)))
+    params = {
+        "k": k,
+        "columns": cols,
+        "rows": int(nrows) if nrows else None,
+        "byte_align": align,
+    }
+
+    def decode():
+        from pdf2dataset_spark.sources import ccitt
+
+        # the entry keeps the params so consumers can re-decode
+        return (*ccitt.decode_ccitt_gray(data, **params),
+                {"ccitt_params": params})
+
+    return decode
+
+
+def _jbig2_adaptor(doc, sdict, data: bytes, entry: dict):
+    parms = _parms_for_filter(
+        sdict, doc.resolve, "/JBIG2Decode", ("/JBIG2Globals",)
+    )
+    gstream = doc.resolve(parms.get("/JBIG2Globals"))
+
+    def decode():
+        gbytes = (
+            doc.stream_bytes(gstream)
+            if isinstance(gstream, StreamObj)
+            else None
+        )
+        from pdf2dataset_spark.sources import jbig2
+
+        # consumers re-decode with the globals, like ccitt_params
+        return (*jbig2.decode_jbig2_gray(data, gbytes),
+                {"jbig2_globals": gbytes} if gbytes else {})
+
+    return decode
+
+
+#: image-compression filters: the decoded form IS a compressed image
+#: file, transcoded (or honestly surfaced) by page_images, never by
+#: the text path. Each maps to (entry ``format``, decode adaptor, the
+#: exceptions that mark its payload undecodable — corrupt, or outside
+#: the decoder's scope). An adaptor ``(doc, sdict, data, entry)``
+#: reads the filter's /DecodeParms, whose errors raise out of
+#: page_images, and returns a thunk that page_images runs inside its
+#: ``try``, giving ``(width, height, pixels, extra entry keys)``.
+_IMAGE_DECODERS = {
+    "/DCTDecode": (
+        "jpeg", _jpeg_adaptor,
+        (ValueError, IndexError, struct.error, KeyError, zlib.error),
+    ),
+    "/JPXDecode": (
+        "jpx", _jpx_adaptor, (ValueError, IndexError, KeyError, struct.error),
+    ),
+    "/CCITTFaxDecode": ("ccitt", _ccitt_adaptor, (ValueError, IndexError)),
+    "/JBIG2Decode": (
+        "jbig2", _jbig2_adaptor,
+        (ValueError, IndexError, KeyError, struct.error, zlib.error),
+    ),
+}
+#: a tuple, not the dict: a malformed /Filter entry may be unhashable
+_IMAGE_FILTERS = tuple(_IMAGE_DECODERS)
 
 
 def _run_filter_chain(
@@ -1951,11 +2028,11 @@ class PdfDocument:
           decode — G4/T.6, G3 1D, G3 mixed 2D — via
           :mod:`sources.ccitt`; the entry then carries
           ``ccitt_params`` so consumers can decode), ``"jbig2"``
-          for /JBIG2Decode (arithmetic generic + symbol/text
-          regions and MMR decode via :mod:`sources.jbig2`,
-          /JBIG2Globals honored; Huffman/refinement/halftone
-          variants surface honestly as undecodable), or ``"jpx"``
-          for filters this engine does not transcode.
+          for /JBIG2Decode (via :mod:`sources.jbig2`, /JBIG2Globals
+          honored and carried as ``jbig2_globals``), or ``"jpx"``
+          for /JPXDecode (via :mod:`sources.jpx`). Each filter's
+          format, decoder and undecodable-payload exceptions are
+          one row of :data:`_IMAGE_DECODERS`.
         - ``decodable``: True when ``data`` can be turned into pixels
           with zero native deps — raw samples always; JPEG when
           :func:`sources.jpeg.decode_jpeg` accepts it (baseline /
@@ -2089,135 +2166,29 @@ class PdfDocument:
                 )
                 out.append(entry)
                 continue
-            if stopped == "/DCTDecode":
-                entry["format"] = "jpeg"
-                entry["data"] = data
-                try:
-                    from pdf2dataset_spark.sources.jpeg import decode_jpeg
-
-                    w, h, px = decode_jpeg(data)
-                    entry["decodable"] = True
-                    entry["width"] = entry["width"] or w
-                    entry["height"] = entry["height"] or h
-                    if decode_pixels:
-                        entry["pixels"] = px
-                except (ValueError, IndexError, struct.error, KeyError,
-                        zlib.error):
-                    # corrupt / lossless / arithmetic JPEG: keep the
-                    # compressed file, report honestly that it can't
-                    # be rasterized
-                    entry["decodable"] = False
-            elif stopped == "/CCITTFaxDecode":
-                entry["format"] = "ccitt"
-                entry["data"] = data
-                entry["decodable"] = False
-                parms = _parms_for_filter(
-                    sdict,
-                    self.resolve,
-                    "/CCITTFaxDecode",
-                    ("/K", "/Columns", "/Rows", "/EncodedByteAlign",
-                     "/BlackIs1"),
-                )
-                k = int(self.resolve(parms.get("/K", 0)) or 0)
-                # all three K regimes decode: K<0 G4 (T.6), K==0 G3 1D
-                # (MH), K>0 G3 mixed 2D (EOL+tag framing)
-                cols = int(
-                    self.resolve(parms.get("/Columns", 1728)) or 1728
-                )
-                nrows = self.resolve(parms.get("/Rows")) or entry[
-                    "height"
-                ] or None
-                align = bool(
-                    self.resolve(parms.get("/EncodedByteAlign", False))
-                )
-                ccitt_params = {
-                    "k": k,
-                    "columns": cols,
-                    "rows": int(nrows) if nrows else None,
-                    "byte_align": align,
-                }
-                try:
-                    from pdf2dataset_spark.sources import ccitt
-
-                    w, h, px = ccitt.decode_ccitt_gray(
-                        data, **ccitt_params
-                    )
-                    entry["decodable"] = True
-                    entry["ccitt_params"] = ccitt_params
-                    entry["width"] = entry["width"] or w
-                    entry["height"] = entry["height"] or h
-                    if decode_pixels:
-                        entry["pixels"] = px
-                except (ValueError, IndexError):
-                    pass  # corrupt stream: honest False, payload kept
-            elif stopped == "/JBIG2Decode":
-                entry["format"] = "jbig2"
-                entry["data"] = data
-                entry["decodable"] = False
-                parms = _parms_for_filter(
-                    sdict, self.resolve, "/JBIG2Decode", ("/JBIG2Globals",)
-                )
-                gstream = self.resolve(parms.get("/JBIG2Globals"))
-                try:
-                    gbytes = (
-                        self.stream_bytes(gstream)
-                        if isinstance(gstream, StreamObj)
-                        else None
-                    )
-                    from pdf2dataset_spark.sources import jbig2
-
-                    # cap per-image decode work at the documented
-                    # real-page ceiling (A3 @ 1200 dpi bilevel ~
-                    # 280M px — jbig2's own default); corpus
-                    # operators wanting a tighter CPU bound lower it
-                    # via the decode_jbig2_gray max_pixels= knob
-                    w, h, px = jbig2.decode_jbig2_gray(
-                        data, gbytes, max_pixels=1 << 29
-                    )
-                    entry["decodable"] = True
-                    if gbytes:  # consumers re-decode like ccitt_params
-                        entry["jbig2_globals"] = gbytes
-                    entry["width"] = entry["width"] or w
-                    entry["height"] = entry["height"] or h
-                    if decode_pixels:
-                        entry["pixels"] = px
-                except (ValueError, IndexError, KeyError, struct.error,
-                        zlib.error):
-                    # Huffman/refinement/halftone or corrupt stream:
-                    # honest False, compressed payload kept
-                    pass
-            elif stopped == "/JPXDecode":
-                entry["format"] = "jpx"
-                entry["data"] = data
-                entry["decodable"] = False
-                try:
-                    from pdf2dataset_spark.sources.jpx import decode_jpx
-
-                    w, h, px = decode_jpx(data)
-                    entry["decodable"] = True
-                    entry["width"] = entry["width"] or w
-                    entry["height"] = entry["height"] or h
-                    if decode_pixels:
-                        entry["pixels"] = px
-                except (ValueError, IndexError, KeyError, struct.error):
-                    # lossy 9/7 / multi-tile / corrupt: honest False,
-                    # compressed payload kept
-                    pass
-            elif stopped is not None:
-                # unreachable while every _IMAGE_FILTERS member has an
-                # explicit branch above; a future filter surfaces
-                # under its own name instead of masquerading as ccitt
-                entry["format"] = stopped.lstrip("/").removesuffix(
-                    "Decode"
-                ).lower()
-                entry["data"] = data
-                entry["decodable"] = False
-            else:
+            if stopped is None:
                 entry["format"] = "raw"
                 entry["data"] = data
                 entry["decodable"] = True
                 if decode_pixels:
                     entry["pixels"] = data
+            else:
+                fmt, adaptor, undecodable = _IMAGE_DECODERS[stopped]
+                entry["format"] = fmt
+                entry["data"] = data
+                entry["decodable"] = False
+                decode = adaptor(self, sdict, data, entry)
+                try:
+                    w, h, px, extra = decode()
+                except undecodable:
+                    pass  # honest False, compressed payload kept
+                else:
+                    entry["decodable"] = True
+                    entry.update(extra)
+                    entry["width"] = entry["width"] or w
+                    entry["height"] = entry["height"] or h
+                    if decode_pixels:
+                        entry["pixels"] = px
             # /SMask soft-mask alpha (ISO 32000-1 §11.6.5.2, round-8
             # ask #9): surfaced ALONGSIDE the base payload as decoded
             # 8-bit alpha samples — consumers compose RGBA instead of
@@ -2255,17 +2226,16 @@ class PdfDocument:
             entry["decodable"] = True
             entry["alpha"] = data
         elif stopped == "/DCTDecode":
+            _, adaptor, undecodable = _IMAGE_DECODERS[stopped]
             try:
-                from pdf2dataset_spark.sources.jpeg import decode_jpeg
-
-                w, h, px = decode_jpeg(data)
+                w, h, px, _ = adaptor(self, sd, data, entry)()
+            except undecodable:
+                entry["data"] = data  # honest: compressed, kept
+            else:
                 entry["decodable"] = True
                 entry["alpha"] = px
                 entry["width"] = entry["width"] or w
                 entry["height"] = entry["height"] or h
-            except (ValueError, IndexError, struct.error, KeyError,
-                    zlib.error):
-                entry["data"] = data  # honest: compressed, kept
         else:
             entry["data"] = data
         return entry

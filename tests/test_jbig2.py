@@ -780,3 +780,142 @@ class TestHalftoneSkip:
         base[flags_at] |= 8  # HENABLESKIP alone: grid inside -> noop
         got = jbig2.decode_embedded(bytes(base))
         assert got[2] == ref[2]
+
+
+class TestRefinementFastPath:
+    """The nominal-AT refinement fast path (_decode_refinement_fast)
+    must make the exact coding decisions of the reference per-pixel
+    template walk — same pixels, same MQ register state afterwards
+    (the stream continues past a refinement in symbol dictionaries)."""
+
+    @staticmethod
+    def _reference_decode(dec, cx, width, height, ref, dx, dy,
+                          template, tpgron):
+        from pdf2dataset_spark.sources import jbig2
+
+        coding, reference = jbig2._gr_templates(template, None)
+        sltp_cx = jbig2._GR_SLTP_CX[template]
+        rows = []
+        ltp = 0
+        for y in range(height):
+            if tpgron:
+                state = cx.setdefault(sltp_cx, [0, 0])
+                ltp ^= dec.decode(state)
+            row = bytearray(width)
+            rows.append(row)
+            for x in range(width):
+                if ltp:
+                    typ = jbig2._gr_typical(ref, x, y, dx, dy)
+                    if typ is not None:
+                        row[x] = typ
+                        continue
+                c = jbig2._gr_context(
+                    rows, ref, x, y, dx, dy, coding, reference
+                )
+                state = cx.setdefault(c, [0, 0])
+                row[x] = dec.decode(state)
+        return rows
+
+    @pytest.mark.parametrize("template", [0, 1])
+    @pytest.mark.parametrize("tpgron", [False, True])
+    def test_fast_matches_reference_walk(self, template, tpgron):
+        import random
+
+        from pdf2dataset_spark.sources import jbig2
+
+        rng = random.Random(1107 + template + 2 * tpgron)
+        for trial in range(8):
+            w = rng.choice([32, 45, 64])
+            h = rng.randint(4, 24)
+            dx, dy = rng.randint(-3, 3), rng.randint(-3, 3)
+            rw, rh = max(1, w + rng.randint(-5, 5)), max(
+                1, h + rng.randint(-4, 4)
+            )
+            ref = [
+                bytearray(rng.getrandbits(1) for _ in range(rw))
+                for _ in range(rh)
+            ]
+            target = [
+                bytearray(
+                    (ref[y][x] if y < rh and x < rw else 0)
+                    for x in range(w)
+                )
+                for y in range(h)
+            ]
+            for _ in range(w * h // 10):
+                target[rng.randrange(h)][rng.randrange(w)] ^= 1
+            enc = jbig2.MQEncoder()
+            jbig2.encode_refinement(
+                enc, {}, target, ref, dx, dy, template, None, tpgron
+            )
+            data = enc.flush()
+            d1 = jbig2.MQDecoder(data)
+            fast = jbig2.decode_refinement(
+                d1, {}, w, h, ref, dx, dy, template, None, tpgron
+            )
+            d2 = jbig2.MQDecoder(data)
+            slow = self._reference_decode(
+                d2, {}, w, h, ref, dx, dy, template, tpgron
+            )
+            assert [bytes(r) for r in fast] == [bytes(r) for r in slow]
+            assert [bytes(r) for r in fast] == [
+                bytes(r) for r in target
+            ]
+            assert (d1.bp, d1.c, d1.ct, d1.a) == (
+                d2.bp, d2.c, d2.ct, d2.a,
+            )
+
+    def test_narrow_bitmaps_keep_reference_walk(self):
+        """Symbol-refinement-sized bitmaps (< 32 px) stay on the
+        general path (numpy per-row overhead loses there)."""
+        from pdf2dataset_spark.sources import jbig2
+
+        ref = [bytearray([1, 0, 1, 0, 1]) for _ in range(5)]
+        target = [bytearray(r) for r in ref]
+        target[2][2] ^= 1
+        enc = jbig2.MQEncoder()
+        jbig2.encode_refinement(enc, {}, target, ref, 0, 0, 0, None,
+                                False)
+        dec = jbig2.MQDecoder(enc.flush())
+        out = jbig2.decode_refinement(dec, {}, 5, 5, ref, 0, 0, 0,
+                                      None, False)
+        assert [bytes(r) for r in out] == [bytes(r) for r in target]
+
+
+class TestBlitByteOps:
+    """_blit's big-int byte ops must equal the per-pixel §4 operator
+    semantics for every op under arbitrary clipping."""
+
+    def test_all_ops_all_clips_match_scalar_reference(self):
+        import random
+
+        from pdf2dataset_spark.sources.jbig2 import _COMBOPS, _blit
+
+        rng = random.Random(3)
+        for _ in range(150):
+            big_w, big_h = rng.randint(1, 90), rng.randint(1, 6)
+            sw, sh = rng.randint(1, 100), rng.randint(1, 6)
+            x0 = rng.randint(-sw - 2, big_w + 2)
+            y0 = rng.randint(-sh - 2, big_h + 2)
+            op = rng.randrange(5)
+            dst = [
+                bytearray(rng.getrandbits(1) for _ in range(big_w))
+                for _ in range(big_h)
+            ]
+            src = [
+                bytearray(rng.getrandbits(1) for _ in range(sw))
+                for _ in range(sh)
+            ]
+            ref = [bytearray(r) for r in dst]
+            f = _COMBOPS[op]
+            for sy in range(sh):
+                yy = y0 + sy
+                if not 0 <= yy < big_h:
+                    continue
+                for sx in range(sw):
+                    xx = x0 + sx
+                    if not 0 <= xx < big_w:
+                        continue
+                    ref[yy][xx] = f(ref[yy][xx], src[sy][sx])
+            _blit(dst, src, x0, y0, op)
+            assert dst == ref, (big_w, big_h, sw, sh, x0, y0, op)

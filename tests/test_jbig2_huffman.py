@@ -586,3 +586,117 @@ class TestHuffmanTrueAggregate:
         # truncate the stream hard: the decoder must error, not hang
         with pytest.raises(jh.JBIG2Error):
             jbig2.decode_embedded(data[:len(data) - 30])
+
+
+class TestJbig2HuffmanLut:
+    """The lazy whole-code LUT + windowed bits() must reproduce the
+    per-bit reference walk exactly: decoded values, consumed bit
+    positions, AND error outcomes on truncated streams."""
+
+    @staticmethod
+    def _walk_decode(tb, br):
+        """The pre-LUT per-bit reference decode."""
+        from pdf2dataset_spark.sources import jbig2_huffman as jh
+        from pdf2dataset_spark.sources.jbig2 import JBIG2Error
+
+        length = 0
+        code = 0
+        dm = tb._decode_map
+        while True:
+            code = (code << 1) | br.bit()
+            length += 1
+            ln = dm.get((length, code))
+            if ln is not None:
+                break
+            if length > 32:
+                raise JBIG2Error("Huffman prefix longer than any code")
+        preflen, rangelen, rangelow, kind = ln
+        if kind == jh._OOBK:
+            return jh.OOB
+        if kind == jh._LOWER:
+            return rangelow - br.bits(32)
+        if kind == jh._UPPER:
+            return rangelow + br.bits(32)
+        return rangelow + br.bits(rangelen)
+
+    def test_standard_tables_match_walk(self):
+        import random
+
+        from pdf2dataset_spark.sources import jbig2_huffman as jh
+        from pdf2dataset_spark.sources.jbig2 import JBIG2Error
+
+        rng = random.Random(31)
+        for idx in range(1, 16):
+            tb = jh.standard_table(idx)
+            for _ in range(200):
+                data = bytes(
+                    rng.getrandbits(8)
+                    for _ in range(rng.choice([0, 1, 2, 3, 4, 8, 16]))
+                )
+                b_new, b_old = jh.BitReader(data), jh.BitReader(data)
+                try:
+                    got = (tb.decode(b_new), b_new.pos)
+                except JBIG2Error:
+                    got = "err"
+                try:
+                    want = (self._walk_decode(tb, b_old), b_old.pos)
+                except JBIG2Error:
+                    want = "err"
+                assert got == want, (idx, data.hex())
+
+    def test_long_codes_fall_back_to_walk(self):
+        from pdf2dataset_spark.sources import jbig2_huffman as jh
+
+        # 16-bit codes exceed the 13-bit LUT window
+        lines = [(1, 0, 0, jh._NORMAL)] + [
+            (16, 0, i, jh._NORMAL) for i in range(1, 5)
+        ]
+        tb = jh.HuffTable(lines)
+        bw = jh.BitWriter()
+        for v in (0, 3, 1, 4, 0, 2):
+            tb.encode(bw, v)
+        br = jh.BitReader(bw.getvalue())
+        assert [tb.decode(br) for _ in range(6)] == [0, 3, 1, 4, 0, 2]
+        assert tb._lut_bits == 13
+
+    def test_lut_matches_decode_map(self):
+        from pdf2dataset_spark.sources import jbig2_huffman as jh
+
+        tb = jh.standard_table(8)
+        tb.decode(jh.BitReader(b"\x00\x00"))  # force lazy build
+        width = tb._lut_bits
+        for (preflen, code), ln in tb._decode_map.items():
+            if preflen <= width:
+                base = code << (width - preflen)
+                for probe in (base, base + (1 << (width - preflen)) - 1):
+                    assert tb._lut[probe] is ln
+
+    def test_windowed_bits_matches_per_bit(self):
+        import random
+
+        from pdf2dataset_spark.sources import jbig2_huffman as jh
+        from pdf2dataset_spark.sources.jbig2 import JBIG2Error
+
+        rng = random.Random(77)
+        for _ in range(2000):
+            data = bytes(
+                rng.getrandbits(8) for _ in range(rng.choice([0, 1, 2, 5]))
+            )
+            pos = rng.randint(0, len(data) * 8)
+            n = rng.randint(0, 40)
+            br = jh.BitReader(data)
+            br.pos = pos
+            try:
+                got = (br.bits(n), br.pos)
+            except JBIG2Error:
+                got = "err"
+            want = 0
+            for k in range(n):
+                i = pos + k
+                if (i >> 3) >= len(data):
+                    want = "err"
+                    break
+                want = (want << 1) | ((data[i >> 3] >> (7 - (i & 7))) & 1)
+            if want != "err":
+                want = (want, pos + n)
+            assert got == want, (data.hex(), pos, n)

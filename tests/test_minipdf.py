@@ -1067,6 +1067,67 @@ def test_page_images_color_jpeg_kept_compressed():
     assert (entry["width"], entry["height"]) == (16, 8)  # declared dims kept
 
 
+def test_image_decoder_table_names_the_cost_model_filters():
+    """The driver-side cost model (which must not import minipdf)
+    charges exactly the filters page_images decodes."""
+    from pdf2dataset_spark.sources import memory
+
+    charged = {f"/{k.decode()}Decode" for k in memory._MS_PER_MPX}
+    assert charged == set(minipdf._IMAGE_DECODERS)
+    assert minipdf._IMAGE_FILTERS == tuple(minipdf._IMAGE_DECODERS)
+
+
+def _scan_xobject(fmt: str) -> dict:
+    """A valid one-image XObject of each /Filter page_images decodes."""
+    from pdf2dataset_spark.sources import ccitt, jbig2, jpeg, jpx
+
+    w, h = 48, 16
+    px = bytes(0 if (x // 3 + y // 2) % 4 == 0 else 255
+               for y in range(h) for x in range(w))
+    if fmt == "jpeg":
+        return {"filter": "/DCTDecode", "data": jpeg.encode_jpeg(w, h, px),
+                "width": w, "height": h}
+    if fmt == "jpx":
+        return {"filter": "/JPXDecode",
+                "data": jpx.encode_jpx(w, h, px, 1, levels=2),
+                "width": w, "height": h}
+    if fmt == "ccitt":
+        return {"filter": "/CCITTFaxDecode", "data": ccitt.encode_g4(px, w, h),
+                "width": w, "height": h, "bits": 1,
+                "decode_parms": {"/K": -1, "/Columns": w, "/Rows": h}}
+    rows = [bytearray(1 if px[y * w + x] < 128 else 0 for x in range(w))
+            for y in range(h)]
+    return {"filter": "/JBIG2Decode", "width": w, "height": h, "bits": 1,
+            "data": jbig2.encode_generic_page(rows, template=0, tpgdon=True)}
+
+
+@pytest.mark.parametrize("fmt", ["jpeg", "jpx", "ccitt", "jbig2"])
+def test_truncated_scan_payload_is_kept_undecodable(fmt):
+    xobj = _scan_xobject(fmt)
+    doc = minipdf.PdfDocument(minipdf.build_pdf([""], images=[xobj]))
+    (whole,) = doc.page_images(doc.pages()[0], decode_pixels=True)
+    assert whole["format"] == fmt and whole["decodable"] is True
+    cut = xobj["data"][: len(xobj["data"]) // 2]
+    doc = minipdf.PdfDocument(
+        minipdf.build_pdf([""], images=[dict(xobj, data=cut)])
+    )
+    (entry,) = doc.page_images(doc.pages()[0], decode_pixels=True)
+    assert entry["format"] == fmt and entry["decodable"] is False
+    assert entry["data"] == cut
+    assert "pixels" not in entry
+
+
+def test_malformed_ccitt_parms_raise_out_of_page_images():
+    """/DecodeParms are read outside the decode's error net: a /K
+    that is not a number is a malformed document, not an undecodable
+    payload."""
+    xobj = _scan_xobject("ccitt")
+    xobj["decode_parms"] = dict(xobj["decode_parms"], **{"/K": "/G4"})
+    doc = minipdf.PdfDocument(minipdf.build_pdf([""], images=[xobj]))
+    with pytest.raises(ValueError):
+        doc.page_images(doc.pages()[0])
+
+
 def test_stream_bytes_still_rejects_dct_on_text_paths():
     pdf, jpg, _ = _image_pdf()
     doc = minipdf.PdfDocument(pdf)
