@@ -581,9 +581,10 @@ def _decode_generic_fast(
     # contribution (w2 << sh2) | (w1 << sh1) is precomputable per ROW
     # — vectorized for wide rows (one shifted-or per template dx),
     # leaving just the current-row w0 slide in the pixel loop. Narrow
-    # rows (symbol-dictionary glyph bitmaps) keep the scalar slide:
-    # numpy's per-call overhead loses below ~32 px.
-    use_np = width >= 32
+    # rows keep the scalar slide: numpy's per-row call overhead loses
+    # below ~128 px (template 0, alternating in-process A/B: the
+    # scalar slide wins 20/21 pairs at 32-64 px, numpy 18/21 at 144).
+    use_np = width >= 128
     npl = max(-l1, -l2, 0)  # left zero-pad so negative dx reads 0
     qe_q, qe_q16 = _QE_Q, _QE_Q16
     qe_nmps, qe_nlps, qe_sw = _QE_NMPS, _QE_NLPS, _QE_SW

@@ -42,7 +42,8 @@ dimensions and map onto the reference grid by replication per B.2,
 with the external sYCC transform inverted when the JP2 colr box
 signals EnumCS 18), and multiple QUALITY LAYERS in all five
 progression orders (per-precinct inclusion state persists across
-layers, chunks concatenating into each block's single MQ stream).
+layers, each contribution appending to its block's codeword
+segments).
 The FULL CODE-BLOCK STYLE byte (D.7) decodes: selective arithmetic
 bypass (raw bit-stuffed sig/mag segments alternating with
 terminated MQ cleanups, each separately length-signaled per
@@ -357,9 +358,6 @@ class TagTreeDecoder:
                 return False  # value >= threshold (so far)
         return True
 
-    def value(self, li0_state, x, y):  # pragma: no cover - debug aid
-        return self.state[0].get((x, y))
-
 
 class TagTreeEncoder:
     def __init__(self, w: int, h: int, values: dict):
@@ -493,11 +491,11 @@ def _fresh_contexts() -> list:
 
 
 class _BlockState:
-    """Shared encode/decode state for one code block. With
-    ``causal`` (cbstyle vertically-stripe-causal, D.7), context
-    formation treats every sample in the stripe BELOW (x, y)'s
-    4-row stripe as insignificant — significance/sign lookups are
-    masked here so the shared walkers need no changes."""
+    """Encoder state for one code block, read by the reference pass
+    walkers. With ``causal`` (cbstyle vertically-stripe-causal,
+    D.7), context formation treats every sample in the stripe BELOW
+    (x, y)'s 4-row stripe as insignificant — significance/sign
+    lookups are masked here so the walkers need no changes."""
 
     __slots__ = ("w", "h", "sig", "visited", "refined", "sign",
                  "mag", "causal")
@@ -571,33 +569,23 @@ def _strip_iter(w: int, h: int):
                 yield x, y
 
 
-def _pass_sig(bit_of, put, st: _BlockState, band: str, plane: int):
-    """Significance-propagation pass (D.3.1): visit coefficients not
+def _pass_sig(put, st: _BlockState, band: str, plane: int):
+    """Significance-propagation pass (D.3.1): code coefficients not
     yet significant that have a significant neighbor."""
     for x, y in _strip_iter(st.w, st.h):
         i = y * st.w + x
         if st.sig[i] or not st.any_sig_neighbor(x, y):
             continue
         st.visited[i] = 1
-        ctx = _sig_ctx(*st.neighborhood(x, y), band)
-        if bit_of is not None:
-            b = bit_of("sig", x, y, ctx)
-        else:
-            b = (st.mag[i] >> plane) & 1
-            put("sig", x, y, ctx, b)
+        b = (st.mag[i] >> plane) & 1
+        put("sig", x, y, _sig_ctx(*st.neighborhood(x, y), band), b)
         if b:
-            if bit_of is not None:
-                sctx, xor = st.sign_ctx(x, y)
-                sbit = bit_of("sign", x, y, sctx)
-                st.sign[i] = sbit ^ xor
-                st.mag[i] |= 1 << plane
-            else:
-                sctx, xor = st.sign_ctx(x, y)
-                put("sign", x, y, sctx, st.sign[i] ^ xor)
+            sctx, xor = st.sign_ctx(x, y)
+            put("sign", x, y, sctx, st.sign[i] ^ xor)
             st.sig[i] = 1
 
 
-def _pass_mag(bit_of, put, st: _BlockState, plane: int):
+def _pass_mag(put, st: _BlockState, plane: int):
     """Magnitude-refinement pass (D.3.3)."""
     for x, y in _strip_iter(st.w, st.h):
         i = y * st.w + x
@@ -609,100 +597,54 @@ def _pass_mag(bit_of, put, st: _BlockState, plane: int):
         else:
             ctx = (_CTX_MR_FIRST_NBR if st.any_sig_neighbor(x, y)
                    else _CTX_MR_FIRST)
-        if bit_of is not None:
-            b = bit_of("mag", x, y, ctx)
-            if b:
-                st.mag[i] |= 1 << plane
-        else:
-            put("mag", x, y, ctx, (st.mag[i] >> plane) & 1)
+        put("mag", x, y, ctx, (st.mag[i] >> plane) & 1)
         st.refined[i] = 1
         st.visited[i] = 1
 
 
-def _pass_cleanup(bit_of, put, st: _BlockState, band: str, plane: int):
+def _pass_cleanup(put, st: _BlockState, band: str, plane: int):
     """Cleanup pass (D.3.4) with column run-length coding."""
     w, h = st.w, st.h
     for y0 in range(0, h, 4):
         for x in range(w):
             y = y0
-            while y < min(y0 + 4, h):
-                i = y * w + x
-                run_mode = False
-                if (
-                    y == y0
-                    and y0 + 4 <= h
-                    and all(
-                        not st.visited[(y0 + k) * w + x]
-                        and not st.sig[(y0 + k) * w + x]
-                        and not st.any_sig_neighbor(x, y0 + k)
-                        for k in range(4)
-                    )
-                ):
-                    run_mode = True
-                if run_mode:
-                    if bit_of is not None:
-                        any_sig = bit_of("run", x, y0, _CTX_RUNLENGTH)
-                        if not any_sig:
-                            y = y0 + 4
-                            continue
-                        r = (bit_of("uni", x, y0, _CTX_UNIFORM) << 1) | (
-                            bit_of("uni", x, y0, _CTX_UNIFORM)
-                        )
-                    else:
-                        first = next(
-                            (
-                                k
-                                for k in range(4)
-                                if (st.mag[(y0 + k) * w + x] >> plane) & 1
-                            ),
-                            None,
-                        )
-                        if first is None:
-                            put("run", x, y0, _CTX_RUNLENGTH, 0)
-                            y = y0 + 4
-                            continue
-                        put("run", x, y0, _CTX_RUNLENGTH, 1)
-                        put("uni", x, y0, _CTX_UNIFORM, (first >> 1) & 1)
-                        put("uni", x, y0, _CTX_UNIFORM, first & 1)
-                        r = first
-                    # coefficient at y0 + r becomes significant with
-                    # an implied 1-bit; its sign follows
-                    y = y0 + r
-                    i = y * w + x
-                    if bit_of is not None:
-                        sctx, xor = st.sign_ctx(x, y)
-                        sbit = bit_of("sign", x, y, sctx)
-                        st.sign[i] = sbit ^ xor
-                        st.mag[i] |= 1 << plane
-                    else:
-                        sctx, xor = st.sign_ctx(x, y)
-                        put("sign", x, y, sctx, st.sign[i] ^ xor)
-                    st.sig[i] = 1
-                    y += 1
+            if y0 + 4 <= h and all(
+                not st.visited[(y0 + k) * w + x]
+                and not st.sig[(y0 + k) * w + x]
+                and not st.any_sig_neighbor(x, y0 + k)
+                for k in range(4)
+            ):
+                first = next(
+                    (k for k in range(4)
+                     if (st.mag[(y0 + k) * w + x] >> plane) & 1),
+                    None,
+                )
+                if first is None:
+                    put("run", x, y0, _CTX_RUNLENGTH, 0)
                     continue
-                if st.visited[i] or st.sig[i]:
-                    y += 1
-                    continue
-                ctx = _sig_ctx(*st.neighborhood(x, y), band)
-                if bit_of is not None:
-                    b = bit_of("sig", x, y, ctx)
-                else:
-                    b = (st.mag[i] >> plane) & 1
-                    put("sig", x, y, ctx, b)
-                if b:
-                    if bit_of is not None:
-                        sctx, xor = st.sign_ctx(x, y)
-                        sbit = bit_of("sign", x, y, sctx)
-                        st.sign[i] = sbit ^ xor
-                        st.mag[i] |= 1 << plane
-                    else:
-                        sctx, xor = st.sign_ctx(x, y)
-                        put("sign", x, y, sctx, st.sign[i] ^ xor)
-                    st.sig[i] = 1
+                put("run", x, y0, _CTX_RUNLENGTH, 1)
+                put("uni", x, y0, _CTX_UNIFORM, (first >> 1) & 1)
+                put("uni", x, y0, _CTX_UNIFORM, first & 1)
+                # coefficient at y0 + first becomes significant with
+                # an implied 1-bit; its sign follows
+                y = y0 + first
+                sctx, xor = st.sign_ctx(x, y)
+                put("sign", x, y, sctx, st.sign[y * w + x] ^ xor)
+                st.sig[y * w + x] = 1
                 y += 1
+            for y in range(y, min(y0 + 4, h)):
+                i = y * w + x
+                if st.visited[i] or st.sig[i]:
+                    continue
+                b = (st.mag[i] >> plane) & 1
+                put("sig", x, y, _sig_ctx(*st.neighborhood(x, y), band),
+                    b)
+                if b:
+                    sctx, xor = st.sign_ctx(x, y)
+                    put("sign", x, y, sctx, st.sign[i] ^ xor)
+                    st.sig[i] = 1
     # reset per-plane visited flags
-    for i in range(w * h):
-        st.visited[i] = 0
+    st.visited[:] = bytes(w * h)
 
 
 class _RawWriter:
@@ -759,16 +701,6 @@ class _RawReader:
         return (self.acc >> self.nbits) & 1
 
 
-def _bypass_boundary_after(p: int) -> bool:
-    """Selective-bypass codeword-segment termination rule (D.4/D.7):
-    the first 10 coding passes form one arithmetic segment; from
-    then on raw (sig+mag) pairs alternate with one-pass arithmetic
-    cleanups, each segment terminated. Pass p (0-based; 0 = first
-    cleanup, then sig/mag/cleanup triplets) ends a segment iff
-    p == 9 or (p > 9 and p is not a significance pass)."""
-    return p == 9 or (p > 9 and (p - 1) % 3 != 0)
-
-
 def _bypass_is_raw(p: int) -> bool:
     """Pass p is raw-coded under selective bypass (significance and
     magnitude passes from the 11th pass on; cleanups stay MQ)."""
@@ -776,50 +708,48 @@ def _bypass_is_raw(p: int) -> bool:
 
 
 def _style_boundary_after(p: int, cbstyle: int) -> bool:
-    """Codeword-segment termination rule for a cbstyle combination:
-    TERMALL (0x04) terminates every pass; else selective bypass
-    (0x01) terminates per :func:`_bypass_boundary_after`; else the
-    block is one segment."""
+    """Does pass p (0-based; 0 = first cleanup, then sig/mag/cleanup
+    triplets) end a codeword segment under this cbstyle? TERMALL
+    (0x04) terminates every pass. Selective bypass (0x01, D.4/D.7)
+    makes the first 10 passes one arithmetic segment; from then on
+    raw (sig+mag) pairs alternate with one-pass arithmetic cleanups,
+    each terminated: p == 9, or p > 9 and not a significance pass.
+    Otherwise the block is one segment."""
     if cbstyle & 0x04:
         return True
-    if cbstyle & 0x01:
-        return _bypass_boundary_after(p)
-    return False
+    return bool(cbstyle & 0x01) and (
+        p == 9 or (p > 9 and (p - 1) % 3 != 0)
+    )
 
 
 def _style_parts(p0: int, p1: int, cbstyle: int):
     """Split pass range [p0, p1) at the style's segment boundaries →
-    [(start, end, is_raw, seg_index), ...]. seg_index counts
-    segments from pass 0 so packet parts map onto the block's
-    accumulated segment list across quality layers."""
+    [(start, end, seg_index), ...]. seg_index counts segments from
+    pass 0 so packet parts map onto the block's accumulated segment
+    list across quality layers; with no terminating style bit the
+    whole range is one part of segment 0."""
     parts = []
     seg_index = sum(
         1 for p in range(p0) if _style_boundary_after(p, cbstyle)
     )
-    bypass = bool(cbstyle & 0x01)
     start = p0
     for p in range(p0, p1):
         if _style_boundary_after(p, cbstyle) or p == p1 - 1:
-            parts.append((
-                start, p + 1, bypass and _bypass_is_raw(start),
-                seg_index,
-            ))
+            parts.append((start, p + 1, seg_index))
             if _style_boundary_after(p, cbstyle):
                 seg_index += 1
             start = p + 1
     return parts
 
 
-def _bypass_parts(p0: int, p1: int):
-    """:func:`_style_parts` for plain selective bypass."""
-    return _style_parts(p0, p1, 0x01)
-
-
 def encode_codeblock_styled(coeffs, w: int, h: int, band: str,
                             cbstyle: int):
-    """EBCOT-encode under a CODE-BLOCK STYLE combination (COD byte,
-    D.7): → (segments, n_passes, n_bitplanes) with segments
-    [(is_raw, bytes), ...] in pass order.
+    """EBCOT-encode signed coefficients (row-major list) under a
+    CODE-BLOCK STYLE combination (COD byte, D.7) → (segments,
+    n_passes, n_bitplanes): the codeword segments as byte strings in
+    pass order, the input :func:`decode_codeblock` takes. All three
+    passes per plane; cbstyle 0 is the default style, one MQ
+    segment.
 
     - 0x01 selective bypass: the first 10 passes are one MQ segment;
       later sig/mag passes ride RAW bit-stuffed segments (sign bits
@@ -834,8 +764,8 @@ def encode_codeblock_styled(coeffs, w: int, h: int, band: str,
       the end of every cleanup pass (decoder validates it).
 
     MQ contexts persist across terminated MQ segments unless reset.
-    With cbstyle 0 the single segment is byte-identical to
-    :func:`encode_codeblock`."""
+    The shared pass walkers are the readable reference for the coding
+    decisions; the round-trip tests pin the decoder to them."""
     causal = bool(cbstyle & 0x08)
     reset = bool(cbstyle & 0x02)
     segmark = bool(cbstyle & 0x20)
@@ -863,12 +793,10 @@ def encode_codeblock_styled(coeffs, w: int, h: int, band: str,
         else:
             raw.bit(bit)
 
-    npasses = 0
     total = 1 + 3 * (nplanes - 1)
     bypass = bool(cbstyle & 0x01)
-    p = 0
     plane = nplanes - 1
-    while p < total:
+    for p in range(total):
         is_raw = bypass and _bypass_is_raw(p)
         if is_raw and raw is None:
             raw = _RawWriter()
@@ -879,152 +807,33 @@ def encode_codeblock_styled(coeffs, w: int, h: int, band: str,
         put = put_raw if is_raw else put_mq
         ptype = 2 if p == 0 else (p - 1) % 3
         if ptype == 0:
-            _pass_sig(None, put, st2, band, plane)
+            _pass_sig(put, st2, band, plane)
         elif ptype == 1:
-            _pass_mag(None, put, st2, plane)
+            _pass_mag(put, st2, plane)
         else:
-            _pass_cleanup(None, put, st2, band, plane)
+            _pass_cleanup(put, st2, band, plane)
             if segmark:
                 for b in (1, 0, 1, 0):
                     enc.encode(b, cx[_CTX_UNIFORM])
             plane -= 1
-        npasses += 1
         if _style_boundary_after(p, cbstyle) or p == total - 1:
             if is_raw:
-                segments.append((True, raw.flush()))
+                segments.append(raw.flush())
                 raw = None
             else:
-                segments.append((False, enc.flush()))
+                segments.append(enc.flush())
                 enc = None
-        p += 1
-    return segments, npasses, nplanes
+    return segments, total, nplanes
 
 
-def encode_codeblock_bypass(coeffs, w: int, h: int, band: str):
-    """:func:`encode_codeblock_styled` with plain selective bypass."""
-    return encode_codeblock_styled(coeffs, w, h, band, 0x01)
-
-
-def decode_codeblock_styled(
+def decode_codeblock(
     segments, w: int, h: int, band: str, nplanes: int, npasses: int,
     cbstyle: int,
 ):
     """Inverse of :func:`encode_codeblock_styled`: decode a block
-    from its codeword segments under the given style. MQ contexts
-    persist across independently terminated MQ segments (unless
-    RESET); raw segments use the D.4.2 bit-unstuffing reader;
-    segmentation symbols are validated (1010 after each cleanup).
-    Built on the shared reference pass walkers (styled blocks trade
-    the inlined fast decoder for restartability)."""
-    causal = bool(cbstyle & 0x08)
-    reset = bool(cbstyle & 0x02)
-    segmark = bool(cbstyle & 0x20)
-    st = _BlockState(w, h, causal)
-    cx = _fresh_contexts()
-    seg_iter = iter(segments)
-    reader = None
-    reader_raw = False
-
-    def next_reader():
-        nonlocal reader, reader_raw
-        is_raw, data = next(seg_iter)
-        reader_raw = is_raw
-        reader = _RawReader(data) if is_raw else MQDecoder(data)
-
-    def bit_of(kind, x, y, ctx):
-        if reader_raw:
-            b = reader.bit()
-            if kind == "sign":
-                _, xor = st.sign_ctx(x, y)
-                return b ^ xor
-            return b
-        return reader.decode(cx[ctx])
-
-    p = 0
-    plane = nplanes - 1
-    need_reader = True
-    while p < npasses and plane >= 0:
-        if need_reader:
-            try:
-                next_reader()
-            except StopIteration:
-                break
-            need_reader = False
-        if reset:
-            cx[:] = _fresh_contexts()
-        ptype = 2 if p == 0 else (p - 1) % 3
-        if ptype == 0:
-            _pass_sig(bit_of, None, st, band, plane)
-        elif ptype == 1:
-            _pass_mag(bit_of, None, st, plane)
-        else:
-            _pass_cleanup(bit_of, None, st, band, plane)
-            if segmark:
-                got = 0
-                for _ in range(4):
-                    got = (got << 1) | reader.decode(cx[_CTX_UNIFORM])
-                if got != 0b1010:
-                    raise JPXError(
-                        "segmentation symbol mismatch (corrupt "
-                        "code-block data)"
-                    )
-            plane -= 1
-        if _style_boundary_after(p, cbstyle):
-            need_reader = True
-        p += 1
-    return [
-        -m if s else m for m, s in zip(st.mag, st.sign)
-    ]
-
-
-def decode_codeblock_bypass(
-    segments, w: int, h: int, band: str, nplanes: int, npasses: int
-):
-    """:func:`decode_codeblock_styled` with plain selective bypass."""
-    return decode_codeblock_styled(
-        segments, w, h, band, nplanes, npasses, 0x01
-    )
-
-
-def encode_codeblock(coeffs, w: int, h: int, band: str):
-    """EBCOT-encode signed coefficients (row-major list) → (data,
-    n_passes, n_bitplanes). All three passes per plane, single MQ
-    codeword segment (default code-block style)."""
-    st = _BlockState(w, h)
-    maxmag = 0
-    for i, c in enumerate(coeffs):
-        st.mag[i] = abs(c)
-        st.sign[i] = 1 if c < 0 else 0
-        maxmag = max(maxmag, abs(c))
-    nplanes = max(1, maxmag.bit_length())
-    enc = MQEncoder()
-    cx = _fresh_contexts()
-
-    def put(kind, x, y, ctx, bit):
-        enc.encode(bit, cx[ctx])
-
-    # drop the magnitudes into a fresh state for pass simulation: the
-    # shared pass walkers mutate sig/refined exactly like decode
-    st2 = _BlockState(w, h)
-    st2.mag = st.mag
-    st2.sign = st.sign
-    npasses = 0
-    for plane in range(nplanes - 1, -1, -1):
-        if npasses == 0:
-            _pass_cleanup(None, put, st2, band, plane)
-            npasses += 1
-        else:
-            _pass_sig(None, put, st2, band, plane)
-            _pass_mag(None, put, st2, plane)
-            _pass_cleanup(None, put, st2, band, plane)
-            npasses += 3
-    return enc.flush(), npasses, nplanes
-
-
-def decode_codeblock(
-    data: bytes, w: int, h: int, band: str, nplanes: int, npasses: int
-):
-    """Inverse of :func:`encode_codeblock` → signed coefficient list.
+    from its codeword segments (byte strings in pass order, as
+    :func:`_style_parts` splits them) under code-block style
+    ``cbstyle`` → signed coefficient list.
 
     This is the production (per-corpus-page) path, so it is written
     for speed: MQ DECODE is inlined into the five pass loops (the
@@ -1036,10 +845,19 @@ def decode_codeblock(
     significance is tracked incrementally (updated on the rare
     became-significant events instead of re-scanned per decision),
     and every block, of any size, runs the same numpy snapshot
-    walkers, which visit only the pixels a pass can decode. The
-    encoder keeps the readable shared walkers — the round-trip
-    property tests pin the two implementations to the same coding
-    decisions."""
+    walkers, which visit only the pixels a pass can decode.
+
+    The style bits act only at pass or segment starts or in the
+    became-significant event, so a cbstyle-0 block runs the same
+    decision loops: each terminated segment starts a fresh
+    :class:`MQDecoder` (contexts persist) or, for a bypass raw pass,
+    a :class:`_RawReader` whose sign bits are the signs themselves;
+    RESET refreshes the contexts at every pass start; vertically
+    causal context formation leaves the stripe below out of the
+    neighbor index and the sign context; segmentation symbols are
+    checked after every cleanup. The encoder keeps the readable
+    shared walkers — the round-trip tests pin the two
+    implementations to the same coding decisions for every style."""
     size = w * h
     sig = bytearray(size)
     visited = bytearray(size)
@@ -1058,17 +876,20 @@ def decode_codeblock(
         if band == "HL"
         else (_SIG_LUT["HH"] if band == "HH" else _SIG_LUT["LL"])
     )
+    causal = cbstyle & 0x08
     cx = _fresh_contexts()
-    # the registers live on ``dec``; each pass loop copies them into
-    # the locals l_a/l_c/l_ct/l_bp for its inlined DECODEs and syncs
-    # them back around every decision that goes through dec.decode
-    dec = MQDecoder(data)
-    l_data, l_nd = data, len(data)
+    # the registers live on ``dec`` (the current MQ segment's coder);
+    # each pass loop copies them into the locals l_a/l_c/l_ct/l_bp
+    # for its inlined DECODEs and syncs them back around every
+    # decision that goes through dec.decode. ``raw`` is the reader
+    # of a bypass raw pass, else None.
+    dec = raw = None
     l_qq, l_q16 = _QE_Q, _QE_Q16
     l_nm, l_nl, l_sw = _QE_NMPS, _QE_NLPS, _QE_SW
 
     def decode_sign_and_set(i, x, y, plane_bit):
-        # sign context from h/v neighbor contributions
+        # sign context from h/v neighbor contributions; vertically
+        # causal context formation ignores the stripe below
         hs = vs = 0
         if x > 0 and sig[i - 1]:
             hs += -1 if sign[i - 1] else 1
@@ -1076,18 +897,22 @@ def decode_codeblock(
             hs += -1 if sign[i + 1] else 1
         if y > 0 and sig[i - w]:
             vs += -1 if sign[i - w] else 1
-        if y < h - 1 and sig[i + w]:
+        if (y < h - 1 and sig[i + w]
+                and not (causal and (y + 1) % 4 == 0)):
             vs += -1 if sign[i + w] else 1
         hs = -1 if hs < 0 else (1 if hs > 0 else 0)
         vs = -1 if vs < 0 else (1 if vs > 0 else 0)
         sctx, xor = _SIGN_CTX[(hs, vs)]
-        sign[i] = dec.decode(cx[sctx]) ^ xor
+        # a raw (bypass) sign bit is the sign itself, unpredicted
+        sign[i] = raw.bit() if raw else dec.decode(cx[sctx]) ^ xor
         mag[i] |= plane_bit
         sig[i] = 1
         # bump neighbor significance-context indexes (the rare
         # event): h neighbors +15, v +5, d +1 — one array carries
-        # both the scan-skip predicate (nonzero) and the LUT index
-        y0 = y > 0
+        # both the scan-skip predicate (nonzero) and the LUT index.
+        # Under vertically causal formation, row y - 1 does not see
+        # a first row of the stripe below it.
+        y0 = y > 0 and not (causal and y % 4 == 0)
         y1 = y < h - 1
         x0 = x > 0
         x1 = x < w - 1
@@ -1120,11 +945,36 @@ def decode_codeblock(
     cidx_np = np.frombuffer(cidx, dtype=np.uint8)
     order = _strip_order(w, h)
     plane = nplanes - 1
-    p = 0
+    p = seg = 0
     while p < npasses and plane >= 0:
+        # ---- pass start: codeword segment and context reset ----
+        if p == 0 or _style_boundary_after(p - 1, cbstyle):
+            if seg == len(segments):
+                break  # no codeword segment left for this pass
+            data = segments[seg]
+            seg += 1
+            if cbstyle & 0x01 and _bypass_is_raw(p):
+                raw = _RawReader(data)
+            else:
+                raw = None
+                dec = MQDecoder(data)
+                l_data, l_nd = data, len(data)
+        if cbstyle & 0x02:
+            cx[:] = _fresh_contexts()
         plane_bit = 1 << plane
-        if p > 0:
+        ptype = 2 if p == 0 else (p - 1) % 3
+        p += 1
+        if ptype == 0:
             # ---- significance propagation pass ----
+            if raw:
+                # raw pass: one bit per candidate, in strip order
+                for i in order.tolist():
+                    if not sig[i] and cidx[i]:
+                        visited[i] = 1
+                        if raw.bit():
+                            decode_sign_and_set(
+                                i, i % w, i // w, plane_bit)
+                continue
             # per-strip snapshot: eligibility (not sig, has sig
             # neighbors) can only be GAINED during the pass, and
             # only by neighbors of a became-significant event —
@@ -1295,9 +1145,8 @@ def decode_codeblock(
                     y = ys
                     i = ys * w + x
             dec.a, dec.c, dec.ct, dec.bp = l_a, l_c, l_ct, l_bp
-            p += 1
-            if p >= npasses:
-                break
+            continue
+        if ptype == 1:
             # ---- magnitude refinement pass (hottest: one decision
             # per already-significant coefficient per plane — MQ
             # decode inlined to drop the call overhead) ----
@@ -1316,6 +1165,15 @@ def decode_codeblock(
                     ref_np[cand] != 0, 2,
                     (cidx_np[cand] != 0).astype(np.int8),
                 )
+                # marked up front: the decisions below read neither
+                ref_np[cand] = 1
+                vis_np[cand] = 1
+                if raw:
+                    # raw pass: one bit per candidate
+                    for i in cand.tolist():
+                        if raw.bit():
+                            mag[i] |= plane_bit
+                    continue
                 ctx_by = (ctx14, ctx15, ctx16)
                 # ``mag`` is hoisted out of its closure cell into a
                 # plain local; no decision here goes through
@@ -1381,11 +1239,7 @@ def decode_codeblock(
                     if bit:
                         l_mag[i] |= plane_bit
                 dec.a, dec.c, dec.ct, dec.bp = l_a, l_c, l_ct, l_bp
-                ref_np[cand] = 1
-                vis_np[cand] = 1
-            p += 1
-            if p >= npasses:
-                break
+            continue
         # ---- cleanup pass ----
         run_state = cx[_CTX_RUNLENGTH]
         uni_state = cx[_CTX_UNIFORM]
@@ -1565,8 +1419,17 @@ def decode_codeblock(
                     y += 1
                     i += w
         dec.a, dec.c, dec.ct, dec.bp = l_a, l_c, l_ct, l_bp
+        if cbstyle & 0x20:
+            # segmentation symbol: 1010 in the uniform context
+            got = 0
+            for _ in range(4):
+                got = (got << 1) | dec.decode(cx[_CTX_UNIFORM])
+            if got != 0b1010:
+                raise JPXError(
+                    "segmentation symbol mismatch (corrupt "
+                    "code-block data)"
+                )
         visited[:] = zeros  # C-level clear (was a size-long loop)
-        p += 1
         plane -= 1
     return [-m if s else m for m, s in zip(mag, sign)]
 
@@ -1806,17 +1669,15 @@ def _encode_tile_component(plane, w: int, h: int, levels: int,
                            cb_exp: tuple = (_CB_EXP, _CB_EXP)):
     """EBCOT-encode one component's coefficient plane → (per-resolution
     band/block structures, per-subband max plane counts in QCD order).
-    When ``cbstyle`` carries terminations (bypass/termall) each
-    block's data is its codeword-SEGMENT list instead of one byte
-    string; other style bits keep a single (styled) segment.
+    Each block's data is its codeword-segment list under ``cbstyle``
+    (:func:`encode_codeblock_styled`; one segment unless the style
+    terminates passes).
     ``origin`` is the tile-component origin (tcx0, tcy0) for
     canvas-offset streams — round-10: it no longer needs to be
     phase-safe; it shifts the band dims/split points (B-15) and
     anchors each band's code-block grid at that band's own absolute
     origin (T.800 B.7). ``precincts``/``cb_exp`` (round-10) size
     the EFFECTIVE per-resolution block grid (B-17)."""
-    terminated = bool(cbstyle & 0x05)
-    styled = bool(cbstyle & 0x2F)  # any bit that changes the coding
     resolutions = []
     exps = []
     for r in range(levels + 1):
@@ -1835,20 +1696,12 @@ def _encode_tile_component(plane, w: int, h: int, levels: int,
                     for xx in range(cw)
                 ]
                 if any(coeffs):
-                    if styled:
-                        data, npasses, nplanes = encode_codeblock_styled(
-                            coeffs, cw, ch, name, cbstyle
-                        )
-                        if not terminated:
-                            data = data[0][1]  # single MQ segment
-                    else:
-                        data, npasses, nplanes = encode_codeblock(
-                            coeffs, cw, ch, name
-                        )
+                    segs, npasses, nplanes = encode_codeblock_styled(
+                        coeffs, cw, ch, name, cbstyle
+                    )
                 else:
-                    data, npasses, nplanes = ([] if terminated
-                                              else b"", 0, 0)
-                blocks.append((gx, gy, data, npasses, nplanes))
+                    segs, npasses, nplanes = [], 0, 0
+                blocks.append((gx, gy, segs, npasses, nplanes))
             per_band.append((name, bw, bh, blocks))
             exps.append(max((b[4] for b in blocks), default=0))
         resolutions.append(per_band)
@@ -2172,7 +2025,7 @@ def _build_packet_layer(per_band, l: int, eph: bool,
         lblock = st["lblock"]
         mb = st["mb"]
         fl_map = st["fl"]
-        for gx, gy, data, npasses, nplanes in st["blocks"]:
+        for gx, gy, segs, npasses, nplanes in st["blocks"]:
             key = (gx, gy)
             fl = fl_map[key]
             if fl > l:  # not yet included (or never: all-zero)
@@ -2187,42 +2040,25 @@ def _build_packet_layer(per_band, l: int, eph: bool,
                     t += 1
                 _passes_codeword_write(hw, npasses)
                 lb = lblock.setdefault(key, 3)
-                if isinstance(data, list):
-                    # bypass/termall: one length per codeword
-                    # segment, bits = Lblock + floor(log2(segment
-                    # passes)); Lblock raised once so EVERY segment
-                    # length fits
-                    parts = _style_parts(0, npasses, cbstyle)
-                    k = 0
-                    for (s0, s1, _, si) in parts:
-                        nbits = max(1, len(data[si][1]).bit_length())
-                        avail = lb + ((s1 - s0).bit_length() - 1)
-                        k = max(k, nbits - avail)
-                    for _ in range(k):
-                        hw.bit(1)
-                    hw.bit(0)
-                    lblock[key] = lb + k
-                    for (s0, s1, _, si) in parts:
-                        seg_bytes = data[si][1]
-                        hw.bits(
-                            len(seg_bytes),
-                            lb + k + ((s1 - s0).bit_length() - 1),
-                        )
-                        body += seg_bytes
-                else:
-                    nbits = max(1, len(data).bit_length())
-                    avail = lb + (npasses.bit_length() - 1)
-                    if nbits > avail:
-                        k = nbits - avail
-                        for _ in range(k):
-                            hw.bit(1)
-                        hw.bit(0)
-                        lblock[key] = lb + k
-                        avail = nbits
-                    else:
-                        hw.bit(0)
-                    hw.bits(len(data), avail)
-                    body += data
+                # one length per codeword segment, bits = Lblock +
+                # floor(log2(segment passes)); Lblock raised once so
+                # EVERY segment length fits
+                parts = _style_parts(0, npasses, cbstyle)
+                k = 0
+                for s0, s1, si in parts:
+                    nbits = max(1, len(segs[si]).bit_length())
+                    avail = lb + ((s1 - s0).bit_length() - 1)
+                    k = max(k, nbits - avail)
+                for _ in range(k):
+                    hw.bit(1)
+                hw.bit(0)
+                lblock[key] = lb + k
+                for s0, s1, si in parts:
+                    hw.bits(
+                        len(segs[si]),
+                        lb + k + ((s1 - s0).bit_length() - 1),
+                    )
+                    body += segs[si]
             else:  # previously included: single bit (B.10.4)
                 hw.bit(0)
     return hw.flush() + eph_m + bytes(body)
@@ -3416,12 +3252,12 @@ def _parse_markers(data: bytes):
 class _ResolutionState:
     """Per-(tile, component, resolution, PRECINCT) decoding state
     persisting across quality layers (B.10): inclusion and
-    zero-bitplane tag trees (precinct-local grids), Lblock, and the
-    accumulated coding-pass chunks per code block (default
-    single-codeword-segment style: per-layer chunks concatenate into
-    one MQ stream). ``wins`` gives this precinct's window in each
-    band's local coordinates; the default single-precinct layout
-    passes the full band."""
+    zero-bitplane tag trees (precinct-local grids), Lblock, and each
+    code block's codeword segments (a layer's contribution to an
+    unterminated segment appends to it, so the default style
+    accumulates one MQ segment). ``wins`` gives this precinct's
+    window in each band's local coordinates; the default
+    single-precinct layout passes the full band."""
 
     __slots__ = ("bands", "mbs", "per_band", "cbstyle")
 
@@ -3456,37 +3292,23 @@ class _ResolutionState:
                 "zbp": TagTreeDecoder(gw, gh),
                 "lblock": {},
                 # (gx, gy) -> [name, px, py, cw, ch, nplanes,
-                #              npasses, chunks]
+                #              npasses, segments]
                 "blocks": {},
                 "cells": cells,
             })
 
     def finish(self):
-        """EBCOT-decode every included block's accumulated chunks."""
+        """EBCOT-decode every included block's codeword segments."""
         out = []
         for band_state in self.per_band:
             if band_state is None:
                 continue
             for blk in band_state["blocks"].values():
-                (name, px, py, cw, ch, nplanes, npasses, chunks,
-                 segs) = blk
-                if segs is not None:
-                    coeffs = decode_codeblock_styled(
-                        [(r, bytes(d)) for r, d in segs],
-                        cw, ch, name, nplanes, npasses, self.cbstyle,
-                    )
-                elif self.cbstyle & ~0x10:
-                    # reset/causal/segmark without terminations:
-                    # one segment, styled walkers
-                    coeffs = decode_codeblock_styled(
-                        [(False, b"".join(chunks))],
-                        cw, ch, name, nplanes, npasses, self.cbstyle,
-                    )
-                else:
-                    coeffs = decode_codeblock(
-                        b"".join(chunks), cw, ch, name, nplanes,
-                        npasses,
-                    )
+                name, px, py, cw, ch, nplanes, npasses, segs = blk
+                coeffs = decode_codeblock(
+                    [bytes(d) for d in segs], cw, ch, name, nplanes,
+                    npasses, self.cbstyle,
+                )
                 out.append((name, px, py, cw, ch, coeffs))
         return out
 
@@ -3536,7 +3358,6 @@ def _decode_packet(data: bytes, pos: int, state: _ResolutionState,
                 zbp = t - 1
                 blk = blocks[key] = [
                     name, bx + x, by + y, cw, ch, mb - zbp, 0, [],
-                    [] if state.cbstyle & 0x05 else None,
                 ]
             else:
                 # previously included: single bit (B.10.4)
@@ -3547,37 +3368,28 @@ def _decode_packet(data: bytes, pos: int, state: _ResolutionState,
             while reader.bit():
                 lb += 1
             lblock[key] = lb
-            if not state.cbstyle & 0x05:
-                nbits = lb + (npasses.bit_length() - 1)
-                length = reader.bits(nbits)
-                work.append((blk, length, None, False))
-            else:
-                # B.10.7.4: bypass/termall terminations split the
-                # contribution into codeword segments, one signaled
-                # length each (bits = Lblock + floor(log2(segment
-                # passes))); an unterminated tail continues in the
-                # next layer's contribution (same seg_index)
-                p0 = blk[6]
-                for s0, s1, is_raw, seg_index in _style_parts(
-                    p0, p0 + npasses, state.cbstyle
-                ):
-                    nbits = lb + ((s1 - s0).bit_length() - 1)
-                    length = reader.bits(nbits)
-                    work.append((blk, length, seg_index, is_raw))
+            # B.10.7.4: bypass/termall terminations split the
+            # contribution into codeword segments, one signaled
+            # length each (bits = Lblock + floor(log2(segment
+            # passes))); an unterminated tail continues in the next
+            # layer's contribution (same seg_index). With no
+            # terminating style bit this is one length of
+            # Lblock + floor(log2(npasses)) bits.
+            p0 = blk[6]
+            for s0, s1, seg_index in _style_parts(
+                p0, p0 + npasses, state.cbstyle
+            ):
+                nbits = lb + ((s1 - s0).bit_length() - 1)
+                work.append((blk, reader.bits(nbits), seg_index))
             blk[6] += npasses
     body = end_of_header()
-    for blk, length, seg_index, is_raw in work:
+    for blk, length, seg_index in work:
         if body + length > len(data):
             raise JPXError("code-block data overruns stream")
-        piece = data[body:body + length]
-        if seg_index is None:
-            blk[7].append(piece)
-        else:
-            segs = blk[8]
-            while len(segs) <= seg_index:
-                segs.append([False, bytearray()])
-            segs[seg_index][0] = is_raw
-            segs[seg_index][1] += piece
+        segs = blk[7]
+        while len(segs) <= seg_index:
+            segs.append(bytearray())
+        segs[seg_index] += data[body:body + length]
         body += length
     return body
 

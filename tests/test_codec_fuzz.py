@@ -104,6 +104,11 @@ class TestJPXFuzz:
                            quant_style="derived"),
             jpx.encode_jpx(24, 18, px, 1, levels=2, layers=3,
                            tile_size=(12, 9), sop=True, eph=True),
+            # every code-block style bit: per-pass segments, raw
+            # passes, reset, causal contexts, segmentation symbols
+            jpx.encode_jpx(24, 18, px, 1, levels=2, cbstyle=0x3F),
+            jpx.encode_jpx(24, 18, px, 1, levels=2, bypass=True,
+                           layers=3),
         ]
         _contract(jpx.decode_jpx, payloads, rng, 40)
 

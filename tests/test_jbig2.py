@@ -160,19 +160,21 @@ class TestGenericRegion:
         from pdf2dataset_spark.sources.jbig2 import NOMINAL_AT
 
         rng = random.Random(60 + template)
-        for tpgdon in (False, True):
-            bm = _rand_bitmap(rng, 37, 23, 0.35)
+        # 37 px rows take the scalar row slide, 150 px the numpy one
+        for width, tpgdon in ((37, False), (37, True), (150, False),
+                              (150, True)):
+            bm = _rand_bitmap(rng, width, 23, 0.35)
             bm[5] = bytearray(bm[4])  # a typical row for tpgdon
             enc = MQEncoder()
             encode_generic(enc, {}, bm, template, None, tpgdon)
             data = enc.flush()
             fast = decode_generic(
-                MQDecoder(data), {}, 37, 23, template, None, tpgdon
+                MQDecoder(data), {}, width, 23, template, None, tpgdon
             )
             assert [bytes(r) for r in fast] == [bytes(r) for r in bm]
             # same nominal AT passed explicitly still hits fast path
             fast2 = decode_generic(
-                MQDecoder(data), {}, 37, 23, template,
+                MQDecoder(data), {}, width, 23, template,
                 NOMINAL_AT[template], tpgdon,
             )
             assert fast2 == fast

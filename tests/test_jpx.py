@@ -21,7 +21,7 @@ from pdf2dataset_spark.sources.jpx import (
     decode_jpx_gray,
     dwt53_forward_2d,
     dwt53_inverse_2d,
-    encode_codeblock,
+    encode_codeblock_styled,
     encode_jpx,
 )
 
@@ -146,19 +146,62 @@ class TestTagTree:
 
 
 class TestEBCOT:
-    @pytest.mark.parametrize("band", ["LL", "HL", "LH", "HH"])
-    def test_codeblock_roundtrip(self, band):
+    @pytest.mark.parametrize("band,cbstyle", [
+        pytest.param(band, cbstyle,
+                     id=band if cbstyle == 0 else f"{band}-{cbstyle:#04x}")
+        for cbstyle in range(0x40)
+        for band in ["LL", "HL", "LH", "HH"]
+    ])
+    def test_codeblock_roundtrip(self, band, cbstyle):
+        """Differential gate: the one decoder against the reference
+        walkers of the encoder, for every code-block style (D.7)."""
         rng = random.Random(band)
         # one pixel up to a full 64x64 block, odd sides and partial
-        # last strips included
+        # last strips included (h % 4 != 0 meets causal masking at a
+        # partial stripe)
         for (w, h) in [(1, 1), (4, 4), (8, 5), (16, 16), (13, 9),
                        (32, 32), (45, 23), (64, 17), (64, 64)]:
             for mag in (1, 7, 255, 2047):
                 coeffs = [rng.randrange(-mag, mag + 1) for _ in range(w * h)]
-                data, npasses, nplanes = encode_codeblock(coeffs, w, h, band)
+                segs, npasses, nplanes = encode_codeblock_styled(
+                    coeffs, w, h, band, cbstyle
+                )
                 assert decode_codeblock(
-                    data, w, h, band, nplanes, npasses
+                    segs, w, h, band, nplanes, npasses, cbstyle
                 ) == coeffs
+
+    @pytest.mark.parametrize("cbstyle,k,want", [
+        (0x00, 5, [
+            0, 192, -128, 192, -128, 32, -192, 0, 64, -64, 32, 64, 64,
+            32, -128, 192, 192, 0, -192, -128, 0, 64, -128, 64, 64,
+            -192, -64, 64, -64, 0, -64, 128, -64, -128, 128, -192, 64,
+            192, -64, -192,
+        ]),
+        (0x3F, 14, [
+            -16, 216, -184, 208, -168, 48, -192, -8, 112, -72, 40, 104,
+            96, 32, -144, 248, 248, 8, -200, -176, -24, 88, -168, 64,
+            64, -200, -120, 80, -104, 16, -120, 136, -112, -128, 168,
+            -192, 64, 240, -64, -232,
+        ]),
+    ])
+    def test_truncated_layer_decodes_first_passes(self, cbstyle, k, want):
+        """A layer that stops after pass k: the decoder gets the
+        segments of the first k passes (every pass is one under
+        termall) and returns the partial magnitudes. ``want`` is a
+        pinned literal, so a drift in the truncated-pass handling
+        shows here."""
+        rng = random.Random(1503)
+        w, h = 8, 5
+        coeffs = [rng.randrange(-255, 256) for _ in range(w * h)]
+        segs, npasses, nplanes = encode_codeblock_styled(
+            coeffs, w, h, "HH", cbstyle
+        )
+        assert npasses == 22 and nplanes == 8
+        if cbstyle & 0x04:
+            segs = segs[:k]
+        assert decode_codeblock(
+            segs, w, h, "HH", nplanes, k, cbstyle
+        ) == want
 
     def test_sparse_blocks_runlength_path(self):
         rng = random.Random(3)
@@ -166,9 +209,11 @@ class TestEBCOT:
             coeffs = [0] * 256
             for _ in range(5):
                 coeffs[rng.randrange(256)] = rng.randrange(-100, 101)
-            data, npasses, nplanes = encode_codeblock(coeffs, 16, 16, "LL")
+            segs, npasses, nplanes = encode_codeblock_styled(
+                coeffs, 16, 16, "LL", 0
+            )
             assert decode_codeblock(
-                data, 16, 16, "LL", nplanes, npasses
+                segs, 16, 16, "LL", nplanes, npasses, 0
             ) == coeffs
 
 
@@ -466,16 +511,14 @@ class TestCraftedStreamBudgets:
         # a sub-1KB stream must not allocate per-packet state for
         # millions of packets (the no-OOM invariant): crafted Lcod
         # layer/level counts are rejected against the bit budget
+        # before any per-packet state exists
         import struct
-        import time
 
         data = bytearray(encode_jpx(16, 16, bytes(256), 1, levels=4))
         cod_at = bytes(data).index(b"\xff\x52")
         data[cod_at + 6:cod_at + 8] = struct.pack(">H", 65535)
-        t0 = time.monotonic()
-        with pytest.raises(JPXError):
+        with pytest.raises(JPXError, match="packet budget"):
             decode_jpx(bytes(data))
-        assert time.monotonic() - t0 < 0.5
 
     def test_crafted_level_count_rejected(self):
         data = bytearray(encode_jpx(8, 8, bytes(64), 1, levels=1))
@@ -949,21 +992,19 @@ class TestArithmeticBypass:
 
     def test_segment_boundary_rule(self):
         from pdf2dataset_spark.sources.jpx import (
-            _bypass_is_raw, _bypass_parts,
+            _bypass_is_raw, _style_parts,
         )
 
         # pass 0 cleanup; triplets after; raw from the 11th pass on
         assert [_bypass_is_raw(p) for p in range(13)] == (
             [False] * 10 + [True, True, False]
         )
-        assert _bypass_parts(0, 16) == [
-            (0, 10, False, 0), (10, 12, True, 1), (12, 13, False, 2),
-            (13, 15, True, 3), (15, 16, False, 4),
+        assert _style_parts(0, 16, 0x01) == [
+            (0, 10, 0), (10, 12, 1), (12, 13, 2), (13, 15, 3),
+            (15, 16, 4),
         ]
         # a contribution starting mid-segment keeps the seg index
-        assert _bypass_parts(10, 13) == [
-            (10, 12, True, 1), (12, 13, False, 2),
-        ]
+        assert _style_parts(10, 13, 0x01) == [(10, 12, 1), (12, 13, 2)]
 
     def test_raw_io_bit_stuffing(self):
         from pdf2dataset_spark.sources.jpx import _RawReader, _RawWriter
@@ -984,34 +1025,24 @@ class TestArithmeticBypass:
     def test_deep_block_roundtrip_with_raw_segments(self):
         import random
 
-        from pdf2dataset_spark.sources.jpx import (
-            decode_codeblock_bypass, encode_codeblock_bypass,
-        )
-
         rng = random.Random(7)
         w, h = 33, 17
         coeffs = [rng.randint(-100000, 100000) if rng.random() < 0.7
                   else 0 for _ in range(w * h)]
-        segs, npasses, nplanes = encode_codeblock_bypass(
-            coeffs, w, h, "LH"
+        segs, npasses, nplanes = encode_codeblock_styled(
+            coeffs, w, h, "LH", 0x01
         )
-        assert any(r for r, _ in segs)  # raw segments actually used
-        got = decode_codeblock_bypass(segs, w, h, "LH", nplanes,
-                                      npasses)
+        assert len(segs) > 2  # raw segments actually used
+        got = decode_codeblock(segs, w, h, "LH", nplanes, npasses,
+                               0x01)
         assert got == coeffs
 
     def test_shallow_block_identical_to_plain_encoder(self):
-        from pdf2dataset_spark.sources.jpx import (
-            encode_codeblock, encode_codeblock_bypass,
-        )
-
         coeffs = [((i * 7) % 13) - 6 for i in range(64)]
-        segs, npasses, nplanes = encode_codeblock_bypass(
-            coeffs, 8, 8, "HL"
-        )
-        data, np2, npl2 = encode_codeblock(coeffs, 8, 8, "HL")
-        assert (npasses, nplanes) == (np2, npl2)
-        assert segs == [(False, data)]  # <= 10 passes: one MQ segment
+        out = encode_codeblock_styled(coeffs, 8, 8, "HL", 0x01)
+        # <= 10 passes: one MQ segment, the default style's
+        assert len(out[0]) == 1
+        assert out == encode_codeblock_styled(coeffs, 8, 8, "HL", 0)
 
     def test_full_stream_roundtrips(self):
         import numpy as np
