@@ -3006,6 +3006,18 @@ def _encode_jpx_lossy(
 # =====================================================================
 
 
+def _segment_parser(parse):
+    """Wrap a marker-segment parser so that a field read past the end
+    of a short segment raises JPXError, not struct.error/IndexError."""
+    def checked(seg: bytes, *args):
+        try:
+            return parse(seg, *args)
+        except (struct.error, IndexError) as e:
+            raise JPXError(f"short segment for {parse.__name__}") from e
+    return checked
+
+
+@_segment_parser
 def _parse_cod(seg: bytes) -> dict:
     """COD segment (A.6.1) → the coding-style dict keys."""
     scod = seg[0]
@@ -3052,6 +3064,7 @@ def _parse_precinct_bytes(pp: bytes, levels: int) -> list:
     return precincts
 
 
+@_segment_parser
 def _parse_coc(seg: bytes, ncomp: int) -> tuple[int, dict]:
     """COC segment (A.6.2) → (component, per-component coding-style
     overrides: levels / cb_exp / cbstyle / transform / precincts)."""
@@ -3080,6 +3093,7 @@ def _parse_coc(seg: bytes, ncomp: int) -> tuple[int, dict]:
     )
 
 
+@_segment_parser
 def _parse_qcd(seg: bytes) -> dict:
     """QCD segment (A.6.4) → quantization entry."""
     style = seg[0] & 0x1F
@@ -3097,6 +3111,7 @@ def _parse_qcd(seg: bytes) -> dict:
     return entry
 
 
+@_segment_parser
 def _parse_qcc(seg: bytes, ncomp: int) -> tuple[int, dict]:
     """QCC segment (A.6.5) → (component, quantization entry)."""
     if ncomp < 257:
@@ -3135,11 +3150,17 @@ def _parse_markers(data: bytes):
         if marker == 0xD9:
             raise JPXError("EOC before any tile")
         length = struct.unpack_from(">H", data, pos)[0]
+        if length < 2 or pos + length > len(data):
+            raise JPXError(f"truncated marker segment 0xff{marker:02x}")
         seg = data[pos + 2 : pos + length]
         if marker == 0x51:  # SIZ
+            if len(seg) < 36:
+                raise JPXError("short SIZ segment")
             (rsiz, xs, ys, xo, yo, xts, yts, xto, yto, ncomp) = (
                 struct.unpack_from(">HIIIIIIIIH", seg, 0)
             )
+            if ncomp < 1 or len(seg) < 36 + 3 * ncomp:
+                raise JPXError(f"bad SIZ component list ({ncomp})")
             if xts <= 0 or yts <= 0:
                 raise JPXError("non-positive tile size")
             # canvas offsets (B.3, round-8): XTO/YTO must not exceed
@@ -3696,6 +3717,8 @@ def decode_codestream(data: bytes):
     while pos < len(data) and data[pos:pos + 2] != b"\xff\xd9":
         if data[pos:pos + 2] != b"\xff\x90":
             raise JPXError("expected SOT between tiles")
+        if pos + 12 > len(data):
+            raise JPXError("truncated SOT segment")
         lsot = struct.unpack_from(">H", data, pos + 2)[0]
         isot, psot, tpsot, tnsot = struct.unpack_from(
             ">HIBB", data, pos + 4

@@ -47,6 +47,7 @@ import zlib
 from bisect import bisect_left, bisect_right
 from codecs import charmap_decode as _charmap_decode
 from dataclasses import dataclass
+from itertools import islice
 from operator import itemgetter
 from typing import Any
 
@@ -369,7 +370,7 @@ def _apply_predictor(data: bytes, pm: dict, resolve) -> bytes:
         return bytes(out)
     # PNG predictors: rows of (1 tag byte + rowlen data bytes)
     out = bytearray()
-    prev = bytearray(rowlen)
+    prev = bytearray(min(rowlen, len(data)))  # a row, not /Columns
     pos = 0
     while pos + 1 <= len(data):
         tag = data[pos]
@@ -612,6 +613,10 @@ _CS_COMPONENTS = {"/DeviceGray": 1, "/DeviceRGB": 3, "/DeviceCMYK": 4,
 
 _BI_RE = re.compile(rb"(?:^|[\s])BI([\s/])", re.S)
 _EI_RE = re.compile(rb"[\s]EI(?=[\s]|$)", re.S)
+#: filtered inline-image data ends at one of its first EI candidates:
+#: BI..EI fragments that never decode cost a few filter runs per BI,
+#: not one per later EI of the stream
+_EI_CANDIDATES = 8
 
 
 def _expand_inline(v: Any) -> Any:
@@ -622,73 +627,78 @@ def _expand_inline(v: Any) -> Any:
     return v
 
 
+def _inline_image_at(
+    content: bytes, dict_start: int, resolve=lambda v: v
+) -> tuple[dict, int, int] | None:
+    """The inline image whose dict starts at ``dict_start`` (the byte
+    after ``BI``) as ``(params, data_start, data_end)``, keys and names
+    expanded, or None. Unfiltered data ends after W*H*BPC*components
+    bits (rows byte-padded); filtered data at the first of its first
+    :data:`_EI_CANDIDATES` EIs the filter chain decodes up to (a raw
+    `EI` inside compressed bytes cannot end it early)."""
+    # pairs up to ID, parsed in place: a BI with no dict fails at its
+    # first token instead of searching the rest of the stream for ID
+    params = {}
+    pos = dict_start
+    try:
+        while True:
+            pos = _skip_ws(content, pos)
+            if content.startswith(b"ID", pos) and content[pos + 2] in _WS:
+                break
+            key, pos = _parse_name(content, pos)
+            v, pos = parse_value(content, pos)
+            params[_INLINE_KEYS.get(key, key)] = _expand_inline(v)
+    except (ValueError, IndexError):
+        return None
+    data_start = pos + 3
+    filt = params.get("/Filter")
+    try:
+        w = int(resolve(params.get("/Width", 0)) or 0)
+        h = int(resolve(params.get("/Height", 0)) or 0)
+    except (TypeError, ValueError):
+        return None
+    if filt is None:
+        # an array colorspace ([/Indexed base hival lookup] is one
+        # palette index) or an unknown name counts one component
+        cs = resolve(params.get("/ColorSpace", "/DeviceGray"))
+        ncomp = _CS_COMPONENTS.get(cs, 1) if isinstance(cs, str) else 1
+        try:
+            bpc = int(resolve(params.get("/BitsPerComponent", 8)) or 8)
+        except (TypeError, ValueError):
+            return None
+        if params.get("/ImageMask") is True:
+            ncomp, bpc = 1, 1
+        row = -(-(w * ncomp * bpc) // 8)
+        return params, data_start, data_start + max(row * h, 0)
+    # filtered: try EI candidates until the chain decodes; a malformed
+    # /DecodeParms or a bad LZW code fails a candidate like truncation
+    for ei in islice(_EI_RE.finditer(content, data_start), _EI_CANDIDATES):
+        data = content[data_start : ei.start()]
+        try:
+            decoded, stopped = _run_filter_chain(
+                data, filt, params.get("/DecodeParms"), resolve, True
+            )
+        except (ValueError, IndexError, KeyError, TypeError,
+                AttributeError, zlib.error):
+            continue
+        if stopped == "/DCTDecode" and not decoded.rstrip().endswith(
+            b"\xff\xd9"
+        ):
+            continue  # an EI inside the JPEG byte stream
+        return params, data_start, ei.start()
+    return None
+
+
 def inline_images(content: bytes, resolve=lambda v: v) -> list[dict]:
     """BI..ID..EI inline images of a content stream (ISO 32000-1
-    §8.9.7) as (params_dict, data) entries with abbreviated keys and
-    filter/colorspace names expanded. For unfiltered data the extent
-    is computed exactly from W*H*BPC*components (rows byte-padded);
-    for filtered data candidate EI delimiters are tried until the
-    filter chain decodes (a raw `EI` inside compressed bytes cannot
-    end the scan early)."""
+    §8.9.7) as {"params", "data"} entries; :func:`_inline_image_at`
+    parses and measures each one, and one it cannot is left out."""
     out: list[dict] = []
     for m in _BI_RE.finditer(content):
-        dict_start = m.end() - 1  # keep the [\s/] byte
-        id_m = re.compile(rb"[\s]ID[\s]").search(content, dict_start)
-        if not id_m:
-            continue
-        try:
-            params_raw, _ = parse_value(
-                b"<<" + content[dict_start : id_m.start()] + b">>", 0
-            )
-        except (ValueError, IndexError):
-            continue
-        if not isinstance(params_raw, dict):
-            continue
-        params = {
-            _INLINE_KEYS.get(k, k): _expand_inline(v)
-            for k, v in params_raw.items()
-        }
-        data_start = id_m.end()
-        filt = params.get("/Filter")
-        try:
-            w = int(resolve(params.get("/Width", 0)) or 0)
-            h = int(resolve(params.get("/Height", 0)) or 0)
-        except (TypeError, ValueError):
-            continue  # one malformed inline image must not abort the scan
-        if filt is None:
-            cs = resolve(params.get("/ColorSpace", "/DeviceGray"))
-            # Array colorspaces ([/Indexed base hival lookup],
-            # [/ICCBased ref], ...) are unhashable; /Indexed is always
-            # 1 component (an index into the palette), anything else
-            # unknown falls back to 1 rather than aborting the scan.
-            if isinstance(cs, list):
-                cs = "/Indexed" if cs and cs[0] == "/Indexed" else None
-            ncomp = _CS_COMPONENTS.get(cs, 1) if isinstance(cs, str) else 1
-            try:
-                bpc = int(resolve(params.get("/BitsPerComponent", 8)) or 8)
-            except (TypeError, ValueError):
-                continue
-            if params.get("/ImageMask") is True:
-                ncomp, bpc = 1, 1
-            row = -(-(w * ncomp * bpc) // 8)
-            end = data_start + row * h
-            out.append({"params": params, "data": content[data_start:end]})
-            continue
-        # filtered: try successive EI candidates until the chain decodes
-        for ei in _EI_RE.finditer(content, data_start):
-            data = content[data_start : ei.start()]
-            try:
-                decoded, stopped = _run_filter_chain(
-                    data, filt, params.get("/DecodeParms"), resolve, True
-                )
-            except (ValueError, zlib.error, IndexError):
-                continue
-            if stopped == "/DCTDecode" and not decoded.rstrip().endswith(
-                b"\xff\xd9"
-            ):
-                continue  # an EI inside the JPEG byte stream
-            out.append({"params": params, "data": data})
-            break
+        img = _inline_image_at(content, m.end() - 1, resolve)
+        if img is not None:
+            params, start, end = img
+            out.append({"params": params, "data": content[start:end]})
     return out
 
 
@@ -2550,14 +2560,9 @@ _CTEXT_OPS = frozenset((
     b"BDC", b"BMC", b"EMC",
 )) | _SHOW_LINE_OPS
 
-#: optional whitespace + numeric token in ONE C-level match — the
-#: TJ-array fast path (arrays of kern numbers dominate text-heavy
-#: content streams)
-_WS_NUM_RE = re.compile(rb"[\x00\t\n\x0c\r ]*([+-]?(?:\d+\.\d*|\.\d+|\d+))")
-
-#: optional whitespace + one TJ-array element — kern number, simple
-#: literal string (no escape/nesting), or the closing ``]`` — in ONE
-#: C-level match
+#: optional whitespace + one element of a simple array (kern number,
+#: escape-free literal string, or the closing ``]``): splits an array
+#: token that :func:`_lex_content_fast` has already matched whole
 _WS_ELEM_RE = re.compile(
     rb"[\x00\t\n\x0c\r ]*"
     rb"(?:([+-]?(?:\d+\.\d*|\.\d+|\d+))"
@@ -2565,32 +2570,15 @@ _WS_ELEM_RE = re.compile(
     rb"|(\]))"
 )
 
-#: a WHOLE simple TJ array body — only kern numbers and simple
-#: strings up to the closing ``]`` — validated in ONE C-level match;
-#: elements then lex via ``_WS_ELEM_RE.findall`` (two C scans total
-#: instead of one Python loop iteration per element). The element
-#: loop is POSSESSIVE (``*+``, atomic elements): on a non-simple
-#: array the match must fail in O(n), not backtrack into the 2^k
-#: ways a digit run could split across loop iterations.
-_TJ_ARR_FAST_RE = re.compile(
-    rb"(?:(?>[\x00\t\n\x0c\r ]*"
-    rb"(?:[+-]?(?:\d+\.\d*|\.\d+|\d+)|\([^\\()]*\))))*+"
-    rb"[\x00\t\n\x0c\r ]*\]"
-)
-
 
 def _parse_content_value(data: bytes, pos: int) -> tuple[Any, int]:
-    """One DIRECT object value from a content stream.
+    """One direct object value from a content stream, by plain
+    recursive descent: the reference lexer's operands and everything
+    nested in a dict or an array.
 
     Content streams shall not contain indirect references (ISO
-    32000-1 §7.8.2), so unlike :func:`parse_value` this skips the
-    ``N G R`` lookahead — which costs an extra whitespace skip plus a
-    second number match for EVERY numeric token and dominated
-    TJ-array lexing on real text-heavy documents."""
-    m = _WS_NUM_RE.match(data, pos)
-    if m:
-        tok = m.group(1)
-        return (float(tok) if 0x2E in tok else int(tok)), m.end()
+    32000-1 §7.8.2), so unlike :func:`parse_value` this has no
+    ``N G R`` lookahead: ``5 0 R`` is three tokens."""
     pos = _skip_ws(data, pos)
     c = data[pos]
     if c == 0x3C:  # '<' — dict or hex string
@@ -2610,51 +2598,12 @@ def _parse_content_value(data: bytes, pos: int) -> tuple[Any, int]:
     if c == 0x5B:  # '['
         pos += 1
         arr: list = []
-        m = _TJ_ARR_FAST_RE.match(data, pos)
-        if m is not None:
-            # the whole array is numbers/simple strings: lex every
-            # element with one findall over the validated span. A
-            # number match always captures >= 1 byte, so an empty
-            # first group means a string element (possibly b"") or
-            # the closing bracket.
-            end = m.end()
-            append = arr.append
-            for tok, s, br in _WS_ELEM_RE.findall(data, pos, end):
-                if tok:
-                    append(float(tok) if 0x2E in tok else int(tok))
-                elif not br:
-                    append(s)
-            return arr, end
-        elem_match = _WS_ELEM_RE.match
-        append = arr.append
         while True:
-            # TJ arrays are (string) kern (string) kern ... ]: lex
-            # all three hot element kinds in ONE C-level match,
-            # skipping the recursive call (and its duplicate
-            # whitespace skip) per element
-            m = elem_match(data, pos)
-            if m is None:
-                # comment / escaped or nested string / hex string /
-                # anything else: the exact slow path
-                pos = _skip_ws(data, pos)
-                ch = data[pos]
-                if ch == 0x5D:
-                    return arr, pos + 1
-                if ch == 0x28:
-                    v, pos = _parse_literal_string(data, pos)
-                else:
-                    v, pos = _parse_content_value(data, pos)
-                append(v)
-                continue
-            pos = m.end()
-            gi = m.lastindex
-            if gi == 1:  # kern number
-                tok = m.group(1)
-                append(float(tok) if 0x2E in tok else int(tok))
-            elif gi == 2:  # simple (no escape, no nesting) string
-                append(m.group(2))
-            else:  # ']'
-                return arr, pos
+            pos = _skip_ws(data, pos)
+            if data[pos] == 0x5D:
+                return arr, pos + 1
+            v, pos = _parse_content_value(data, pos)
+            arr.append(v)
     if c == 0x2F:
         return _parse_name(data, pos)
     if data.startswith(b"true", pos):
@@ -2664,49 +2613,19 @@ def _parse_content_value(data: bytes, pos: int) -> tuple[Any, int]:
     if data.startswith(b"null", pos):
         return None, pos + 4
     m = _NUM_RE.match(data, pos)
-    if m:  # number behind a '%' comment: the fused fast path above
-        tok = m.group()  # stops at the comment, _skip_ws consumed it
+    if m:
+        tok = m.group()
         return (float(tok) if 0x2E in tok else int(tok)), m.end()
     raise ValueError(
         f"cannot parse content value at byte {pos}: {data[pos:pos+20]!r}"
     )
 
 
-#: fused whitespace/comment skip + one token, in ONE C-level match:
-#: group 1 = number, group 2 = name body (after '/'), group 3 =
-#: operator (name-body run whose first byte cannot start a number).
-#: Strings, dicts, arrays and oddball tokens fall back to the
-#: byte-dispatch path below.
-_CTOK_RE = re.compile(
-    # POSSESSIVE skip: comments must be consumed atomically. A
-    # backtrackable skip re-lexed the tail of a comment as a phantom
-    # operator token whenever the next real token started with a
-    # delimiter this pattern has no alternative for ('(', '<', '[')
-    # or the stream ended — clearing accumulated operands as a side
-    # effect. With the possessive skip those cases fail the match and
-    # take the byte-dispatch fallback below, which handles them
-    # properly.
-    rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*+"
-    rb"(?:([+-]?(?:\d+\.\d*|\.\d+|\d+))"
-    # group 2: the REST of a ws-separated number run ("0 0 1 50 700"
-    # before Tm/cm/Td) — fused into the same C-level match, split out
-    # by findall only when non-empty. Atomic+possessive so a failed
-    # continuation can never re-split digits across iterations.
-    rb"((?:(?>[\x00\t\n\x0c\r ]+[+-]?(?:\d+\.\d*|\.\d+|\d+)))*+)"
-    rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%0-9+.\-]"
-    rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*))"
-)
-
-#: bare numeric tokens inside an already-validated number run
-_NUM_FINDALL_RE = re.compile(rb"[+-]?(?:\d+\.\d*|\.\d+|\d+)")
-
-
 #: ONE total tokenizer for content streams: every byte of a clean
 #: stream is consumed by exactly one alternative, so ``findall`` is a
 #: contiguous tokenization (group 10 catches any byte no other
-#: alternative starts, which flags the stream for the exact
-#: match-loop lexer). An operand — a number run, a simple array or a
+#: alternative starts, which flags the stream for the reference
+#: lexer). An operand — a number run, a simple array or a
 #: literal string — captures the operator right after it (group 6),
 #: so ``x y Td``, ``(...) Tj``, ``[...] TJ`` and ``12 Tf`` each cost
 #: one tuple. Ordered by corpus frequency after the first-char
@@ -2717,12 +2636,12 @@ _CONTENT_TOKENS_RE = re.compile(
     # comments are skippable: a comment running to EOF would strand
     # the skip at end-of-input with no token to anchor on, so its '%'
     # is left for the catch-all group instead — flagging the stream
-    # for the exact match-loop lexer, which ends it cleanly. The
+    # for the reference lexer, which ends it cleanly. The
     # caller rstrips trailing PDF whitespace for the same reason.
     rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*(?=[\r\n]))*+"
     rb"(?:(?:([+-]?(?:\d+\.\d*|\.\d+|\d+))"  # 1 number
     # 2 the run's second number ("0 -14" before Td) and 3 the REST of
-    #   the run ("0 0 1 50 700" before Tm), split by _NUM_FINDALL_RE;
+    #   the run ("0 0 1 50 700" before Tm), split by _NUM_RE.findall;
     #   possessive and atomic so a run can never re-split digits
     #   across iterations
     rb"(?:[\x00\t\n\x0c\r ]*([+-]?(?:\d+\.\d*|\.\d+|\d+)))?+"
@@ -2744,7 +2663,7 @@ _CONTENT_TOKENS_RE = re.compile(
     rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*))?"
     rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # 7 name body
     # 8 container delimiters and hex strings (hex digits + PDF ws
-    #   only — anything else must take the exact path to reproduce
+    #   only — anything else must take the reference to reproduce
     #   its error behavior)
     rb"|(<<|>>|\[|\]|<[0-9A-Fa-f\x00\t\n\x0c\r ]*>)"
     # 9 operator / keyword
@@ -2759,21 +2678,23 @@ def _lex_content_fast(
 ) -> list | None:
     """Tokenize a clean content stream in two C passes (one findall,
     one branch-dispatch loop) into the ``[(operator, operands), ...]``
-    list the generator yields. Returns ``None`` whenever ANYTHING
-    falls outside the clean-token grammar — ``BI`` inline images,
-    ``#``-escaped or empty names, nested-paren strings, stray bytes,
-    malformed containers — so the exact match-loop lexer reproduces
-    the historical behavior (including its exceptions) byte for
-    byte."""
+    list the reference yields — the only optimized content lexer.
+    Returns ``None`` whenever ANYTHING falls outside the clean-token
+    grammar — ``BI`` inline images, ``#``-escaped or empty names,
+    nested-paren strings, stray bytes, malformed containers — so the
+    reference :func:`_iter_content_ops_matchloop` reproduces the
+    contract (including its exceptions) byte for byte. Every page of
+    the benchmark corpora lexes here; the reference's docstring
+    gives the counts."""
     ops: list = []
     stack: list = []
     cstack: list = []  # enclosing (container, kind) frames
     cur = stack
     ckind = -1  # -1 top level, 0 list, 1 dict item list
-    num_findall = _NUM_FINDALL_RE.findall
+    num_findall = _NUM_RE.findall
     # trailing PDF whitespace would strand the skip at EOF with no
     # token to anchor on (see the pattern comment); stripping it is
-    # behavior-neutral — the match loop ends cleanly on a whitespace
+    # behavior-neutral — the reference ends cleanly on a whitespace
     # tail without yielding
     for num, num2, rest, arr, lit, op, name, delim, bare, _ in \
             _CONTENT_TOKENS_RE.findall(
@@ -2806,7 +2727,7 @@ def _lex_content_fast(
                     sapp(s)
             cur.append(sub)
         elif name:
-            if 0x23 in name:  # '#xx' escape: exact decode path
+            if 0x23 in name:  # '#xx' escape: reference decode
                 return None
             cur.append("/" + name.decode("latin-1"))
             continue
@@ -2824,7 +2745,7 @@ def _lex_content_fast(
                     cur.append(closed)
                 elif ckind == 1:
                     return None
-                # stray ']' at top level: skipped, as the exact
+                # stray ']' at top level: skipped, as the reference
                 # lexer's stray-delimiter branch does
             elif delim == b"<<":
                 cstack.append((cur, ckind))
@@ -2883,13 +2804,13 @@ def _iter_content_ops(content: bytes, wanted: frozenset | None = None):
     """Lex a content stream into an iterable of ``(operator,
     operands)`` pairs — the shared front end of :func:`content_text`
     (stream order) and :func:`content_text_layout` (reading order).
-    Every stream, whatever its size, first tries
-    :func:`_lex_content_fast`; anything unusual delegates to
-    the exact match-loop lexer below, whose behavior (down to its
+    Every stream first tries :func:`_lex_content_fast`, the one
+    optimized lexer; a stream it rejects goes to the reference
+    :func:`_iter_content_ops_matchloop`, whose behavior (down to its
     exceptions on malformed input) is the contract.
 
     A yielded operand list is only valid until the next iteration:
-    the match loop reuses one list and clears it after each yield.
+    the reference reuses one list and clears it after each yield.
     Copy it (``list(operands)``) to keep it."""
     ops = _lex_content_fast(content, wanted)
     if ops is None:
@@ -2900,71 +2821,57 @@ def _iter_content_ops(content: bytes, wanted: frozenset | None = None):
 def _iter_content_ops_matchloop(
     content: bytes, wanted: frozenset | None = None
 ):
-    """The exact (historical) lexer: one match per token. Inline
-    images (``BI``..``EI``) are skipped without lexing their binary
-    data. ``wanted`` filters the yields to that operator set
-    (operands of skipped ops are still lexed and cleared, exactly as
-    if the consumer had ignored the yield) — path/color ops never pay
-    the generator round-trip."""
+    """The reference lexer: a plain byte-dispatch loop over the
+    single-token parsers. After a whitespace/comment skip, a token's
+    first byte picks its parser: ``/ ( < [`` an operand value, then a
+    number, then an operator or a skipped stray delimiter. Inline
+    images (``BI``..``EI``) are skipped without lexing their data.
+    ``wanted`` filters the yields to that operator set (operands of
+    skipped ops are still lexed and cleared).
+
+    Only streams :func:`_lex_content_fast` rejects come here, and no
+    measured workload has one: 0 of the 1,800 generated pages of the
+    ``extract_text`` corpora (seeds 1 and 7), of the 53 pages of its
+    two real PDFs and of the 72 ``extract_scanned`` pages (seeds 1
+    and 7). So it is written for clarity: forced through it, the
+    seed-1 pages lex at about half the fast path's speed."""
     pos, n = 0, len(content)
     stack: list[Any] = []
     append = stack.append
-    match_tok = _CTOK_RE.match
-    while pos < n:
-        m = match_tok(content, pos)
-        if m is not None:
-            pos = m.end()
-            # one C call for all four groups beats lastindex + a
-            # second group() lookup on every token
-            tok, rest, body, op = m.group(1, 2, 3, 4)
-            if tok is not None:  # number (possibly a fused run)
-                append(float(tok) if 0x2E in tok else int(tok))
-                if rest:
-                    for tok in _NUM_FINDALL_RE.findall(rest):
-                        append(float(tok) if 0x2E in tok else int(tok))
-                continue
-            if op is None:  # name
-                if 0x23 in body:  # '#xx' escape: exact decode
-                    v, pos = _parse_name(content, m.start(3) - 1)
-                    append(v)
-                else:
-                    append("/" + body.decode("latin-1"))
-                continue
-            if op == b"BI":
-                # inline image: skip to EI to avoid lexing binary data
-                e = content.find(b"EI", pos)
-                pos = n if e == -1 else e + 2
-                stack.clear()
-                continue
-            if wanted is None or op in wanted:
-                yield op, stack
-            stack.clear()
-            continue
+    while True:
         pos = _skip_ws(content, pos)
         if pos >= n:
-            break
+            return
         c = content[pos]
-        if c == 0x28:
-            s, pos = _parse_literal_string(content, pos)
-            append(s)
-        elif c == 0x3C and content[pos + 1 : pos + 2] != b"<":
-            s, pos = _parse_hex_string(content, pos)
-            append(s)
-        elif c == 0x3C:  # inline dict (marked content / inline image)
+        if c in b"/(<[":  # name, string, dict or array operand
             v, pos = _parse_content_value(content, pos)
             append(v)
-        elif c == 0x5B:
-            v, pos = _parse_content_value(content, pos)
-            append(v)
-        else:  # oddball token ('+'/'-'/'.' runs) or stray delimiter
-            op = _NAME_BODY.match(content, pos).group()
-            if not op:  # stray delimiter; skip it
-                pos += 1
-                continue
-            pos += len(op)
-            if wanted is None or op in wanted:
-                yield op, stack
+            continue
+        m = _NUM_RE.match(content, pos)
+        if m is not None:
+            tok = m.group()
+            append(float(tok) if 0x2E in tok else int(tok))
+            pos = m.end()
+            continue
+        op = _NAME_BODY.match(content, pos).group()
+        if not op:  # stray delimiter; skip it
+            pos += 1
+            continue
+        pos += len(op)
+        if op == b"BI":
+            # inline image: its data ends where inline_images measures
+            # it when EI follows that extent; where no image parses or
+            # its dict misstates the data's size, at the first EI
+            img = _inline_image_at(content, pos)
+            e = n if img is None else _skip_ws(content, img[2])
+            if not content.startswith(b"EI", e):
+                e = content.find(b"EI", pos)
+            pos = n if e == -1 else e + 2
             stack.clear()
+            continue
+        if wanted is None or op in wanted:
+            yield op, stack
+        stack.clear()
 
 
 def _decode_byte_map(raw: bytes, table: str | dict) -> str:
@@ -3416,7 +3323,7 @@ def _text_runs(
                                 ) * tfs
                                 + tc + (tw if code == 32 else 0.0)
                             ) * tz / 100.0
-                    elif vertical:
+                    else:  # vertical
                         # WMode 1 (ISO 32000-1 §9.7.4.3): glyphs advance
                         # DOWN the column by the default vertical
                         # displacement — /DW2's w1y default −1000/1000 =
@@ -3425,14 +3332,6 @@ def _text_runs(
                         # only, Tw applies to 1-byte code 32 only (these
                         # codes are 2-byte), Tc applies per glyph
                         adv += (1.0 * tfs + tc) * len(s)
-                    else:  # advance_em(s), inlined for the hot path
-                        nch = len(s)
-                        adv += (
-                            (_EST_CHAR_EM * tfs * nch + tc * nch
-                             + tw * s.count(" "))
-                            * tz
-                            / 100.0
-                        )
                 elif isinstance(el, (int, float)):
                     delta = -el / 1000.0 * tfs
                     adv += delta if vertical else delta * tz / 100.0

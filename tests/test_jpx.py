@@ -17,6 +17,7 @@ from pdf2dataset_spark.sources.jpx import (
     _dwt53_forward_1d,
     _dwt53_inverse_1d,
     decode_codeblock,
+    decode_codestream,
     decode_jpx,
     decode_jpx_gray,
     dwt53_forward_2d,
@@ -260,6 +261,27 @@ class TestCodestream:
         good[20] ^= 0xFF  # corrupt the SIZ
         with pytest.raises(JPXError):
             decode_jpx(bytes(good))
+
+    def test_truncated_main_header_and_sot_raise_jpx_error(self):
+        # a stream cut anywhere in its main header or first SOT
+        # segment is malformed: JPXError, never struct.error or
+        # IndexError from a field read past the end
+        import struct
+
+        rgb = bytes((x * 7 + y * 3 + c * 50) & 0xFF
+                    for y in range(12) for x in range(16) for c in range(3))
+        for data in (
+            encode_jpx(16, 12, bytes(range(192)), 1, levels=2),
+            encode_jpx(16, 12, rgb, 3, levels=2, mct=False, coc={1: 1},
+                       sop=True, eph=True, precincts=((15, 15),) * 3),
+            encode_jpx(16, 12, bytes(range(192)), 1, levels=1,
+                       irreversible=True, tile_size=(8, 8)),
+        ):
+            sot = data.index(b"\xff\x90")
+            sot_end = sot + 2 + struct.unpack_from(">H", data, sot + 2)[0]
+            for cut in range(sot_end + 1):
+                with pytest.raises(JPXError):
+                    decode_codestream(data[:cut])
 
     def test_undefined_cbstyle_bits_rejected(self):
         # every DEFINED code-block style bit decodes since round 5;

@@ -572,6 +572,24 @@ def test_tiff_predictor_roundtrip():
     assert out == raw
 
 
+def test_png_predictor_allocates_for_the_data_not_for_columns():
+    """A /Columns far past the data (a 2-byte Up row here) sizes no
+    buffer by /Columns: the decoded row is the data's one byte."""
+    import tracemalloc
+
+    tracemalloc.start()
+    try:
+        out = minipdf._apply_predictor(
+            b"\x02\x07", {"/Predictor": 12, "/Columns": 10_000_000},
+            lambda v: v,
+        )
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert out == b"\x07"
+    assert peak < 1_000_000
+
+
 def test_objstm_with_png_predictor_decodes():
     """An /ObjStm whose Flate payload is additionally /Predictor-12
     coded (PNG Up) — the layout a PDF 1.5 writer using predictors
@@ -1217,6 +1235,63 @@ def test_inline_image_with_planted_ei_inside_payload():
     pdf = _minimal_pdf_with_content(content)
     (page,) = minipdf.extract_page_images(pdf)
     assert page[0]["data"] == px
+
+
+def test_inline_image_data_holding_ei_keeps_the_text_layer():
+    """The lexer ends an inline image where inline_images does: its
+    unfiltered data here holds the bytes ``EI(``, and skipping to that
+    first ``EI`` lexed the image's tail as an unterminated string and
+    lost the page's whole text layer."""
+    content = (
+        b"q 8 0 0 1 0 0 cm BI /W 8 /H 1 /BPC 8 /CS /G ID "
+        b"\x10EI(\x20\x30\x40\x50 EI Q "
+        b"BT /F1 12 Tf 72 700 Td (after image) Tj ET"
+    )
+    assert minipdf.inline_images(content)[0]["data"] == (
+        b"\x10EI(\x20\x30\x40\x50"
+    )
+    assert minipdf.content_text(content) == "after image"
+    assert minipdf.content_text_layout(content) == "after image"
+
+
+@pytest.mark.parametrize(
+    "image",
+    [
+        # LZW whose first code is past the table
+        b"BI /W 1 /H 1 /F /LZW ID \xff\xff EI",
+        # a number where the /DecodeParms dict belongs
+        b"BI /W 1 /H 1 /F /LZW /DP 5 ID \x80\x0b\x60\x50\x22\x0c\x0c\x85\x01 EI",
+        b"BI /W 1 /H 1 /F /Fl /DP 5 ID " + zlib.compress(b"\x00") + b" EI",
+        b"BI /W 1 /H 1 /F /LZW /DP << /EarlyChange [1] >> ID \x80\x0b EI",
+        # dimensions that overstate the data: past the stream's end,
+        # and past the real EI into a later image
+        b"BI /W 1000 /H 1000 ID \x00 EI",
+        b"BI /W 20 /H 1 ID \x00 EI",
+    ],
+    ids=["lzw-bad-code", "lzw-dp-number", "flate-dp-number",
+         "early-change-array", "dims-past-end", "dims-past-ei"],
+)
+def test_inline_image_that_does_not_measure_keeps_the_text_layer(image):
+    """Where an inline image's filters fail on its own dict or its
+    dimensions overstate its data, the lexer skips to the first EI."""
+    content = image + b" BT (x) Tj ET BI /W 1 /H 1 ID \x00 EI"
+    assert minipdf.content_text(content) == "x"
+    assert minipdf.content_text_layout(content) == "x"
+    minipdf.inline_images(content)  # measures or leaves out; no raise
+
+
+def test_inline_image_filter_runs_are_bounded_per_bi(monkeypatch):
+    """Filtered BI..EI fragments that never decode: each BI tries a
+    few EI candidates, not every later EI of the stream."""
+    calls = []
+    real = minipdf._run_filter_chain
+    monkeypatch.setattr(
+        minipdf, "_run_filter_chain",
+        lambda *a: calls.append(1) or real(*a),
+    )
+    content = b"BI /F /Fl ID x EI " * 200 + b"BT (x) Tj ET"
+    assert minipdf.content_text(content) == "x"
+    assert len(calls) <= 200 * minipdf._EI_CANDIDATES
 
 
 def test_inline_images_mixed_with_xobjects():

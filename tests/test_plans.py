@@ -668,3 +668,22 @@ def test_boilerplate_removal_plan_shape(spark, registry):
     # the 1-row total joins broadcast-side (BroadcastNestedLoopJoin
     # over a single-row aggregate is the lazy-scalar idiom)
     assert "Broadcast" in fplan
+
+
+# --------------------------------------------- bounded ORDER BY helper
+class TestOrderedSmall:
+    def test_total_order_and_single_partition_plan(self, spark):
+        from pyspark.sql import functions as F
+
+        from pdf2dataset_spark.queries._util import ordered_small
+
+        df = spark.range(0, 1000).select(
+            (F.col("id") % 7).alias("k"), F.col("id").alias("v")
+        )
+        agg = df.groupBy("k").agg(F.sum("v").alias("s"))
+        want = [r.asDict() for r in agg.orderBy("k").collect()]
+        got_df = ordered_small(agg, "k")
+        assert [r.asDict() for r in got_df.collect()] == want
+        plan = got_df._jdf.queryExecution().executedPlan().toString()
+        assert "SinglePartition" in plan
+        assert "rangepartitioning" not in plan

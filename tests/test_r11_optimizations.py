@@ -1,11 +1,10 @@
 """Focused tests for the round-11 optimization internals.
 
 Each optimization that changed an operator's internals gets a direct
-assertion here: the minipdf lexer fast paths (bulk literal-string
+assertion here: the minipdf single-token parsers (bulk literal-string
 copy, one-slice names, regex whitespace, the direct-object content
-parser), the per-document font decode-map cache, the Arrow-shipped
-bytes-partitioned in-memory manifest, and the bounded-keyspace
-single-partition ORDER BY helper.
+parser), the per-document font decode-map cache, the JPEG entropy
+bit reader and the lazy object-stream members.
 """
 
 from __future__ import annotations
@@ -72,8 +71,8 @@ class TestLexerFastPaths:
             assert got == want, data
 
     def test_content_value_numbers_behind_comments(self):
-        # the fused ws+number fast path stops at '%'; the fallback
-        # must still lex the number after the comment
+        # a '%' comment before a number, at the top or between array
+        # elements, is whitespace to the content parser
         for data in (b"% note\n 42 ", b"[% c\n1 2]", b"[1 % mid\n2]"):
             assert _parse_content_value(data, 0) == parse_value(data, 0)
 
@@ -88,9 +87,10 @@ class TestLexerFastPaths:
 
 
 class TestFusedLexerPaths:
-    """The session-3 single-match fast paths (object arrays, dict
-    keys, content tokens, simple literal strings) must keep the exact
-    semantics of the recursive paths they bypass."""
+    """The single-match paths of the object parser (object arrays,
+    dict keys, simple literal strings) keep the exact semantics of
+    the recursive paths they bypass; content-stream tokens lex as the
+    reference byte-dispatch lexer defines them."""
 
     def test_object_array_refs_and_numbers(self):
         Ref = minipdf.Ref
@@ -336,25 +336,6 @@ class TestJpegBitReader:
         assert br.read_bits(8) == 0xCD
 
 
-# --------------------------------------------- bounded ORDER BY helper
-class TestOrderedSmall:
-    def test_total_order_and_single_partition_plan(self, spark):
-        from pyspark.sql import functions as F
-
-        from pdf2dataset_spark.queries._util import ordered_small
-
-        df = spark.range(0, 1000).select(
-            (F.col("id") % 7).alias("k"), F.col("id").alias("v")
-        )
-        agg = df.groupBy("k").agg(F.sum("v").alias("s"))
-        want = [r.asDict() for r in agg.orderBy("k").collect()]
-        got_df = ordered_small(agg, "k")
-        assert [r.asDict() for r in got_df.collect()] == want
-        plan = got_df._jdf.queryExecution().executedPlan().toString()
-        assert "SinglePartition" in plan
-        assert "rangepartitioning" not in plan
-
-
 # ---------------------------------------------- lazy ObjStm members
 class TestLazyObjStm:
     """ObjStm members parse on first resolve(), not at open — members
@@ -450,58 +431,3 @@ class TestLazyObjStm:
         assert cat.get("/Type") == "/Catalog"
         # members after the catalog in header order stayed unparsed
         assert doc._lazy[8][2] is minipdf._UNSET
-
-
-class TestCcittLutReader:
-    """The 13-bit run LUT + 7-bit mode LUT must reproduce the per-bit
-    reference walk exactly — decoded elements AND error outcomes on
-    truncated/corrupted streams."""
-
-    def test_roundtrip_and_truncation_outcomes(self):
-        import random
-
-        from pdf2dataset_spark.sources import ccitt
-
-        rng = random.Random(99)
-        for trial in range(12):
-            w = rng.choice([17, 64, 203])
-            h = rng.randint(2, 12)
-            px = bytes(
-                0 if rng.getrandbits(2) == 0 else 255
-                for _ in range(w * h)
-            )
-            data = ccitt.encode_g4(px, w, h)
-            out = ccitt.decode_g4(data, w, h)
-            back = ccitt._transitions_to_gray(out, w)
-            assert bytes(back) == bytes(
-                0 if v < 128 else 255 for v in px
-            )
-            # truncations must raise (rows=N contract), never return
-            for cut in (len(data) - 1, len(data) // 2, 3):
-                try:
-                    ccitt.decode_g4(data[:max(0, cut)], w, h)
-                except ValueError:
-                    pass
-                else:  # a shorter prefix CAN still hold all rows
-                    assert cut >= len(data) - 1
-
-    def test_mode_lut_covers_all_t6_codes(self):
-        from pdf2dataset_spark.sources.ccitt import _MODE_LUT
-
-        # exactly the two '000000x' slots are unassigned
-        missing = [i for i, v in enumerate(_MODE_LUT) if v is None]
-        assert missing == [0, 1]
-
-    def test_run_luts_match_tables(self):
-        from pdf2dataset_spark.sources.ccitt import (
-            _BLACK_DEC,
-            _BLACK_LUT,
-            _WHITE_DEC,
-            _WHITE_LUT,
-        )
-
-        for dec, lut in ((_WHITE_DEC, _WHITE_LUT),
-                         (_BLACK_DEC, _BLACK_LUT)):
-            for (ln, code), run in dec.items():
-                # the aligned peek value resolves to (run, ln)
-                assert lut[code << (13 - ln)] == (run, ln)

@@ -3721,3 +3721,58 @@ class TestPatternInPattern:
             + b" >>\nstream\n" + cell_self + b"\nendstream")
         g2 = self._render([selfpat], self.CONTENT)
         assert g2 is None or g2(105, 115) == 255
+
+
+class TestCcittLutReader:
+    """The 13-bit run LUT + 7-bit mode LUT must reproduce the per-bit
+    reference walk exactly — decoded elements AND error outcomes on
+    truncated/corrupted streams."""
+
+    def test_roundtrip_and_truncation_outcomes(self):
+        import random
+
+        from pdf2dataset_spark.sources import ccitt
+
+        rng = random.Random(99)
+        for trial in range(12):
+            w = rng.choice([17, 64, 203])
+            h = rng.randint(2, 12)
+            px = bytes(
+                0 if rng.getrandbits(2) == 0 else 255
+                for _ in range(w * h)
+            )
+            data = ccitt.encode_g4(px, w, h)
+            out = ccitt.decode_g4(data, w, h)
+            back = ccitt._transitions_to_gray(out, w)
+            assert bytes(back) == bytes(
+                0 if v < 128 else 255 for v in px
+            )
+            # truncations must raise (rows=N contract), never return
+            for cut in (len(data) - 1, len(data) // 2, 3):
+                try:
+                    ccitt.decode_g4(data[:max(0, cut)], w, h)
+                except ValueError:
+                    pass
+                else:  # a shorter prefix CAN still hold all rows
+                    assert cut >= len(data) - 1
+
+    def test_mode_lut_covers_all_t6_codes(self):
+        from pdf2dataset_spark.sources.ccitt import _MODE_LUT
+
+        # exactly the two '000000x' slots are unassigned
+        missing = [i for i, v in enumerate(_MODE_LUT) if v is None]
+        assert missing == [0, 1]
+
+    def test_run_luts_match_tables(self):
+        from pdf2dataset_spark.sources.ccitt import (
+            _BLACK_DEC,
+            _BLACK_LUT,
+            _WHITE_DEC,
+            _WHITE_LUT,
+        )
+
+        for dec, lut in ((_WHITE_DEC, _WHITE_LUT),
+                         (_BLACK_DEC, _BLACK_LUT)):
+            for (ln, code), run in dec.items():
+                # the aligned peek value resolves to (run, ln)
+                assert lut[code << (13 - ln)] == (run, ln)
